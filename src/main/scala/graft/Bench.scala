@@ -12,6 +12,30 @@ import org.apache.spark.sql.functions.{avg, col, count, lit, row_number, sum}
   * to one-off GC/scheduler noise in either pass.
   */
 object Bench {
+  /** `%.3f` under `Locale.ROOT`: a comma-decimal default locale (de_DE)
+    * must not turn a JSON number into two. */
+  private def f3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
+
+  /** The canary fragment of the main JSON line. */
+  private[graft] def canaryFragment(probes: Int, startSec: Double, endSec: Double): String =
+    s""","canary":{"probes":$probes,"start_sec":${f3(startSec)},"end_sec":${f3(endSec)},"drift":${f3(endSec / startSec)}}"""
+
+  // Canary-normalized totals (r19; VERDICT r18 items 2+5). The raw totals
+  // ride whatever the host is doing (the r16→r18 hash series moved ±20%
+  // on identical binaries, each time settled as drift by canaries and
+  // same-binary A/Bs) — so the artifact also carries
+  //   total × (CanaryRefSec / canary_mean)
+  // a number in "reference-host seconds": cross-round comparable by
+  // construction as long as the probe set and CanaryRefSec stay fixed.
+  // CanaryRefSec = 1.0 is an arbitrary unit anchor (≈ the sf0.1 probe
+  // set's cost on the r18-era host), not a measurement; only its
+  // CONSTANCY matters.
+  private val CanaryRefSec = 1.0
+
+  /** A canary-normalized total fragment, `"field":<t in reference seconds>`. */
+  private[graft] def normFragment(field: String, t: Double, canaryMean: Double): String =
+    s""","$field":${f3(t * CanaryRefSec / canaryMean)}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -239,30 +263,19 @@ object Bench {
       try canaryStart.map(_ => canaryTime())
       catch { case e: Throwable => noteCanary(e); None }
     val canaryJson = (canaryStart, canaryEnd) match {
-      case (Some(a), Some(b)) if a > 0 =>
-        f""","canary":{"probes":${canaryProbes.size},"start_sec":$a%.3f,"end_sec":$b%.3f,"drift":${b / a}%.3f}"""
+      case (Some(a), Some(b)) if a > 0 => canaryFragment(canaryProbes.size, a, b)
       case _ =>
         s""","canary":{"probes":${canaryProbes.size},"error":${jq(canaryError.getOrElse("unknown"))}}"""
     }
-    // Canary-normalized totals (r19; VERDICT r18 items 2+5). The raw totals
-    // ride whatever the host is doing (the r16→r18 hash series moved ±20%
-    // on identical binaries, each time settled as drift by canaries and
-    // same-binary A/Bs) — so the artifact also carries
-    //   total × (CanaryRefSec / canary_mean)
-    // a number in "reference-host seconds": cross-round comparable by
-    // construction as long as the probe set and CanaryRefSec stay fixed.
-    // CanaryRefSec = 1.0 is an arbitrary unit anchor (≈ the sf0.1 probe
-    // set's cost on the r18-era host), not a measurement; only its
-    // CONSTANCY matters. Normalization uses the mean of the start/end
-    // probes — the best single host-speed estimate for the run — and is
-    // omitted (not faked) when the canary itself failed.
+    // Normalization uses the mean of the start/end probes — the best
+    // single host-speed estimate for the run — and is omitted (not faked)
+    // when the canary itself failed.
     val canaryMean = (canaryStart, canaryEnd) match {
       case (Some(a), Some(b)) if a > 0 && b > 0 => Some((a + b) / 2)
       case _ => None
     }
-    val CanaryRefSec = 1.0
-    def normJson(field: String, t: Double): String = canaryMean
-      .map(m => f""","$field":${t * CanaryRefSec / m}%.3f""").getOrElse("")
+    def normJson(field: String, t: Double): String =
+      canaryMean.map(normFragment(field, t, _)).getOrElse("")
     // the scaling contract, made legible (VERDICT r18 item 2): the driver's
     // low-core rerun compares per-query times across SPARK_GRAFT_CPUS
     // values, and r18's artifact carried no proof of which core count

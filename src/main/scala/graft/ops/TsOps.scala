@@ -170,19 +170,21 @@ object TsOps {
         var started = false
         val ringTs = new Array[java.lang.Long](cap)
         val ringV = new Array[java.lang.Double](cap)
-        var n = 0 // rows of the current series seen so far
+        // rows of the current series seen so far: Long, so one giant
+        // series cannot wrap the count and index the ring negatively
+        var n = 0L
         it.flatMap { case (u, ts, v) =>
           if (!started || !java.util.Objects.equals(u, uid)) {
-            uid = u; n = 0; started = true
+            uid = u; n = 0L; started = true
           }
-          val lo = math.max(0, n - cap)
+          val lo = math.max(0L, n - cap)
           val out =
             new scala.collection.mutable.ArrayBuffer[(java.lang.Long, java.lang.Long)](
-              n - lo)
+              (n - lo).toInt)
           var j = lo
           while (j < n) {
-            val bTs = ringTs(j % cap)
-            val bV = ringV(j % cap)
+            val bTs = ringTs((j % cap).toInt)
+            val bV = ringV((j % cap).toInt)
             if (bTs != null && ts != null && bTs.longValue < ts.longValue) {
               val sm: java.lang.Long =
                 if (bV == null || v == null) null
@@ -194,8 +196,8 @@ object TsOps {
             }
             j += 1
           }
-          ringTs(n % cap) = ts
-          ringV(n % cap) = v
+          ringTs((n % cap).toInt) = ts
+          ringV((n % cap).toInt) = v
           n += 1
           out
         }

@@ -325,7 +325,13 @@ object Layout {
     val hadLive = fs.exists(path)
     val merged =
       if (hadLive) {
-        val live = spark.read.parquet(path.toString)
+        // schema from one footer, not an inference job per merged date
+        val footers = graft.streaming.Streams.Footers
+        val first = footers.files(fs, path).headOption.getOrElse(
+          throw new IllegalStateException(s"upsert: no parquet file under $path"))
+        val live = spark.read
+          .schema(footers.schema(spark, footers.read(spark, first)))
+          .parquet(path.toString)
         live
           .join(
             broadcast(updates.select(col(seriesCol), col(tsCol))),

@@ -933,6 +933,126 @@ class StreamingSpec extends SparkSpec {
       "direct tier must land null-ts rows identically")
   }
 
+  /** Spark jobs launched while `body` runs (listener bus drained on both
+    * sides, so no earlier or later job is counted). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Footers of the pending delta files of a delta-tier store. */
+  private def pendingFooters(out: String) = {
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new java.io.File(s"$out/_delta").list().filter(_.startsWith("batch=")).toSeq
+      .flatMap(b => Streams.Footers.files(fs, new org.apache.hadoop.fs.Path(s"$out/_delta/$b")))
+      .map(Streams.Footers.read(spark, _))
+  }
+
+  test("upsertRead builds its DataFrame with zero Spark jobs: deltas only, compacted + pending, compacted only") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_upjobs").toString
+    def t(s: String, v: Double, id: String) = Tele("S", ts(s), v, None, id)
+    val base = Seq(
+      t("2024-08-28 10:00:00", 1.0, "id-a"),
+      t("2024-08-29 10:00:00", 2.0, "id-a"),
+      t("2024-08-30 10:00:00", 3.0, "id-b"),
+      t("2024-08-31 10:00:00", 4.0, "id-b"))
+    def build(state: String) = {
+      val (view, jobs) = jobsDuring(Streams.upsertRead(spark, out))
+      assert(jobs === 0, s"$state: building the view launched $jobs Spark job(s)")
+      view
+    }
+    Streams.upsertDeltaBatch(base.toDF(), out, batchId = 0, compactEvery = 99)
+    val deltasOnly = build("deltas only")
+    // the footer-derived schema is the schema inference gave (less the
+    // `batch` partition column, which the view drops)
+    assert(deltasOnly.schema === spark.read.parquet(s"$out/_delta").drop("batch").schema)
+    assert(deltasOnly.count() === 4)
+    Streams.compactUpsertDeltas(spark, out)
+    val compacted = build("compacted only")
+    assert(compacted.schema === spark.read.parquet(out).schema)
+    // one touched date of four: the date-split plan
+    Streams.upsertDeltaBatch(
+      Seq(t("2024-08-30 10:00:00", 30.0, "id-b")).toDF(), out, batchId = 1, compactEvery = 99)
+    val merged = build("compacted + pending")
+    assert(merged.schema === compacted.schema)
+    assert(merged.filter(col("timeseries_id") === "id-b")
+      .select("value").as[Double].collect().sorted.toSeq === Seq(4.0, 30.0))
+  }
+
+  test("upsertRead: footer date ranges — non-adjacent dates, a stats-less delta, an all-null-ts delta — resolve like eager upsertBatch") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_upranges").toString
+    val direct = java.nio.file.Files.createTempDirectory("graft_upranges_direct").toString
+    def t(s: String, v: Double, id: String) =
+      Tele("S", if (s == null) null else ts(s), v, None, id)
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select("timeseries_id", "timestamp", "value")
+      .collect()
+      .map(r => s"${r.getString(0)}|${r.getTimestamp(1)}|${r.getDouble(2)}")
+      .sorted
+      .toSeq
+    var batchId = 0L
+    /** land `b` in both tiers; the merge-on-read view must equal the
+      * direct tier's eager merge, then the delta folds */
+    def landAndCompare(b: Seq[Tele], what: String)(premise: => Unit): Unit = {
+      Streams.upsertDeltaBatch(b.toDF(), out, batchId, compactEvery = 99)
+      Streams.upsertBatch(b.toDF(), direct)
+      batchId += 1
+      premise
+      assert(snap(Streams.upsertRead(spark, out)) === snap(spark.read.parquet(direct)), what)
+      Streams.compactUpsertDeltas(spark, out)
+      assert(snap(spark.read.parquet(out)) === snap(spark.read.parquet(direct)), s"$what, folded")
+    }
+    // eight stored dates plus a stored null-ts row
+    val base = (25 to 31).map(d => t(s"2024-08-$d 10:00:00", d.toDouble, "id-a")) ++
+      Seq(t("2024-09-01 10:00:00", 32.0, "id-a"), t(null, 0.5, "id-n"))
+    landAndCompare(base, "base")(())
+    // 08-27 and 08-30 in one file: its min/max range also covers the
+    // untouched 08-28 and 08-29, which then ride the anti-join (still
+    // half the store untouched, so the date-split plan runs)
+    landAndCompare(Seq(
+        t("2024-08-27 10:00:00", 270.0, "id-a"),
+        t("2024-08-27 11:00:00", 271.0, "id-b"),
+        t("2024-08-30 10:00:00", 300.0, "id-a")),
+      "non-adjacent touched dates") {
+      val ranges = Streams.Footers.dateRanges(pendingFooters(out), "event_date")
+      assert(ranges.exists(_.exists { case (lo, hi) =>
+        !lo.isAfter(java.time.LocalDate.parse("2024-08-28")) &&
+          !hi.isBefore(java.time.LocalDate.parse("2024-08-29")) }),
+        s"premise: one range spans the untouched dates, got $ranges")
+    }
+    // no column statistics: every date counts as touched, single scan
+    spark.conf.set("parquet.column.statistics.enabled", "false")
+    try Streams.upsertDeltaBatch(
+      Seq(t("2024-08-26 10:00:00", 260.0, "id-a")).toDF(), out, batchId, compactEvery = 99)
+    finally spark.conf.unset("parquet.column.statistics.enabled")
+    Streams.upsertBatch(Seq(t("2024-08-26 10:00:00", 260.0, "id-a")).toDF(), direct)
+    batchId += 1
+    assert(Streams.Footers.dateRanges(pendingFooters(out), "event_date") === None,
+      "premise: the delta was written without statistics")
+    assert(snap(Streams.upsertRead(spark, out)) === snap(spark.read.parquet(direct)),
+      "stats-less delta (single-scan fallback)")
+    Streams.compactUpsertDeltas(spark, out)
+    // every pending timestamp null: no date range, only the null partition
+    // is touched; null keys never replace, so the rows append
+    landAndCompare(Seq(t(null, 1.5, "id-n"), t(null, 2.5, "id-m")), "all-null-ts delta") {
+      assert(Streams.Footers.dateRanges(pendingFooters(out), "event_date") === Some(Seq.empty),
+        "premise: an all-null event_date has statistics but no range")
+    }
+  }
+
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
     implicit val sqlCtx = spark.sqlContext
     val mv = java.nio.file.Files.createTempDirectory("graft_kll_stream").toString
