@@ -36,6 +36,16 @@ object Bench {
   private[graft] def normFragment(field: String, t: Double, canaryMean: Double): String =
     s""","$field":${f3(t * CanaryRefSec / canaryMean)}"""
 
+  /** The host-speed estimate for a series: the mean of the canary probes
+    * timed just before and just after it, None (no normalized field) when
+    * either probe failed. The count series is bracketed by (start, end),
+    * the hash series, which runs after the end probe, by (end, after hash). */
+  private[graft] def bracketMean(before: Option[Double], after: Option[Double]): Option[Double] =
+    (before, after) match {
+      case (Some(a), Some(b)) if a > 0 && b > 0 => Some((a + b) / 2)
+      case _ => None
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -267,15 +277,12 @@ object Bench {
       case _ =>
         s""","canary":{"probes":${canaryProbes.size},"error":${jq(canaryError.getOrElse("unknown"))}}"""
     }
-    // Normalization uses the mean of the start/end probes — the best
-    // single host-speed estimate for the run — and is omitted (not faked)
-    // when the canary itself failed.
-    val canaryMean = (canaryStart, canaryEnd) match {
-      case (Some(a), Some(b)) if a > 0 && b > 0 => Some((a + b) / 2)
-      case _ => None
-    }
-    def normJson(field: String, t: Double): String =
-      canaryMean.map(normFragment(field, t, _)).getOrElse("")
+    // Normalization uses the mean of the probes bracketing the series —
+    // the best single host-speed estimate for it — and is omitted (not
+    // faked) when the canary itself failed.
+    val countMean = bracketMean(canaryStart, canaryEnd)
+    def normJson(field: String, t: Double, mean: Option[Double] = countMean): String =
+      mean.map(normFragment(field, t, _)).getOrElse("")
     // the scaling contract, made legible (VERDICT r18 item 2): the driver's
     // low-core rerun compares per-query times across SPARK_GRAFT_CPUS
     // values, and r18's artifact carried no proof of which core count
@@ -385,6 +392,12 @@ object Bench {
           MatCache.harnessSweep(spark, blocking = true)
         }
       }
+      // a third probe closes the hash series' own bracket: host drift
+      // during the hash passes must show in its normalization
+      val canaryAfterHash =
+        try canaryStart.map(_ => canaryTime())
+        catch { case e: Throwable => noteCanary(e); None }
+      val hashMean = bracketMean(canaryEnd, canaryAfterHash)
       val hResults = queries.map { case (name, _) => name -> hBest(name) }
       val hQs = hResults.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
@@ -397,10 +410,10 @@ object Bench {
         .map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
       val hashLine =
         s"""{"metric":"total_hash","value":$hTotal,"unit":"sec","consumer":"xxhash64-struct (QTime.hashConsumer)","queries":$hQs,"passes":$hashPasses,"agg":"min","failed":${hFailed
-            .mkString("[", ",", "]")},"errors":$hErrJson$subset,"count_total_same_jvm":$total${normJson("total_hash_canary_norm", hTotal)}$cpusJson,"sf":"$sfDir"}"""
+            .mkString("[", ",", "]")},"errors":$hErrJson$subset,"count_total_same_jvm":$total${normJson("total_hash_canary_norm", hTotal, hashMean)}$cpusJson,"sf":"$sfDir"}"""
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(hashOut), hashLine + "\n")
       catch { case e: Exception => System.err.println(s"[bench-hash] write $hashOut failed: $e") }
-      println(s"""{"metric":"total_hash","short":true,"value":$hTotal,"unit":"sec","n":${hResults.size},"failed":${hFailed.mkString("[", ",", "]")}${normJson("total_hash_canary_norm", hTotal)}$cpusJson,"sf":"$sfDir"}""")
+      println(s"""{"metric":"total_hash","short":true,"value":$hTotal,"unit":"sec","n":${hResults.size},"failed":${hFailed.mkString("[", ",", "]")}${normJson("total_hash_canary_norm", hTotal, hashMean)}$cpusJson,"sf":"$sfDir"}""")
       hashTotal = Some(hTotal)
     } catch { case e: Throwable =>
       System.err.println(s"[bench-hash] series failed: $e")

@@ -673,6 +673,17 @@ object Streams {
   // value they overlap by the later-batch-wins rule, so the re-fold is
   // idempotent. (Descending deletion would leave a LOWER batch pending
   // whose re-fold could overwrite an already-folded newer value.)
+  //
+  // Resolved pending set ([[Resolved]]): the landing process keeps
+  // `deltaWinners(pending)` on the driver, so its reads and compactions,
+  // in any of its sessions, merge against a local relation instead of
+  // re-running the window over every pending delta. A compaction seeds it
+  // empty; each landing of this process extends it with the landed rows
+  // while it stays small (past [[Resolved.MaxRows]] winners the window
+  // reads faster); any other state drops it. It is used only while the
+  // store's pending files are exactly the ones it was built from, so a
+  // store another process writes to takes the distributed plan, which
+  // stays the reference.
 
   /** Pending delta directories under `rootDir/_delta`, ascending batch id.
     * The `_` prefix keeps them invisible to plain
@@ -821,10 +832,126 @@ object Streams {
       .drop("_rn", "batch")
   }
 
+  /** Path, length and modification time of each pending data file: what
+    * a [[Resolved]] set must match to stand for the pending deltas. */
+  private def signature(files: Seq[org.apache.hadoop.fs.FileStatus]): Set[(String, Long, Long)] =
+    files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+
+  /** The resolved pending set of one store, as this process knows it:
+    * `deltaWinners` of the pending files in `sig`, keyed by the
+    * (`seriesCol`, `tsCol`) value pair. A null key value is one key, as
+    * the window's partitioning groups it. `bytes` is the footer byte
+    * total of every delta landed since the seeding compaction, an upper
+    * bound on the rows held; `schema` is None while nothing is pending.
+    *
+    * It equals `deltaWinners(pending)` by induction: empty after a fold;
+    * each landing was deduplicated in its batch, and a landing with a
+    * higher batch id than every pending one wins on each key it carries.
+    */
+  private[graft] final class Resolved(
+      val sig: Set[(String, Long, Long)],
+      val maxBatch: Long,
+      val bytes: Long,
+      val schema: Option[StructType],
+      val seriesCol: String,
+      val tsCol: String,
+      val rows: Map[Row, Row]) {
+    import scala.jdk.CollectionConverters._
+
+    // the last reading session's local relation; a stream's landings run
+    // in a session of their own, so the reader's is the one worth keeping
+    private var view: Option[(SparkSession, DataFrame)] = None
+
+    /** The winners as a local relation of `s`, built once per set and
+      * reading session (no job): filters on it fold at optimization and
+      * joins broadcast it. */
+    def winners(s: SparkSession): DataFrame = synchronized {
+      view.collect { case (vs, df) if vs eq s => df }.getOrElse {
+        val df = s.createDataFrame(rows.values.toSeq.asJava, schema.get)
+        view = Some(s -> df)
+        df
+      }
+    }
+
+    /** The winners of each `event_date` as local relations of `s`, with
+      * the date as `Layout.upsertPartition` names it (null: no date). */
+    def byDate(s: SparkSession): Seq[(String, DataFrame)] = {
+      val d = schema.get.fieldIndex("event_date")
+      rows.values.groupBy(r => r.get(d) match {
+        case null => null
+        case v: java.sql.Date => v.toLocalDate.toString
+        case v => v.toString // java.time.LocalDate under the Java 8 time API
+      }).toSeq.map { case (date, rs) => date -> s.createDataFrame(rs.toSeq.asJava, schema.get) }
+    }
+  }
+
+  private[graft] object Resolved {
+    // stores whose set one process keeps; a constant bound on driver memory
+    private val MaxStores = 4
+    /** Winner rows past which a set is dropped, below the measured
+      * crossover where the local relation stops reading faster than the
+      * distributed window (about 10 k rows when few dates are touched,
+      * 25 k when all are; SCALING.md §"Merge-on-read priced"). */
+    private[graft] val MaxRows = 8192
+    /** Footer bytes (uncompressed) past which a set is dropped, whatever
+      * its row count: a bound on the driver memory one set holds. */
+    private val MaxBytes = 8L << 20
+    // keyed by the qualified store path alone: the sets are process-wide,
+    // so a stream's landings (in the stream's own session) serve the
+    // reads of every session; the signature check is what makes a set
+    // stand for the store, not the session that built it
+    private val sets = new java.util.LinkedHashMap[String, Resolved](8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Resolved]): Boolean =
+        size > MaxStores
+    }
+
+    private def key(s: SparkSession, rootDir: String): String = {
+      val p = new org.apache.hadoop.fs.Path(rootDir)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    }
+
+    def get(s: SparkSession, rootDir: String): Option[Resolved] =
+      sets.synchronized(Option(sets.get(key(s, rootDir))))
+
+    def put(s: SparkSession, rootDir: String, r: Resolved): Unit =
+      sets.synchronized(sets.put(key(s, rootDir), r))
+
+    def drop(s: SparkSession, rootDir: String): Unit =
+      sets.synchronized(sets.remove(key(s, rootDir)))
+
+    /** The set to merge against, when it stands for exactly `pending`. */
+    def matching(
+        s: SparkSession,
+        rootDir: String,
+        pending: Seq[org.apache.hadoop.fs.FileStatus],
+        seriesCol: String,
+        tsCol: String): Option[Resolved] =
+      get(s, rootDir).filter(r =>
+        r.seriesCol == seriesCol && r.tsCol == tsCol && r.sig == signature(pending))
+
+    /** A set of at most `rows` winners over `bytes` footer bytes is kept. */
+    def fits(rows: Long, bytes: Long): Boolean = rows <= MaxRows && bytes <= MaxBytes
+
+    /** Key columns whose external values compare as Spark groups them. */
+    def keyable(t: DataType): Boolean = t match {
+      case StringType | TimestampType | TimestampNTZType | DateType |
+          LongType | IntegerType | ShortType | ByteType | BooleanType => true
+      case _ => false
+    }
+  }
+
   /** One micro-batch of the delta-tier upsert ([[upsertDeltaSink]]): dedup
     * the batch with [[upsertBatch]]'s discipline, land it O(batch) in its
     * own `_delta/batch=<id>` directory (overwritten whole — replay
     * idempotence), then compact if `compactEvery` deltas have accumulated.
+    *
+    * When the process holds the store's [[Resolved]] set, the landing
+    * extends it with the landed rows, read back in one O(batch) job, if
+    * the pending files before the landing were exactly the set's, the
+    * batch id is above every pending one and the set stays within
+    * [[Resolved.fits]] (the landed footers' row count bounds it before
+    * the read-back). Otherwise the set is dropped. Without a set the
+    * landing lists nothing extra.
     */
   def upsertDeltaBatch(
       batch: DataFrame,
@@ -835,6 +962,10 @@ object Streams {
       compactEvery: Int = 8): Unit = {
     import org.apache.spark.sql.expressions.Window
     if (batch.isEmpty) return
+    val s = batch.sparkSession
+    val prior = Resolved.get(s, rootDir)
+      .map(r => r -> signature(deltaFiles(s, deltaDirs(s, rootDir))))
+    Resolved.drop(s, rootDir)
     val others = batch.columns.filterNot(c => c == seriesCol || c == tsCol)
     val w = Window
       .partitionBy(col(seriesCol), col(tsCol))
@@ -858,12 +989,32 @@ object Streams {
       .write
       .mode("overwrite")
       .parquet(tmp.toString)
-    val fs = dst.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(dst, true)
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(s"delta landing rename failed: $tmp -> $dst")
-    if (deltaDirs(batch.sparkSession, rootDir).size >= compactEvery)
-      compactUpsertDeltas(batch.sparkSession, rootDir, seriesCol, tsCol)
+    prior.foreach { case (r, before) =>
+      if (r.sig == before && batchId > r.maxBatch && r.seriesCol == seriesCol && r.tsCol == tsCol) {
+        import scala.jdk.CollectionConverters._
+        val landed = Footers.files(fs, dst)
+        val footers = landed.map(Footers.read(s, _))
+        val blocks = footers.flatMap(_.getParquetMetadata.getBlocks.asScala)
+        val bytes = r.bytes + blocks.map(_.getTotalByteSize).sum
+        // the landed row count bounds the set's new size before any read-back
+        val rowsAtMost = r.rows.size + blocks.map(_.getRowCount).sum
+        footers.headOption.map(Footers.schema(s, _)).filter(sc =>
+          r.schema.forall(_ == sc) && Resolved.fits(rowsAtMost, bytes) &&
+            Seq(seriesCol, tsCol).forall(c => Resolved.keyable(sc(c).dataType))
+        ).foreach { sc =>
+          val (si, ti) = (sc.fieldIndex(seriesCol), sc.fieldIndex(tsCol))
+          val rows = s.read.schema(sc).parquet(dst.toString).collect()
+          Resolved.put(s, rootDir, new Resolved(before ++ signature(landed), batchId, bytes,
+            Some(sc), seriesCol, tsCol, r.rows ++ rows.map(x => Row(x.get(si), x.get(ti)) -> x)))
+        }
+      }
+    }
+    if (deltaDirs(s, rootDir).size >= compactEvery)
+      compactUpsertDeltas(s, rootDir, seriesCol, tsCol)
   }
 
   /** Fold every pending delta into the day partitions (see the tier doc
@@ -871,6 +1022,12 @@ object Streams {
     * directories folded. Driver loop bounded by distinct event DATES in
     * the pending set, same as [[upsertBatch]]; each iteration is one
     * distributed merge via the swap discipline.
+    *
+    * When the process's [[Resolved]] set matches the pending files, the
+    * dates come from its rows and each date's updates are a local
+    * relation: no persisted window and no distinct-date job. After every
+    * folded directory is deleted the store has nothing pending that this
+    * process did not see, so the set is seeded empty here, and only here.
     */
   def compactUpsertDeltas(
       s: SparkSession,
@@ -880,41 +1037,42 @@ object Streams {
     val dirs = deltaDirs(s, rootDir)
     val files = deltaFiles(s, dirs)
     if (files.isEmpty) return 0
-    val winners =
+    val resolved = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
+    val persisted = if (resolved.isDefined) None else Some(
       deltaWinners(deltaStore(s, rootDir, Footers.read(s, files.head)), seriesCol, tsCol)
-        .persist()
+        .persist())
     try {
-      val dates = winners
-        .select(col("event_date").cast("string"))
-        .distinct()
-        .collect()
-        .map(_.getString(0))
+      val byDate = resolved.map(_.byDate(s)).getOrElse {
+        val winners = persisted.get
+        winners.select(col("event_date").cast("string")).distinct().collect()
+          .map(_.getString(0)).toSeq
+          .map(d => d -> winners.filter(
+            if (d == null) col("event_date").isNull else col("event_date") === d))
+      }
       // A null timestamp yields a null event_date (to_date(null)); such
       // rows land in the Hive default partition so they survive the fold
       // instead of NPE-ing the sort / vanishing from every date filter.
       // Spark reads that directory back as a null date value, so
       // upsertRead and plain readers both see the row again.
-      dates.filter(_ != null).sorted.foreach { d =>
+      byDate.sortBy { case (d, _) => (d == null, d) }.foreach { case (d, updates) =>
         graft.sources.Layout.upsertPartition(
           s,
           rootDir,
-          d,
-          winners.filter(col("event_date") === d).drop("event_date"),
+          Option(d).getOrElse("__HIVE_DEFAULT_PARTITION__"),
+          updates.drop("event_date"),
           seriesCol,
           tsCol)
       }
-      if (dates.contains(null))
-        graft.sources.Layout.upsertPartition(
-          s,
-          rootDir,
-          "__HIVE_DEFAULT_PARTITION__",
-          winners.filter(col("event_date").isNull).drop("event_date"),
-          seriesCol,
-          tsCol)
-    } finally winners.unpersist()
+    } finally persisted.foreach(_.unpersist())
+    Resolved.drop(s, rootDir)
     val fs = new org.apache.hadoop.fs.Path(rootDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    dirs.foreach { case (_, p) => fs.delete(p, true) } // ASCENDING batch order
+    // ASCENDING batch order, stopping at the first failed delete so only
+    // the highest batches can stay pending
+    val deleted = dirs.forall { case (_, p) => fs.delete(p, true) }
+    if (deleted)
+      Resolved.put(s, rootDir, new Resolved(
+        Set.empty, dirs.last._1, 0L, None, seriesCol, tsCol, Map.empty))
     dirs.size
   }
 
@@ -930,6 +1088,15 @@ object Streams {
     * action runs jobs. (Past
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32
     * partition directories, Spark's own file index lists with one job.)
+    *
+    * Pending winners, two plans. When the process's [[Resolved]] set
+    * was built from exactly the pending files listed here, the winners are
+    * its local relation in `s`: the caller's filters fold into it at
+    * optimization (no generated code for that branch) and the anti-join
+    * broadcasts it. Otherwise (another process landed, a replay, a crash,
+    * a pending set past [[Resolved.fits]]) the winners are
+    * [[deltaWinners]] over every pending delta, a window that each read
+    * plans twice, once per anti-join side. Both build with no Spark job.
     *
     * Date-pruned anti-join (r17; BENCH_upsertread_sf100.json found the
     * naive form paying 8.8x the plain read at a worst-case backlog): a
@@ -959,13 +1126,15 @@ object Streams {
       rootDir: String,
       seriesCol: String = "timeseries_id",
       tsCol: String = "timestamp"): DataFrame = {
-    val footers = deltaFiles(s, deltaDirs(s, rootDir)).map(Footers.read(s, _))
+    val files = deltaFiles(s, deltaDirs(s, rootDir))
+    val footers = files.map(Footers.read(s, _))
     val live = liveStore(s, rootDir)
     if (footers.isEmpty)
       return live.map(_._1).getOrElse(
         throw new IllegalStateException(s"no upsert store at $rootDir"))
-    val winners =
-      deltaWinners(deltaStore(s, rootDir, footers.head), seriesCol, tsCol)
+    val winners = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
+      .map(_.winners(s))
+      .getOrElse(deltaWinners(deltaStore(s, rootDir, footers.head), seriesCol, tsCol))
     live match {
       case None => winners
       case Some((lv, storeDates)) =>

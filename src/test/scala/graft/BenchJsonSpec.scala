@@ -24,4 +24,14 @@ class BenchJsonSpec extends AnyFunSuite {
         .get("total_canary_norm").asDouble === 31.45)
     } finally java.util.Locale.setDefault(saved)
   }
+
+  test("a series is normalized by the mean of the canary probes bracketing it; a failed probe omits the field") {
+    // count series: (start, end); hash series: (end, after hash)
+    val (start, end, afterHash) = (Some(1.0), Some(2.0), Some(4.0))
+    assert(Bench.bracketMean(start, end) === Some(1.5))
+    assert(Bench.bracketMean(end, afterHash) === Some(3.0))
+    assert(Bench.bracketMean(end, None) === None)
+    assert(Bench.bracketMean(None, afterHash) === None)
+    assert(Bench.bracketMean(Some(0.0), afterHash) === None)
+  }
 }

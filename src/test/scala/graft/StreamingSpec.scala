@@ -959,6 +959,38 @@ class StreamingSpec extends SparkSpec {
       .map(Streams.Footers.read(spark, _))
   }
 
+  /** True when `view` merges against its session's resolved pending set
+    * (a local relation) rather than the distributed window. */
+  private def usesResolved(view: org.apache.spark.sql.DataFrame): Boolean =
+    view.queryExecution.logical.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  /** A delta landed the way another process lands one: written in a
+    * store of its own, then renamed into `dir`'s `_delta`, so no set of
+    * this process ever sees the landing. */
+  private def landForeign(batch: org.apache.spark.sql.DataFrame, dir: String, batchId: Long): Unit = {
+    val elsewhere = java.nio.file.Files.createTempDirectory("graft_foreign").toString
+    Streams.upsertDeltaBatch(batch, elsewhere, batchId, compactEvery = 99)
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"$elsewhere/_delta/batch=$batchId"),
+      java.nio.file.Paths.get(s"$dir/_delta/batch=$batchId"))
+  }
+
+  /** `upsertRead` of `dir` on the distributed window plan: the process's
+    * resolved set is set aside while the view builds. */
+  private def distributedRead(dir: String): org.apache.spark.sql.DataFrame = {
+    val set = Streams.Resolved.get(spark, dir)
+    Streams.Resolved.drop(spark, dir)
+    try Streams.upsertRead(spark, dir) finally set.foreach(Streams.Resolved.put(spark, dir, _))
+  }
+
+  /** Fold `dir`'s pending deltas on the distributed plan and keep no set
+    * for it afterwards, as a store of another process would be. */
+  private def foldDistributed(by: org.apache.spark.sql.SparkSession, dir: String): Int = {
+    Streams.Resolved.drop(by, dir)
+    try Streams.compactUpsertDeltas(by, dir) finally Streams.Resolved.drop(by, dir)
+  }
+
   test("upsertRead builds its DataFrame with zero Spark jobs: deltas only, compacted + pending, compacted only") {
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_upjobs").toString
@@ -975,6 +1007,7 @@ class StreamingSpec extends SparkSpec {
     }
     Streams.upsertDeltaBatch(base.toDF(), out, batchId = 0, compactEvery = 99)
     val deltasOnly = build("deltas only")
+    assert(!usesResolved(deltasOnly), "premise: no compaction has seeded a resolved set")
     // the footer-derived schema is the schema inference gave (less the
     // `batch` partition column, which the view drops)
     assert(deltasOnly.schema === spark.read.parquet(s"$out/_delta").drop("batch").schema)
@@ -986,9 +1019,17 @@ class StreamingSpec extends SparkSpec {
     Streams.upsertDeltaBatch(
       Seq(t("2024-08-30 10:00:00", 30.0, "id-b")).toDF(), out, batchId = 1, compactEvery = 99)
     val merged = build("compacted + pending")
+    assert(usesResolved(merged), "premise: this session's landing extended the resolved set")
     assert(merged.schema === compacted.schema)
     assert(merged.filter(col("timeseries_id") === "id-b")
       .select("value").as[Double].collect().sorted.toSeq === Seq(4.0, 30.0))
+    // another process lands: the set no longer matches, the window plan runs
+    landForeign(Seq(t("2024-08-31 10:00:00", 40.0, "id-b")).toDF(), out, batchId = 2)
+    val foreign = build("compacted + pending, landed by another process")
+    assert(!usesResolved(foreign), "premise: a foreign landing drops to the distributed plan")
+    assert(foreign.schema === compacted.schema)
+    assert(foreign.filter(col("timeseries_id") === "id-b")
+      .select("value").as[Double].collect().sorted.toSeq === Seq(30.0, 40.0))
   }
 
   test("upsertRead: footer date ranges — non-adjacent dates, a stats-less delta, an all-null-ts delta — resolve like eager upsertBatch") {
@@ -1051,6 +1092,237 @@ class StreamingSpec extends SparkSpec {
       assert(Streams.Footers.dateRanges(pendingFooters(out), "event_date") === Some(Seq.empty),
         "premise: an all-null event_date has statistics but no range")
     }
+  }
+
+  private val BroadcastKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  test("resolved pending set == distributed window == eager upsertBatch: overlapping keys, null keys, replays, other sessions and processes, the row bound") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_upset").toString
+    val direct = java.nio.file.Files.createTempDirectory("graft_upset_direct").toString
+    def t(s: String, v: Double, id: String) =
+      Tele("S", if (s == null) null else ts(s), v, None, id)
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select("timeseries_id", "timestamp", "value")
+      .collect()
+      .map(r => s"${r.getString(0)}|${r.getTimestamp(1)}|${r.getDouble(2)}")
+      .sorted
+      .toSeq
+    def check(what: String, resolved: Boolean, eager: Boolean = true,
+        by: org.apache.spark.sql.SparkSession = spark): Seq[String] = {
+      val view = Streams.upsertRead(by, out)
+      assert(usesResolved(view) === resolved, s"$what: resolved-set plan expected = $resolved")
+      val distributed = distributedRead(out)
+      assert(!usesResolved(distributed), s"premise ($what): the reference reads the window plan")
+      val got = snap(view)
+      assert(got === snap(distributed), s"$what: resolved set vs distributed window")
+      if (eager) assert(got === snap(spark.read.parquet(direct)), s"$what: vs eager upsertBatch")
+      got
+    }
+    def land(b: Seq[Tele], id: Long, eager: Boolean = true,
+        by: org.apache.spark.sql.SparkSession = spark): Unit = {
+      Streams.upsertDeltaBatch(by.createDataFrame(b), out, id, compactEvery = 99)
+      if (eager) Streams.upsertBatch(b.toDF(), direct)
+    }
+    land(Seq(
+      t("2024-08-28 10:00:00", 1.0, "id-a"),
+      t("2024-08-29 10:00:00", 2.0, "id-a"),
+      t("2024-08-30 10:00:00", 3.0, "id-b"),
+      t("2024-08-31 10:00:00", 4.0, "id-b"),
+      t(null, 5.0, "id-n"),
+      t("2024-08-30 11:00:00", 6.0, null)), 0)
+    check("deltas only, before any compaction", resolved = false)
+    Streams.compactUpsertDeltas(spark, out)
+    assert(Streams.Resolved.get(spark, out).exists(_.rows.isEmpty), "compaction seeds an empty set")
+
+    // overlapping keys across batches; null timestamp and null series rows
+    // (null keys never replace a stored row, so they append)
+    land(Seq(
+      t("2024-08-30 10:00:00", 30.0, "id-b"),
+      t("2024-08-31 12:00:00", 41.0, "id-c"),
+      t(null, 50.0, "id-n"),
+      t("2024-08-30 11:00:00", 60.0, null)), 1)
+    check("one landing after the fold", resolved = true)
+    land(Seq(
+      t("2024-08-30 10:00:00", 31.0, "id-b"),
+      t("2024-08-31 12:00:00", 42.0, "id-c"),
+      t(null, 51.0, "id-m"),
+      t("2024-08-31 11:00:00", 61.0, null)), 2)
+    check("overlapping keys and null keys across batches", resolved = true)
+
+    // a replayed pending batch: same rows, new part-file names
+    val r3 = Seq(t("2024-08-30 10:00:00", 32.0, "id-b"), t("2024-08-31 12:00:00", 43.0, "id-c"))
+    land(r3, 3)
+    check("before the replay", resolved = true)
+    land(r3, 3, eager = false)
+    check("replay of the pending batch", resolved = false)
+    Streams.compactUpsertDeltas(spark, out)
+    // a replay of an already-folded lower batch while a higher one is
+    // pending: the higher batch keeps winning on the shared key
+    land(Seq(t("2024-08-30 10:00:00", 33.0, "id-b"), t("2024-08-31 10:00:00", 44.0, "id-b")), 4)
+    check("after the fold", resolved = true)
+    land(r3, 3, eager = false)
+    check("replay of a folded lower batch id", resolved = false)
+    Streams.compactUpsertDeltas(spark, out)
+
+    // the set is the process's, not a session's: a landing in a second
+    // session (a stream's foreachBatch runs in a session of its own)
+    // extends it, and a third session's read merges against it
+    land(Seq(t("2024-08-28 10:00:00", 10.0, "id-a")), 5)
+    land(Seq(t("2024-08-28 10:00:00", 11.0, "id-a"), t("2024-08-29 10:00:00", 20.0, "id-a")), 6,
+      by = spark.newSession())
+    check("a delta landed by another session", resolved = true)
+    check("read in a third session", resolved = true, by = spark.newSession())
+
+    // a delta landed by another process: the set no longer matches the
+    // pending files, and this process's next landing drops it
+    landForeign(Seq(t("2024-08-29 10:00:00", 21.0, "id-a")).toDF(), out, 7)
+    Streams.upsertBatch(Seq(t("2024-08-29 10:00:00", 21.0, "id-a")).toDF(), direct)
+    check("a delta landed by another process", resolved = false)
+    land(Seq(t("2024-08-29 10:00:00", 22.0, "id-a")), 8)
+    check("this process lands after the foreign landing", resolved = false)
+    Streams.compactUpsertDeltas(spark, out)
+
+    // the set is not tied to the broadcast threshold: at -1 the anti-join
+    // against it is not broadcast, and the answer is the same
+    val saved = spark.conf.getOption(BroadcastKey)
+    try {
+      spark.conf.set(BroadcastKey, "-1")
+      land(Seq(t("2024-08-30 10:00:00", 34.0, "id-b")), 9)
+      check("threshold -1", resolved = true)
+      spark.conf.set(BroadcastKey, "64b")
+      land(Seq(t("2024-08-31 10:00:00", 45.0, "id-b")), 10)
+      check("threshold 64 bytes", resolved = true)
+    } finally saved.fold(spark.conf.unset(BroadcastKey))(spark.conf.set(BroadcastKey, _))
+
+    // one null key in two pending batches: the window keeps the later
+    // batch's row, and so does the set. (The direct tier appends both,
+    // since a null key never matches in its merge, so no eager compare
+    // from here on.)
+    land(Seq(t(null, 1.0, "id-q"), t("2024-08-28 09:00:00", 1.0, null)), 12, eager = false)
+    land(Seq(t(null, 2.0, "id-q"), t("2024-08-28 09:00:00", 2.0, null)), 13, eager = false)
+    val got = check("a null key in two pending batches", resolved = true, eager = false)
+    assert(got.contains("id-q|null|2.0") && !got.contains("id-q|null|1.0"))
+    assert(got.contains("null|2024-08-28 09:00:00.0|2.0") && !got.contains("null|2024-08-28 09:00:00.0|1.0"))
+
+    // the row bound: a set of exactly MaxRows winners is kept, one more
+    // landed row drops it, and later landings find no set to extend
+    Streams.compactUpsertDeltas(spark, out)
+    def bulk(from: Long, until: Long) = spark.range(from, until).select(
+      lit("S").as("sensor_name"),
+      (lit(ts("2024-08-01 00:00:00").getTime / 1000) + col("id")).cast("timestamp").as("timestamp"),
+      col("id").cast("double").as("value"),
+      lit(null).cast("byte").as("fc1_flag"),
+      lit("id-bulk").as("timeseries_id"))
+    val max = Streams.Resolved.MaxRows.toLong
+    Streams.upsertDeltaBatch(bulk(0, max), out, 14, compactEvery = 99)
+    assert(Streams.Resolved.get(spark, out).exists(_.rows.size == max), "premise: MaxRows winners fit")
+    check("exactly MaxRows pending winners", resolved = true, eager = false)
+    Streams.upsertDeltaBatch(bulk(max, max + 1), out, 15, compactEvery = 99)
+    check("one winner past MaxRows", resolved = false, eager = false)
+    land(Seq(t("2024-08-31 12:00:00", 47.0, "id-c")), 16, eager = false)
+    check("a landing after the set was dropped", resolved = false, eager = false)
+    Streams.compactUpsertDeltas(spark, out)
+    land(Seq(t("2024-08-31 12:00:00", 48.0, "id-c")), 17, eager = false)
+    check("the next fold seeds a set again", resolved = true, eager = false)
+  }
+
+  test("resolved pending set: the sink's landings, in the stream's own session, serve reads in the caller's session") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_upsink").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsink_ckpt").toString
+    val direct = java.nio.file.Files.createTempDirectory("graft_upsink_direct").toString
+    val mem = MemoryStream[Tele]
+    // compactEvery=3: batch 2 folds 0-2 and seeds the set, batches 3 and 4
+    // extend it
+    val q = Streams
+      .upsertDeltaSink(mem.toDF(), out, ckpt, Trigger.ProcessingTime("0 seconds"), compactEvery = 3)
+      .start()
+    def t(s: String, v: Double, id: String) = Tele("S", ts(s), v, None, id)
+    val batches = Seq(
+      Seq(t("2024-08-28 12:00:00", 1.0, "id-a"), t("2024-08-29 09:00:00", 5.0, "id-b")),
+      Seq(t("2024-08-28 12:00:00", 2.0, "id-a")),
+      Seq(t("2024-08-30 10:00:00", 4.0, "id-c")),
+      Seq(t("2024-08-28 12:00:00", 3.0, "id-a"), t("2024-08-31 10:00:00", 6.0, "id-d")),
+      Seq(t("2024-08-31 10:00:00", 7.0, "id-d"), t("2024-08-29 09:00:00", 8.0, "id-b")))
+    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    batches.foreach(b => Streams.upsertBatch(b.toDF(), direct))
+    assert(new java.io.File(s"$out/_delta").list().count(_.startsWith("batch=")) === 2,
+      "premise: batches 3 and 4 are pending")
+    val view = Streams.upsertRead(spark, out)
+    assert(usesResolved(view), "the caller's read merges against the stream's set")
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select("timeseries_id", "timestamp", "value").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSet
+    assert(snap(view) === snap(distributedRead(out)))
+    assert(snap(view) === snap(spark.read.parquet(direct)))
+  }
+
+  test("compaction from the resolved set leaves the distributed fold's rows per partition; a failed delete leaves no set and the re-fold is exact") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_upfold").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft_upfold_twin").toString
+    val ref = spark.newSession()
+    def t(s: String, v: Double, id: String) =
+      Tele("S", if (s == null) null else ts(s), v, None, id)
+    /** rows per partition: the partition column read back with each row */
+    def partRows(dir: String) = spark.read.parquet(dir)
+      .select("event_date", "timeseries_id", "timestamp", "value")
+      .collect()
+      .map(r => s"${r.get(0)}|${r.getString(1)}|${r.getTimestamp(2)}|${r.getDouble(3)}")
+      .sorted
+      .toSeq
+    val batches = Seq(
+      Seq(t("2024-08-28 10:00:00", 1.0, "id-a"), t("2024-08-29 10:00:00", 2.0, "id-a"),
+        t(null, 3.0, "id-n")),
+      Seq(t("2024-08-29 10:00:00", 20.0, "id-a"), t("2024-08-30 10:00:00", 4.0, "id-b"),
+        t(null, 30.0, "id-n")),
+      Seq(t("2024-08-29 10:00:00", 21.0, "id-a"), t("2024-08-31 10:00:00", 5.0, null),
+        t(null, 31.0, "id-n"), t(null, 6.0, "id-m")))
+    // batch 0 folds in both stores (seeding this session's set in `out`),
+    // then batches 1 and 2 fold from the set in `out` and from the
+    // distributed window in `twin`
+    Seq(out -> spark, twin -> ref).foreach { case (dir, by) =>
+      Streams.upsertDeltaBatch(by.createDataFrame(batches.head), dir, 0, compactEvery = 99)
+      if (dir == out) Streams.compactUpsertDeltas(by, dir) else foldDistributed(by, dir)
+      batches.tail.zipWithIndex.foreach { case (b, i) =>
+        Streams.upsertDeltaBatch(by.createDataFrame(b), dir, i + 1L, compactEvery = 99)
+      }
+    }
+    assert(Streams.Resolved.get(spark, out).exists(_.rows.size == 5), "premise: the set holds both landings")
+    assert(Streams.Resolved.get(ref, twin).isEmpty, "premise: the twin has no set")
+    assert(Streams.compactUpsertDeltas(spark, out) === 2)
+    assert(foldDistributed(ref, twin) === 2)
+    assert(partRows(out) === partRows(twin))
+    assert(partRows(out).exists(_.startsWith("null|")), "premise: null-date rows were folded")
+
+    // crash mid-delete with a set present: the fold runs from the set, the
+    // delete of the higher batch fails, so it stays pending and no set may
+    // be seeded; the re-fold (distributed) must leave the same rows
+    Seq(Seq(t("2024-08-30 10:00:00", 40.0, "id-b")), Seq(t("2024-08-30 10:00:00", 41.0, "id-b"),
+        t("2024-08-28 10:00:00", 10.0, "id-a"))).zipWithIndex.foreach { case (b, i) =>
+      Streams.upsertDeltaBatch(b.toDF(), out, 3L + i, compactEvery = 99)
+      Streams.upsertDeltaBatch(ref.createDataFrame(b), twin, 3L + i, compactEvery = 99)
+    }
+    assert(Streams.Resolved.get(spark, out).exists(_.rows.size == 2), "premise: a set is present")
+    val hc = spark.sparkContext.hadoopConfiguration
+    val savedFs = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[FailingDeleteFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    FailingDeleteFs.failName = "batch=4"
+    try Streams.compactUpsertDeltas(spark, out)
+    finally {
+      FailingDeleteFs.failName = null
+      savedFs.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+    }
+    assert(new java.io.File(s"$out/_delta").list().filter(_.startsWith("batch=")).toSeq === Seq("batch=4"),
+      "premise: the lower delete ran, the higher one failed")
+    assert(Streams.Resolved.get(spark, out).isEmpty, "a set is seeded only after every delete succeeds")
+    Streams.compactUpsertDeltas(spark, out) // the re-fold after the "crash"
+    foldDistributed(ref, twin)
+    assert(partRows(out) === partRows(twin))
+    assert(Streams.Resolved.get(spark, out).exists(_.rows.isEmpty))
   }
 
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
@@ -1320,4 +1592,15 @@ class StreamingSpec extends SparkSpec {
     assert(silent.head._3 >= 60L * 60000L,
       "watermark-measured silence must be >= the horizon")
   }
+}
+
+/** A local file system whose delete of a path named
+  * [[FailingDeleteFs.failName]] fails (returns false, deletes nothing). */
+class FailingDeleteFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (p.getName == FailingDeleteFs.failName) false else super.delete(p, recursive)
+}
+
+object FailingDeleteFs {
+  @volatile var failName: String = _
 }
