@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Automatic `initialPartitionNum` (r15; VERDICT r14 item 4): derive the
   * AQE seed partition count per QUERY from the plan's own size estimates,
@@ -45,26 +46,12 @@ import org.apache.spark.sql.DataFrame
   * consumer executes.
   */
 object AutoParts {
-  /** Is the per-query auto seed active? Unset and "auto" mean yes (the
-    * r16 default); a numeric manual seed, "off" or "default" disables the
-    * per-query override. Anything else (e.g. "AUTO", a typo) ALSO
-    * disables it — the harness builder filter drops non-numeric values,
-    * so the session silently falls back to the cpus seed — but warns once
-    * to stderr so a misspelling is never a silent config change
-    * (ADVICE r16).
-    */
-  lazy val autoEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_INIT_PARTITIONS") match {
-      case None | Some("auto")            => true
-      case Some("off") | Some("default")  => false
-      case Some(v) if v.nonEmpty && v.forall(_.isDigit) => false
-      case Some(v) =>
-        System.err.println(
-          s"[autoparts] unrecognized SPARK_GRAFT_INIT_PARTITIONS='$v' " +
-            "(expected a number, 'auto', 'off' or 'default'); auto seeding " +
-            "DISABLED, session falls back to the builder-default seed")
-        false
-    }
+  /** Is the per-query auto seed active? See [[RunConfig.autoSeed]]. */
+  lazy val autoEnabled: Boolean = Harness.config.autoSeed
+
+  /** The Spark setting the seed is written to. */
+  val SeedConf = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
   /** Estimated input bytes per shuffle partition. 32 MB of
     * footer-estimated (columnar-compressed) input ≈ 100-500 MB in
     * unsafe-row form mid-shuffle — small enough to sort without spilling
@@ -128,8 +115,7 @@ object AutoParts {
   def applyIfAuto(name: String, df: DataFrame, cpus: Int): Int =
     if (autoEnabled) {
       val n = chooseSeed(name, partsFor(df, cpus), cpus)
-      df.sparkSession.conf
-        .set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n)
+      df.sparkSession.conf.set(SeedConf, n)
       n
     } else -1
 
@@ -143,14 +129,34 @@ object AutoParts {
       case _                         => formula
     }
 
-  /** Formula-only variant (no registry hint) — kept for probes that size a
-    * plan outside the named-registry context.
+  /** The harnesses' per-query seed policy for one session (Bench, QTime,
+    * Verify, SubsetDump). [[apply]] seeds a query's plan when auto mode is
+    * active; a failed analysis logs and puts back the seed the session
+    * started with (a tool's pinned -D flag, a numeric env seed, or
+    * Spark's own default) instead of inheriting the previous query's
+    * seed or aborting the run (ADVICE r15, r17). The plan is built only
+    * in auto mode (ADVICE r16: a disabled lever must not build and
+    * analyze every plan an extra time).
     */
-  def applyIfAuto(df: DataFrame, cpus: Int): Int =
-    if (autoEnabled) {
-      val n = partsFor(df, cpus)
-      df.sparkSession.conf
-        .set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n)
-      n
-    } else -1
+  final class Seeder(spark: SparkSession, cpus: Int, tag: String) {
+    private val start = spark.conf.getOption(SeedConf)
+
+    /** Seeds `name`'s plan; returns the seed, -1 when none was chosen. */
+    def apply(name: String, df: => DataFrame): Int =
+      if (!autoEnabled) -1
+      else
+        try applyIfAuto(name, df, cpus)
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[$tag] $name auto-parts analysis failed, default seed: $e")
+            restore()
+            -1
+        }
+
+    /** Puts back the starting seed (auto mode only). */
+    def restore(): Unit = if (autoEnabled) start match {
+      case Some(v) => spark.conf.set(SeedConf, v)
+      case None    => spark.conf.unset(SeedConf)
+    }
+  }
 }

@@ -90,15 +90,11 @@ object MatCache {
     doomed.size
   }
 
-  /** The harness entry point Bench and Verify share: one reading of the
-    * `SPARK_GRAFT_SWEEP` / `SPARK_GRAFT_SWEEP_OVER_BYTES` levers so an
-    * operator's A/B setting reaches BOTH tools and the 2 GiB default
-    * lives in exactly one place.
-    */
+  /** The harnesses' sweep threshold: below 2 GiB of transient blocks
+    * cleanup is left to the ContextCleaner (see [[sweepTransients]]). */
+  private val HarnessSweepOverBytes = 2L << 30
+
+  /** The sweep every harness runs between queries (Bench, Verify). */
   private[graft] def harnessSweep(s: SparkSession, blocking: Boolean): Int =
-    if (sys.env.getOrElse("SPARK_GRAFT_SWEEP", "1") == "0") 0
-    else sweepTransients(
-      s,
-      blocking,
-      sys.env.getOrElse("SPARK_GRAFT_SWEEP_OVER_BYTES", (2L << 30).toString).toLong)
+    sweepTransients(s, blocking, HarnessSweepOverBytes)
 }

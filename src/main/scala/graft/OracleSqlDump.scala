@@ -1,5 +1,7 @@
 package graft
 
+import Harness.jq
+
 /** Print the registry oracle SQL for the given keys as one JSON line —
   * lets driver-side tools (tools/sf100_ts_gate.py) reuse the EXACT oracle
   * the correctness gate runs instead of carrying a copy that could drift.
@@ -8,16 +10,6 @@ package graft
   * Run: runMain graft.OracleSqlDump <key>[,<key>...]
   */
 object OracleSqlDump {
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val keys = args(0).split(",").toSeq
     val missing = keys.filterNot(SparkEntry.oracleSql.contains)

@@ -1,28 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-/** Dev probe for the partition-sizing lever (r15; VERDICT r14 item 4):
-  * print, per key, the two candidate input-size signals an AUTOMATIC
-  * `initialPartitionNum` could be derived from, without executing anything:
-  *
-  *   - `scan_bytes`  — sum of the scanned relations' statistics (parquet
-  *     footer-derived file sizes, post column pruning scaling);
-  *   - `max_shuffle_bytes` — the largest Catalyst size estimate flowing
-  *     INTO a shuffle-inducing operator (Aggregate / Join / Window /
-  *     global Sort / Repartition). This is what actually hits the
-  *     exchanges that spill, and for expansion-heavy plans (pair joins,
-  *     window explodes) it diverges from scan_bytes by orders of
-  *     magnitude — exactly the keys where the manual lever's best setting
-  *     diverged too (BENCH_sf100_spillAB.json).
-  *
-  * Size-only estimation (no CBO) multiplies join children, so
-  * max_shuffle_bytes is an over-estimate for join-heavy plans; the probe
-  * exists to measure HOW the signals rank the keys whose best manual
-  * settings are known, before committing to a formula (see AutoParts).
-  *
-  * Usage: runMain graft.PlanStats <sfDir> <key>[,<key>...]
+/** The input-size signals [[AutoParts]] derives its per-query
+  * `initialPartitionNum` from, read off the optimized logical plan
+  * without executing anything (r15; VERDICT r14 item 4). A plain scan
+  * total misses the expansion-heavy plans (pair joins, window explodes)
+  * whose best manual setting diverged by orders of magnitude
+  * (BENCH_sf100_spillAB.json), so the signals also measure what flows
+  * INTO the joins, windows and global sorts.
   */
 object PlanStats {
   /** Decomposed size signals off the optimized logical plan.
@@ -107,28 +93,5 @@ object PlanStats {
       case s: Sort if s.global && reliable(s.child) => s.child.stats.sizeInBytes
     }
     Signals(scans.map(sane).sum, maxOf(joinIn), maxOf(selfJoinIn), maxOf(wsIn))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val s0 = signals(df.queryExecution.optimizedPlan)
-      val formula = AutoParts.partsFor(df, cpus.toInt)
-      println(s"[planstats] $n scan=${s0.scan} joinChild=${s0.joinChild} " +
-        s"selfJoinChild=${s0.selfJoinChild} winSortChild=${s0.winSortChild} " +
-        s"auto=${AutoParts.chooseSeed(n, formula, cpus.toInt)} formula=$formula")
-    }
-    spark.stop()
   }
 }

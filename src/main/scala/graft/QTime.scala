@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, expr, lit, struct, xxhash64}
 
 /** Dev utility: time (or explain) a subset of queries without the full
@@ -38,63 +38,30 @@ object QTime {
     // — for inspecting big-SF plan geometry without paying the runs
     val explainOnly = args.contains("--explain-only")
     val explain = args.contains("--explain") || explainOnly
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val cfg = Harness.config
+    val cpus = Harness.cpus(32)
     // a NUMERIC SPARK_GRAFT_INIT_PARTITIONS pins the AQE seed for the
     // whole run (parity with Bench; pinned -D flags keep working because
     // nothing is set here otherwise); auto mode — the r16 default — seeds
     // per query below
-    sys.env.get("SPARK_GRAFT_INIT_PARTITIONS")
-      .filter(v => v.nonEmpty && v.forall(_.isDigit))
-      .foreach(n => builder.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // whatever seed the session actually started with (numeric env,
-    // a tool's pinned -D flag, or Spark's own default) — what a failed
-    // auto analysis must reset to
-    val defaultSeed = spark.conf.getOption(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val spark = Harness.session(32, cfg.pinnedSeed.map(AutoParts.SeedConf -> _).toSeq)
     // SPARK_GRAFT_QTIME_PASSES (default 2): big-SF probes whose shuffle
     // spill approaches the disk budget run 1 timed pass. The GC between
     // passes releases the previous pass's ShuffleDependencies so the
     // ContextCleaner deletes their spill files — without it, 3 passes of a
     // ~30 GB-spill query accumulate until the disk fills (observed:
     // q_sim_knn_graph at sf100).
-    val passes = math.max(
-      1, sys.env.getOrElse("SPARK_GRAFT_QTIME_PASSES", "2").trim.toInt)
-    val forceHash = sys.env.get("SPARK_GRAFT_QTIME_AGG").contains("hash")
+    val passes = cfg.qtimePasses
+    val forceHash = cfg.qtimeHash
+    val seeder = new AutoParts.Seeder(spark, cpus, "qtime")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      // SPARK_GRAFT_INIT_PARTITIONS=auto: per-query AQE seed from the
-      // plan's own size estimates (AutoParts); set BEFORE any pass so the
-      // warm and timed passes run the same physical configuration. A
-      // plan-analysis failure degrades to the default seed and continues
+      // per-query AQE seed from the plan's own size estimates, set BEFORE
+      // any pass so the warm and timed passes run the same physical
+      // configuration; a failed analysis continues on the starting seed
       // (ADVICE r15: unguarded, it aborted the whole remaining key list
-      // including --explain-only inspection runs). The fn() call sits
-      // INSIDE the mode guard (ADVICE r16): with auto disabled by a
-      // numeric env the plan must not be built-and-analyzed a wasted
-      // extra time.
-      val auto =
-        if (!AutoParts.autoEnabled) -1
-        else
-          try AutoParts.applyIfAuto(n, fn(spark, sfDir), cpus.toInt)
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[qtime] $n auto-parts analysis failed, default seed: $e")
-              defaultSeed match {
-                case Some(v) => spark.conf.set(
-                  "spark.sql.adaptive.coalescePartitions.initialPartitionNum", v)
-                case None => spark.conf.unset(
-                  "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-              }
-              -1
-          }
+      // including --explain-only inspection runs)
+      val auto = seeder(n, fn(spark, sfDir))
       if (auto > 0) println(s"[qtime] $n auto_init_partitions=$auto")
       if (explain && forceHash) {
         // explain what the hash consumer actually executes (count() and

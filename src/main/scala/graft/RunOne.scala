@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run ONE SparkEntry query by key and print its rows (or its
   * formatted plan with --explain) — the fast inner loop for checking a new
@@ -21,15 +20,7 @@ object RunOne {
     val explain = args.contains("--explain")
     // SPARK_GRAFT_CPUS (default 8 — the fast inner loop): the sf100 gate
     // sets 32, where 8 threads would stretch the heavy checks by ~4x
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(8, logLevel = "ERROR")
     if (args.contains("--check")) {
       // no-oracle keys live in `checks`; the oracle'd pair-graph family has
       // guard-scale verdicts in `scaleChecks` (the DuckDB oracle cannot

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import Harness.jq
 
 /** Measured facts for the streaming surface (r14; VERDICT r13 item 4):
   * the 19 StreamChecks contracts prove the kernels CORRECT, but nothing
@@ -39,21 +40,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * decade comparison.
   */
 object StreamBench {
-  private def jq(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** The events table in the reference's telemetry shape, keyed on
+    * (timeseries_id, timestamp) like the upsert tiers. */
+  private[graft] def telemetryOf(spark: SparkSession, sfDir: String): DataFrame =
+    U.events(spark, sfDir).select(
+      col("event_type").as("sensor_name"),
+      col("ts").as("timestamp"),
+      col("value"),
+      lit(null).cast("byte").as("fc1_flag"),
+      col("user_id").cast("string").as("timeseries_id"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(32)
 
     val work = java.nio.file.Files.createTempDirectory("graft_sbench").toString
     def dir(name: String): String = { val p = s"$work/$name"; p }
@@ -63,8 +64,7 @@ object StreamBench {
     // a new arm can get its third-decade row without re-measuring the
     // whole surface. A subset run writes a partial artifact — keep it in a
     // separate file, never over the full-surface one.
-    val onlyArms = sys.env.get("SPARK_GRAFT_STREAMBENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val onlyArms = Harness.config.streamBenchOnly
     def want(arm: String): Boolean = onlyArms.forall(_.contains(arm))
 
     // ---- stage the landing dirs (not timed: this is the producer's side)
@@ -72,12 +72,7 @@ object StreamBench {
       "upsert_delta", "count_mv", "cm_mv").exists(want)
     val wantOrdered = Seq("upsert_ordered", "upsert_delta_ordered",
       "state_kernels").exists(want)
-    val telemetry = U.events(spark, sfDir).select(
-      col("event_type").as("sensor_name"),
-      col("ts").as("timestamp"),
-      col("value"),
-      lit(null).cast("byte").as("fc1_flag"),
-      col("user_id").cast("string").as("timeseries_id"))
+    val telemetry = telemetryOf(spark, sfDir)
     val nEvents = telemetry.count()
     if (wantShuffled)
       telemetry.repartition(32).write.mode(SaveMode.Overwrite)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Subset-series oracle dump (r17; VERDICT r16 item 6): certify registry
@@ -30,28 +29,15 @@ object SubsetDump {
     val outDir = args(1)
     val keys = args(2).split(",").toSeq
     val mod = args.lift(3).map(_.toInt).getOrElse(97)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(32)
+    val seeder = new AutoParts.Seeder(spark, cpus, "subsetdump")
     keys.foreach { key =>
       val q = Registry.byName(key)
       // engine-default geometry, same as Verify (the gate certifies the
       // plans users actually get); analysis failure degrades to the
       // default seed instead of aborting the dump (ADVICE r17)
-      if (AutoParts.autoEnabled)
-        try AutoParts.applyIfAuto(key, q.fn(spark, sfDir), cpus.toInt)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[subsetdump] auto-parts analysis failed, default seed: $e")
-            spark.conf.unset(
-              "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-        }
+      seeder(key, q.fn(spark, sfDir))
       val df = q.fn(spark, sfDir)
       require(df.columns.contains("user_id"),
         s"$key has no user_id series column — the subset form does not apply")

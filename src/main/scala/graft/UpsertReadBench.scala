@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Price the delta tier's MERGE-ON-READ view (r17; VERDICT r16 item 4):
@@ -35,29 +35,14 @@ object UpsertReadBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(32)
 
     val work = java.nio.file.Files.createTempDirectory("graft_urb").toString
     val store = s"$work/upsert_store"
 
-    // STREAMBENCH telemetry shape; the delta tier keys on
-    // (timeseries_id, timestamp)
-    val telemetry = U.events(spark, sfDir).select(
-      col("event_type").as("sensor_name"),
-      col("ts").as("timestamp"),
-      col("value"),
-      lit(null).cast("byte").as("fc1_flag"),
-      col("user_id").cast("string").as("timeseries_id"))
     // deterministic shuffled split: every batch carries every date
-    val batched = telemetry
+    val batched = StreamBench.telemetryOf(spark, sfDir)
       .withColumn("_b", pmod(xxhash64(col("timeseries_id"), col("timestamp")), lit(NBatches)))
       .persist()
     val nEvents = batched.count()

@@ -1,44 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Harness.jq
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // plain int64 micros so the DuckDB oracle reads identical timestamps
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Subset lever (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): a
+    // comma-separated key list restricts the dump + oracle manifest to
+    // those keys — the fast inner loop for checking ONE new operator
+    // against verify_local.py without the full-registry pass. Unset =
+    // everything runs.
+    val only = Harness.config.verifyKeys
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    val cpus = Harness.cpus(4)
+    // plain int64 micros so the DuckDB oracle reads identical timestamps
+    val spark = Harness.session(4, Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // key -> first exception line, for failures.json: a failed query must be
     // diagnosable from the driver artifacts alone, not from a discarded
     // stderr tail (the r8 diagnosis cost a full round-trip).
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def writeFailures(): Unit = {
-      val failJson = failures
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
-    }
+    // one artifact: a JSON object of key -> JSON value
+    def write(file: String, entries: Iterable[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        entries.map { case (k, v) => s"${jq(k)}: $v" }.mkString("{", ",", "}"))
+    def writeFailures(): Unit = write("failures.json", failures.map { case (k, v) => k -> jq(v) })
+    // a failed in-run verdict also lands in failures.json, so one artifact
+    // carries every red flag
+    def flag(kind: String, k: String, r: Either[String, String]): Unit =
+      r.left.foreach { msg =>
+        failures(s"$kind:$k") = msg
+        System.err.println(s"[verify] $kind $k FAILED: $msg")
+      }
     // Fail loudly ONCE if the testdata's physical schemas drifted from what
     // the readers handle (r8: a silent upstream regen broke 63 queries) —
     // but write failures.json FIRST so the abort is diagnosable from driver
@@ -52,45 +46,20 @@ object Verify {
         spark.stop()
         throw e
     }
-    // Subset lever (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): a
-    // comma-separated key list restricts the dump + oracle manifest to
-    // those keys — the fast inner loop for checking ONE new operator
-    // against verify_local.py without the full-registry pass. Unset =
-    // driver behavior, everything runs.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
     // SPARK_GRAFT_VERIFY_COALESCE=0 skips the single-file coalesce: at the
     // sf100 gate a 260 M-row dump through coalesce(1) serializes the final
     // window sort + parquet write into ONE task. The DuckDB compare globs
     // <dump>/*.parquet, so a multi-part dump verifies identically; default
     // stays 1 (the driver's sf0.01 artifact layout, one tidy file per key).
-    val coalesceOne =
-      !sys.env.get("SPARK_GRAFT_VERIFY_COALESCE").contains("0")
+    val coalesceOne = Harness.config.verifyCoalesce
     // per-query AQE seed, auto by default since r16 (AutoParts.autoEnabled;
     // numeric env / -D pins disable it) — the same engine-default geometry
     // Bench/QTime run, so the correctness gate certifies the plans users
     // actually get. Analysis failure degrades to the session default.
-    val verifyDefaultSeed = spark.conf.getOption(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    def applyAuto(
-        name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      if (AutoParts.autoEnabled)
-        try AutoParts.applyIfAuto(name, fn(spark, sfDir), cpus.toInt)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[verify] auto-parts analysis failed, default seed: $e")
-            verifyDefaultSeed match {
-              case Some(v) => spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum", v)
-              case None => spark.conf.unset(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-            }
-        }
+    val seeder = new AutoParts.Seeder(spark, cpus, "verify")
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try {
-        applyAuto(name, fn)
+        seeder(name, fn(spark, sfDir))
         val df = fn(spark, sfDir)
         (if (coalesceOne) df.coalesce(1) else df).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -108,57 +77,32 @@ object Verify {
       // starves later queries — see MatCache.harnessSweep).
       MatCache.harnessSweep(spark, blocking = false)
     }
-    val json = SparkEntry.oracleSql
-      .filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    write("oracle_sql.json",
+      SparkEntry.oracleSql.filter(kv => selected(kv._1)).map { case (k, v) => k -> jq(v) })
     // machine-readable companion: how each no-oracle key IS verified
-    val propJson = Registry.propertyVerification
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(
-      Paths.get(s"$outDir/no_oracle_verification.json"), propJson)
+    write("no_oracle_verification.json",
+      Registry.propertyVerification.map { case (k, v) => k -> jq(v) })
     // ... and the VERDICTS: each no-oracle key re-verified inside this run
     // (r9 advice item 6 — the driver artifact no longer has to trust that
-    // the ScalaTest twins ran). ok=false rows also land in failures.json so
-    // one artifact carries every red flag.
+    // the ScalaTest twins ran).
     val propResults = ops.PropertyChecks.runAll(spark, sfDir, selected)
-    val resJson = propResults.map { case (k, depth, r) =>
-      val (ok, detail) = r match {
-        case Left(m)  => ("false", m)
-        case Right(m) => ("true", m)
-      }
-      s"${q(k)}: {\"ok\": $ok, \"depth\": ${q(depth)}, \"detail\": ${q(detail)}}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/no_oracle_results.json"), resJson)
-    propResults.foreach { case (k, _, r) =>
-      r.left.foreach { msg =>
-        failures(s"property:$k") = msg
-        System.err.println(s"[verify] property $k FAILED: $msg")
-      }
-    }
+    write("no_oracle_results.json", propResults.map { case (k, depth, r) =>
+      k -> s"{\"ok\": ${r.isRight}, \"depth\": ${jq(depth)}, \"detail\": ${jq(r.merge)}}"
+    })
+    propResults.foreach { case (k, _, r) => flag("property", k, r) }
     // Streaming verdicts (r12): the 16 group-J kernels + MV readers were
     // verified only in ScalaTest; StreamChecks re-runs their batch-
     // equivalence / replay-idempotence cores HERE so the driver artifact
     // carries the whole engine surface. Skipped when a VERIFY_ONLY subset
-    // is active (the fast single-key inner loop) or when explicitly opted
-    // out; the full driver gate always runs it.
-    if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_SKIP_STREAMING")) {
+    // is active (the fast single-key inner loop); a full run always
+    // runs it.
+    if (only.isEmpty) {
       val streamResults = streaming.StreamChecks.runAll(spark)
-      val streamJson = streamResults.map { case (k, covers, r) =>
-        val (ok, detail) = r match {
-          case Left(m)  => ("false", m)
-          case Right(m) => ("true", m)
-        }
-        s"${q(k)}: {\"ok\": $ok, \"covers\": [${covers.map(q).mkString(",")}], " +
-          s"\"detail\": ${q(detail)}}"
-      }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/streaming_results.json"), streamJson)
-      streamResults.foreach { case (k, _, r) =>
-        r.left.foreach { msg =>
-          failures(s"streaming:$k") = msg
-          System.err.println(s"[verify] streaming $k FAILED: $msg")
-        }
-      }
+      write("streaming_results.json", streamResults.map { case (k, covers, r) =>
+        k -> (s"{\"ok\": ${r.isRight}, \"covers\": [${covers.map(jq).mkString(",")}], " +
+          s"\"detail\": ${jq(r.merge)}}")
+      })
+      streamResults.foreach { case (k, _, r) => flag("streaming", k, r) }
     }
     writeFailures()
     spark.stop()

@@ -28,9 +28,9 @@ object MultimodalOps {
     * RGB, pixel byte i = (doc_id*31 + i*7) mod 256 — closed-form integer
     * arithmetic both engines reproduce exactly.
     */
-  def syntheticImage(docId: Long, nChars: Long, mult: Int = 1): Ppm.Image = {
-    val w = 8 * mult
-    val h = (1 + (nChars % 8).toInt) * mult
+  def syntheticImage(docId: Long, nChars: Long): Ppm.Image = {
+    val w = 8
+    val h = 1 + (nChars % 8).toInt
     val px = new Array[Byte](w * h * 3)
     var i = 0
     while (i < px.length) {
@@ -46,8 +46,8 @@ object MultimodalOps {
     * samples, so sign crossings are frequent and the zero-crossing stat is
     * non-degenerate.
     */
-  def syntheticAudio(docId: Long, nChars: Long, mult: Int = 1): Wav.Audio = {
-    val n = (64 + nChars % 64).toInt * mult * mult
+  def syntheticAudio(docId: Long, nChars: Long): Wav.Audio = {
+    val n = (64 + nChars % 64).toInt
     val s = new Array[Short](n)
     var i = 0
     while (i < n) {
@@ -62,9 +62,9 @@ object MultimodalOps {
     * (doc_id*37 + f*101 + i*13) mod 256 — frame-dependent, so the motion
     * (frame-differencing) statistic is non-degenerate.
     */
-  def syntheticVideo(docId: Long, nChars: Long, mult: Int = 1): Y4m.Video = {
+  def syntheticVideo(docId: Long, nChars: Long): Y4m.Video = {
     val nf = (1 + nChars % 5).toInt
-    val wh = 4 * mult
+    val wh = 4
     val frames = Vector.tabulate(nf) { f =>
       Array.tabulate(3 * wh * wh)(i =>
         ((docId * 37 + f * 101 + i * 13) % 256).toByte)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, U}
+import graft.{Harness, Q, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1147,7 +1147,7 @@ object SimOps {
   def annIndexDir(s: SparkSession, d: String): String = {
     val pinnedRoot = s.conf
       .getOption(AnnIndexDirConf)
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_INDEX_DIR"))
+      .orElse(Harness.config.annIndexDir)
       .filter(_.nonEmpty)
     val dir = pinnedRoot match {
       case Some(root) => s"$root/${U.dirToken(d)}"

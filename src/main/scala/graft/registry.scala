@@ -57,11 +57,11 @@ object U {
     * directory, the formatted plan of the segment FEEDING the checkpoint
     * is written there as `<label>.txt` before the lineage is cut (loops
     * overwrite; the per-iteration plans differ only in expr ids). Dormant
-    * (one env probe) in every normal run.
+    * (one config probe) in every normal run.
     */
   def ckpt(df: org.apache.spark.sql.DataFrame, label: String)
       : org.apache.spark.sql.DataFrame = {
-    sys.env.get("SPARK_GRAFT_DUMP_PRECKPT").filter(_.nonEmpty).foreach { dir =>
+    Harness.config.dumpPreckpt.foreach { dir =>
       try {
         val p = java.nio.file.Paths.get(dir, s"$label.txt")
         java.nio.file.Files.createDirectories(p.getParent)
