@@ -375,11 +375,6 @@ object DedupOps {
     }
   }
 
-  private[ops] def minhashJaccardPairs(s: SparkSession, d: String): DataFrame =
-    minhashPairStats(s, d)
-      .filter(col("jaccard") >= 0.8)
-      .select(col("a"), col("b"), col("jaccard"))
-
   /** The near-dup pair family's ONE cached artifact: candidate pairs that
     * pass EITHER the symmetric Jaccard cut (>= 0.8, the pair-graph edge
     * set) OR the asymmetric containment cut (inter >= 0.9·min(|A|,|B|),

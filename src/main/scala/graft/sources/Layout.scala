@@ -207,30 +207,20 @@ object Layout {
     data.filter(zPred && exact).drop("z")
   }
 
-  /** Compact one date partition in place: streaming ingest appends a file
-    * per micro-batch per partition, and at 100 TB the accumulated small
-    * files dominate scan setup cost (footer reads, task scheduling).
-    * Rewrites the partition dir to ~`targetFileBytes` files, restoring the
-    * (series, time) sort so row-group pruning keeps working. Embarrassingly
-    * parallel across dates; each date is one independent rewrite, the same
-    * unit the reference rewrote on *every insert* (`main.rs:101`).
-    *
-    * Returns (filesBefore, filesAfter).
-    */
   private def swapPaths(rootDir: String, eventDate: String) = (
     new org.apache.hadoop.fs.Path(s"$rootDir/event_date=$eventDate"),
     new org.apache.hadoop.fs.Path(s"$rootDir/.compact_tmp_event_date=$eventDate"),
     new org.apache.hadoop.fs.Path(s"$rootDir/.compact_old_event_date=$eventDate"))
 
-  /** Heal a partition left mid-swap by a crashed [[compactPartition]].
+  /** Heal a partition left mid-swap by a crashed [[swapPartition]].
     * The swap's invariant is that a complete copy of the data always exists
     * under exactly one of (live, old): a crash in the window between the two
     * renames leaves live MISSING and the data in `.compact_old_...`. Rolls
     * that rename back (and drops the unreferenced tmp dir); after a crash
     * anywhere else the live dir is intact and only stale side dirs need
     * sweeping. Returns true iff a rollback was performed. Idempotent; also
-    * invoked at the start of every [[compactPartition]], so a crashed
-    * compaction self-heals on retry.
+    * invoked at the start of every swap, so a crashed compaction or upsert
+    * self-heals on retry.
     */
   def recoverPartition(
       spark: SparkSession,
@@ -254,6 +244,50 @@ object Layout {
     rolledBack
   }
 
+  /** The one rewrite of a date partition: heal a crashed previous swap
+    * ([[recoverPartition]]) FIRST, so the live dir holds the data before
+    * anything reads it; `write(fs, live, tmp)` writes the new contents to
+    * the tmp dir (reading the live dir if it needs to); then the live dir
+    * moves aside, tmp is installed, and the old copy is dropped. Each
+    * rename is checked, and a failed install renames the old copy back,
+    * so a crash anywhere leaves a complete copy under exactly one of
+    * (live, old) — never deleted-before-replaced. True atomicity for
+    * concurrent readers during the swap window needs a transactional table
+    * format (Delta/Iceberg); this is the best a bare-parquet layout can do.
+    */
+  private def swapPartition[A](
+      spark: SparkSession,
+      rootDir: String,
+      eventDate: String)(
+      write: (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path, String) => A): A = {
+    recoverPartition(spark, rootDir, eventDate)
+    val (path, tmpPath, oldPath) = swapPaths(rootDir, eventDate)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path.toString), spark.sparkContext.hadoopConfiguration)
+    val hadLive = fs.exists(path)
+    val out = write(fs, path, tmpPath.toString)
+    if (hadLive && !fs.rename(path, oldPath))
+      throw new java.io.IOException(s"swap: failed to move $path aside")
+    if (!fs.rename(tmpPath, path)) {
+      if (hadLive) fs.rename(oldPath, path) // roll back: stay readable
+      throw new java.io.IOException(s"swap: failed to install $tmpPath")
+    }
+    fs.delete(oldPath, true)
+    out
+  }
+
+  /** Compact one date partition in place: streaming ingest appends a file
+    * per micro-batch per partition, and at 100 TB the accumulated small
+    * files dominate scan setup cost (footer reads, task scheduling).
+    * Rewrites the partition dir to ~`targetFileBytes` files through
+    * [[swapPartition]], restoring the (series, time) sort so row-group
+    * pruning keeps working. Embarrassingly parallel across dates; each
+    * date is one independent rewrite, the same unit the reference rewrote
+    * on *every insert* (`main.rs:101`).
+    *
+    * Returns (filesBefore, filesAfter), counting the data files
+    * [[graft.streaming.Streams.Footers.files]] lists.
+    */
   def compactPartition(
       spark: SparkSession,
       rootDir: String,
@@ -261,47 +295,26 @@ object Layout {
       targetFileBytes: Long = 128L * 1024 * 1024,
       seriesCol: String = "user_id",
       tsCol: String = "ts"): (Int, Int) = {
-    // Heal any previous crashed swap FIRST: the live dir must exist (and the
-    // .compact_old_ slot must hold no sole surviving copy) before we list
-    // input files or delete anything.
-    recoverPartition(spark, rootDir, eventDate)
-    val (path, tmpPath, oldPath) = swapPaths(rootDir, eventDate)
-    val partDir = path.toString
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(partDir), spark.sparkContext.hadoopConfiguration)
-    def parquetFiles() =
-      fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
-    val before = parquetFiles()
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(partDir)
-      .repartition(nOut)
-      .sortWithinPartitions(col(seriesCol), col(tsCol))
-    // Swap via two renames, each checked: write tmp, move live aside, move
-    // tmp in, drop the old copy. A crash between the renames leaves the old
-    // data intact in `.compact_old_...` ([[recoverPartition]] rolls it
-    // back) — never deleted-before-replaced. True atomicity (concurrent
-    // readers during the swap window) needs a transactional table format
-    // (Delta/Iceberg); this is the best a bare-parquet layout can do.
-    df.write.mode(SaveMode.Overwrite).parquet(tmpPath.toString)
-    if (!fs.rename(path, oldPath))
-      throw new java.io.IOException(s"compact: failed to move $path aside")
-    if (!fs.rename(tmpPath, path)) {
-      fs.rename(oldPath, path) // roll back so the partition stays readable
-      throw new java.io.IOException(s"compact: failed to install $tmpPath")
+    val files = graft.streaming.Streams.Footers.files _
+    val before = swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
+      val before = files(fs, path)
+      val nOut = math.max(1, math.ceil(before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
+      spark.read.parquet(path.toString)
+        .repartition(nOut)
+        .sortWithinPartitions(col(seriesCol), col(tsCol))
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
+      before.length
     }
-    fs.delete(oldPath, true)
-    (before.length, parquetFiles().length)
+    val (path, _, _) = swapPaths(rootDir, eventDate)
+    (before, files(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path).length)
   }
 
   /** Merge `updates` (rows of ONE event date, WITHOUT the event_date
     * column) into that date's partition with upsert semantics: live rows
     * whose (series, ts) key appears in the batch are replaced, all other
-    * live rows survive, new keys append. The rewrite uses the same
-    * two-rename swap discipline as [[compactPartition]] (write tmp → move
-    * live aside → install → drop old; [[recoverPartition]] heals a crash
-    * mid-swap and runs first), so a complete copy of the data exists at
-    * every instant. IDEMPOTENT: re-merging identical updates replaces rows
+    * live rows survive, new keys append. The rewrite goes through
+    * [[swapPartition]], so a complete copy of the data exists at every
+    * instant. IDEMPOTENT: re-merging identical updates replaces rows
     * with identical rows — the property [[graft.streaming.Streams.upsertSink]]
     * relies on to make at-least-once `foreachBatch` delivery exactly-once
     * in effect.
@@ -317,41 +330,30 @@ object Layout {
       eventDate: String,
       updates: DataFrame,
       seriesCol: String = "user_id",
-      tsCol: String = "ts"): Unit = {
-    recoverPartition(spark, rootDir, eventDate)
-    val (path, tmpPath, oldPath) = swapPaths(rootDir, eventDate)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path.toString), spark.sparkContext.hadoopConfiguration)
-    val hadLive = fs.exists(path)
-    val merged =
-      if (hadLive) {
-        // schema from one footer, not an inference job per merged date
-        val footers = graft.streaming.Streams.Footers
-        val first = footers.files(fs, path).headOption.getOrElse(
-          throw new IllegalStateException(s"upsert: no parquet file under $path"))
-        val live = spark.read
-          .schema(footers.schema(spark, footers.read(spark, first)))
-          .parquet(path.toString)
-        live
-          .join(
-            broadcast(updates.select(col(seriesCol), col(tsCol))),
-            Seq(seriesCol, tsCol),
-            "left_anti")
-          .unionByName(updates.select(live.columns.toIndexedSeq.map(col): _*))
-      } else updates
-    merged
-      .sortWithinPartitions(col(seriesCol), col(tsCol))
-      .write
-      .mode(SaveMode.Overwrite)
-      .parquet(tmpPath.toString)
-    if (hadLive && !fs.rename(path, oldPath))
-      throw new java.io.IOException(s"upsert: failed to move $path aside")
-    if (!fs.rename(tmpPath, path)) {
-      if (hadLive) fs.rename(oldPath, path) // roll back: stay readable
-      throw new java.io.IOException(s"upsert: failed to install $tmpPath")
+      tsCol: String = "ts"): Unit =
+    swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
+      val merged =
+        if (fs.exists(path)) {
+          // schema from one footer, not an inference job per merged date
+          val footers = graft.streaming.Streams.Footers
+          val first = footers.files(fs, path).headOption.getOrElse(
+            throw new IllegalStateException(s"upsert: no parquet file under $path"))
+          val live = spark.read
+            .schema(footers.schema(spark, footers.read(spark, first)))
+            .parquet(path.toString)
+          live
+            .join(
+              broadcast(updates.select(col(seriesCol), col(tsCol))),
+              Seq(seriesCol, tsCol),
+              "left_anti")
+            .unionByName(updates.select(live.columns.toIndexedSeq.map(col): _*))
+        } else updates
+      merged
+        .sortWithinPartitions(col(seriesCol), col(tsCol))
+        .write
+        .mode(SaveMode.Overwrite)
+        .parquet(tmp)
     }
-    fs.delete(oldPath, true)
-  }
 
   /** R2 over the partitioned layout: the date bounds prune partition
     * directories (PartitionFilters), the series equality + exact time range

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.faults.FaultRules
 import org.apache.parquet.hadoop.Footer
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -557,61 +558,77 @@ object Streams {
       }
   }
 
-  /** One micro-batch of the streaming upsert ([[upsertSink]]), exposed so
-    * a replay is directly testable: dedup the batch by (series, ts) with a
-    * deterministic tie-break — the greatest (non-key column) tuple wins, so
-    * two deliveries of the same conflicting batch resolve identically —
-    * then merge each affected date partition via
-    * [[graft.sources.Layout.upsertPartition]]'s swap discipline.
+  /** One row per (`seriesCol`, `tsCol`) key: the first under `order`. */
+  private def firstPerKey(
+      df: DataFrame,
+      seriesCol: String,
+      tsCol: String,
+      order: Seq[Column]): DataFrame =
+    df.withColumn("_rn",
+        row_number().over(Window.partitionBy(col(seriesCol), col(tsCol)).orderBy(order: _*)))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+
+  /** The in-batch dedup of both upsert tiers: per (series, ts) key the
+    * greatest non-key tuple wins (nulls last), a deterministic tie-break,
+    * so two deliveries of the same conflicting batch resolve identically.
+    * Each winner carries its key's `event_date`.
+    */
+  private def dedupBatch(batch: DataFrame, seriesCol: String, tsCol: String): DataFrame =
+    firstPerKey(batch, seriesCol, tsCol,
+      batch.columns.toIndexedSeq.filterNot(c => c == seriesCol || c == tsCol)
+        .map(col(_).desc_nulls_last))
+      .withColumn("event_date", to_date(col(tsCol)))
+
+  /** Each distinct `event_date` of `winners` with its rows: one job. */
+  private def datesOf(winners: DataFrame): Seq[(String, DataFrame)] =
+    winners.select(col("event_date").cast("string")).distinct().collect()
+      .map(_.getString(0)).toSeq
+      .map(d => d -> winners.filter(
+        if (d == null) col("event_date").isNull else col("event_date") === d))
+
+  /** The per-date fold of both upsert tiers: merge each date's updates
+    * (rows with an `event_date` column) into its partition through
+    * [[graft.sources.Layout.upsertPartition]]'s swap, dates ascending.
+    * A null timestamp yields a null event_date (to_date(null)); such rows
+    * land in the Hive default partition, last, so they survive the fold
+    * instead of NPE-ing the sort or vanishing from every date filter.
+    * Spark reads that directory back as a null date value, so
+    * [[upsertRead]] and plain readers both see the row again.
     *
-    * The per-date loop is DRIVER-side but bounded by distinct event DATES
-    * in one micro-batch (a handful: the current day plus late corrections),
-    * not by rows; each iteration launches one distributed merge job.
+    * The loop is DRIVER-side but bounded by distinct event DATES (a
+    * handful per micro-batch: the current day plus late corrections), not
+    * by rows; each iteration launches one distributed merge job.
+    */
+  private def foldDates(
+      s: SparkSession,
+      rootDir: String,
+      byDate: Seq[(String, DataFrame)],
+      seriesCol: String,
+      tsCol: String): Unit =
+    byDate.sortBy { case (d, _) => (d == null, d) }.foreach { case (d, updates) =>
+      graft.sources.Layout.upsertPartition(
+        s,
+        rootDir,
+        Option(d).getOrElse("__HIVE_DEFAULT_PARTITION__"),
+        updates.drop("event_date"),
+        seriesCol,
+        tsCol)
+    }
+
+  /** One micro-batch of the streaming upsert ([[upsertSink]]), exposed so
+    * a replay is directly testable: [[dedupBatch]], then [[foldDates]]
+    * over the batch's distinct dates.
     */
   def upsertBatch(
       batch: DataFrame,
       rootDir: String,
       seriesCol: String = "timeseries_id",
       tsCol: String = "timestamp"): Unit = {
-    import org.apache.spark.sql.expressions.Window
     if (batch.isEmpty) return
-    val others = batch.columns.filterNot(c => c == seriesCol || c == tsCol)
-    val w = Window
-      .partitionBy(col(seriesCol), col(tsCol))
-      .orderBy(others.toIndexedSeq.map(c => col(c).desc_nulls_last): _*)
-    val deduped = batch
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("event_date", to_date(col(tsCol)))
-      .persist()
-    try {
-      val dates = deduped
-        .select(col("event_date").cast("string"))
-        .distinct()
-        .collect()
-        .map(_.getString(0))
-      // null timestamp -> null event_date: land in the Hive default
-      // partition (read back as a null date), matching the delta tier's
-      // compaction so both tiers stay bit-equal on null-ts rows
-      dates.filter(_ != null).sorted.foreach { d =>
-        graft.sources.Layout.upsertPartition(
-          batch.sparkSession,
-          rootDir,
-          d,
-          deduped.filter(col("event_date") === d).drop("event_date"),
-          seriesCol,
-          tsCol)
-      }
-      if (dates.contains(null))
-        graft.sources.Layout.upsertPartition(
-          batch.sparkSession,
-          rootDir,
-          "__HIVE_DEFAULT_PARTITION__",
-          deduped.filter(col("event_date").isNull).drop("event_date"),
-          seriesCol,
-          tsCol)
-    } finally deduped.unpersist()
+    val deduped = dedupBatch(batch, seriesCol, tsCol).persist()
+    try foldDates(batch.sparkSession, rootDir, datesOf(deduped), seriesCol, tsCol)
+    finally deduped.unpersist()
   }
 
   /** Exactly-once-EFFECT streaming upsert into the day-partitioned parquet
@@ -623,9 +640,10 @@ object Streams {
     * what makes the sink exactly-once in effect is that the merge is
     * IDEMPOTENT ([[upsertBatch]]: deterministic in-batch tie-break +
     * key-replace semantics — replaying batch N rewrites the partitions to
-    * byte-identical contents). Crash-safety inside one merge comes from the
-    * compactPartition swap invariant (a complete copy always exists;
-    * `recoverPartition` heals mid-swap crashes on the next attempt).
+    * byte-identical contents). Crash-safety inside one merge comes from
+    * the partition swap of [[graft.sources.Layout.upsertPartition]] (a
+    * complete copy always exists; `recoverPartition` heals mid-swap
+    * crashes on the next attempt).
     *
     * Caller starts the returned writer (`.start()`), same contract as
     * [[ingestFiles]]. StreamingSpec asserts update-overrides-append, replay
@@ -658,14 +676,16 @@ object Streams {
   // store is rewritten once per K batches instead of once per batch.
   //
   // Semantics are IDENTICAL to the direct tier: within a batch the
-  // greatest-tuple row wins (same dedup), across batches the later batch
-  // wins (exactly what serial [[upsertBatch]] merges produce), so a
-  // drained-and-compacted delta store is byte-identical to the direct
-  // sink's on the same batches (pinned in StreamingSpec).
+  // greatest-tuple row wins ([[dedupBatch]], shared), across batches the
+  // later batch wins (exactly what serial [[upsertBatch]] merges produce),
+  // and both tiers fold with [[foldDates]], so a drained-and-compacted
+  // delta store is byte-identical to the direct sink's on the same
+  // batches (pinned in StreamingSpec).
   //
-  // Exactly-once in effect, the [[sketchMvBatch]] layout discipline: a
-  // replayed batch OVERWRITES its own `batch=<id>` directory whole. Crash
-  // safety inside a compaction: winners are folded per-date via
+  // Exactly-once in effect: a batch lands through [[landBatch]], the one
+  // per-batch writer it shares with the MVs, so a replay replaces its
+  // `batch=<id>` directory whole and a failed replay leaves it as it was.
+  // Crash safety inside a compaction: winners are folded per-date via
   // [[graft.sources.Layout.upsertPartition]]'s swap invariant (re-folding
   // the same winner set is a key-replace no-op), and the folded delta
   // directories are deleted in ASCENDING batch order — a crash mid-delete
@@ -818,18 +838,11 @@ object Streams {
       all: DataFrame,
       seriesCol: String,
       tsCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val others = all.columns.filterNot(c =>
       c == seriesCol || c == tsCol || c == "batch" || c == "event_date")
-    val w = Window
-      .partitionBy(col(seriesCol), col(tsCol))
-      .orderBy(
-        (col("batch").cast("long").desc +:
-          others.toIndexedSeq.map(c => col(c).desc_nulls_last)): _*)
-    all
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "batch")
+    firstPerKey(all, seriesCol, tsCol,
+      col("batch").cast("long").desc +: others.toIndexedSeq.map(c => col(c).desc_nulls_last))
+      .drop("batch")
   }
 
   /** Path, length and modification time of each pending data file: what
@@ -940,10 +953,40 @@ object Streams {
     }
   }
 
-  /** One micro-batch of the delta-tier upsert ([[upsertDeltaSink]]): dedup
-    * the batch with [[upsertBatch]]'s discipline, land it O(batch) in its
-    * own `_delta/batch=<id>` directory (overwritten whole — replay
-    * idempotence), then compact if `compactEvery` deltas have accumulated.
+  /** The one writer of a per-batch directory, `dir/<name>=<batchId>`:
+    * every upsert delta (`_delta/batch=N`) and every MV partial
+    * (`batch_id=N`) lands here. A replayed batch REPLACES its directory
+    * whole — the layout that makes an at-least-once `foreachBatch` sink
+    * exactly-once in effect — and the replacement is atomic: `df` is
+    * written to a dot-prefixed tmp dir (hidden from parquet readers and
+    * from [[deltaDirs]] alike), then the old copy is deleted and the tmp
+    * dir renamed in, which is atomic on every FileSystem this engine
+    * targets (HDFS, and the local FS; object stores would use their
+    * committer at this layer). A plain `mode(Overwrite)` on the directory
+    * itself deletes it before the job runs, so a replay whose job fails
+    * would leave the batch empty (a one-batch MV then fails schema
+    * inference). A failed write leaves the previous copy untouched.
+    * Returns the landed directory.
+    */
+  private def landBatch(
+      df: DataFrame,
+      dir: String,
+      name: String,
+      batchId: Long): org.apache.hadoop.fs.Path = {
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp_$name=$batchId")
+    val dst = new org.apache.hadoop.fs.Path(s"$dir/$name=$batchId")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"batch landing rename failed: $tmp -> $dst")
+    dst
+  }
+
+  /** One micro-batch of the delta-tier upsert ([[upsertDeltaSink]]):
+    * [[dedupBatch]], land the winners O(batch) with [[landBatch]] in the
+    * batch's own `_delta/batch=<id>` directory, then compact if
+    * `compactEvery` deltas have accumulated.
     *
     * When the process holds the store's [[Resolved]] set, the landing
     * extends it with the landed rows, read back in one O(batch) job, if
@@ -960,39 +1003,13 @@ object Streams {
       seriesCol: String = "timeseries_id",
       tsCol: String = "timestamp",
       compactEvery: Int = 8): Unit = {
-    import org.apache.spark.sql.expressions.Window
     if (batch.isEmpty) return
     val s = batch.sparkSession
     val prior = Resolved.get(s, rootDir)
       .map(r => r -> signature(deltaFiles(s, deltaDirs(s, rootDir))))
     Resolved.drop(s, rootDir)
-    val others = batch.columns.filterNot(c => c == seriesCol || c == tsCol)
-    val w = Window
-      .partitionBy(col(seriesCol), col(tsCol))
-      .orderBy(others.toIndexedSeq.map(c => col(c).desc_nulls_last): _*)
-    // Atomic landing (ADVICE r16): a plain overwrite of batch=<id> exposes
-    // a half-written directory to upsertRead/compactUpsertDeltas if the
-    // writer crashes mid-write (until streaming replay overwrites it).
-    // Write to a dot-prefixed tmp dir — hidden from parquet readers and
-    // from deltaDirs' batch= filter alike — then swap in with a rename,
-    // which is atomic on every FileSystem this engine targets (HDFS, and
-    // the local FS the harness runs on; object stores would use their
-    // committer at this layer). Replay idempotence is preserved: the
-    // pre-rename delete clears any previous copy of the same batch.
-    val tmp = new org.apache.hadoop.fs.Path(s"$rootDir/_delta/.tmp_batch=$batchId")
-    val dst = new org.apache.hadoop.fs.Path(s"$rootDir/_delta/batch=$batchId")
-    batch
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("event_date", to_date(col(tsCol)))
-      .write
-      .mode("overwrite")
-      .parquet(tmp.toString)
+    val dst = landBatch(dedupBatch(batch, seriesCol, tsCol), s"$rootDir/_delta", "batch", batchId)
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"delta landing rename failed: $tmp -> $dst")
     prior.foreach { case (r, before) =>
       if (r.sig == before && batchId > r.maxBatch && r.seriesCol == seriesCol && r.tsCol == tsCol) {
         import scala.jdk.CollectionConverters._
@@ -1019,9 +1036,7 @@ object Streams {
 
   /** Fold every pending delta into the day partitions (see the tier doc
     * above for the crash-safety argument); returns the number of delta
-    * directories folded. Driver loop bounded by distinct event DATES in
-    * the pending set, same as [[upsertBatch]]; each iteration is one
-    * distributed merge via the swap discipline.
+    * directories folded, with [[foldDates]] as in [[upsertBatch]].
     *
     * When the process's [[Resolved]] set matches the pending files, the
     * dates come from its rows and each date's updates are a local
@@ -1041,29 +1056,9 @@ object Streams {
     val persisted = if (resolved.isDefined) None else Some(
       deltaWinners(deltaStore(s, rootDir, Footers.read(s, files.head)), seriesCol, tsCol)
         .persist())
-    try {
-      val byDate = resolved.map(_.byDate(s)).getOrElse {
-        val winners = persisted.get
-        winners.select(col("event_date").cast("string")).distinct().collect()
-          .map(_.getString(0)).toSeq
-          .map(d => d -> winners.filter(
-            if (d == null) col("event_date").isNull else col("event_date") === d))
-      }
-      // A null timestamp yields a null event_date (to_date(null)); such
-      // rows land in the Hive default partition so they survive the fold
-      // instead of NPE-ing the sort / vanishing from every date filter.
-      // Spark reads that directory back as a null date value, so
-      // upsertRead and plain readers both see the row again.
-      byDate.sortBy { case (d, _) => (d == null, d) }.foreach { case (d, updates) =>
-        graft.sources.Layout.upsertPartition(
-          s,
-          rootDir,
-          Option(d).getOrElse("__HIVE_DEFAULT_PARTITION__"),
-          updates.drop("event_date"),
-          seriesCol,
-          tsCol)
-      }
-    } finally persisted.foreach(_.unpersist())
+    try foldDates(s, rootDir, resolved.map(_.byDate(s)).getOrElse(datesOf(persisted.get)),
+      seriesCol, tsCol)
+    finally persisted.foreach(_.unpersist())
     Resolved.drop(s, rootDir)
     val fs = new org.apache.hadoop.fs.Path(rootDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1201,12 +1196,11 @@ object Streams {
 
   /** One micro-batch of the streaming quantile-sketch MV ([[sketchMvSink]]),
     * exposed for direct replay testing: aggregate the batch into per
-    * (series, day) KLL partials and land them in this batch's OWN
-    * partition directory (`batch_id=N`), overwritten whole. Idempotence
-    * comes from the layout, not from the sketch: KLL merge is NOT
-    * idempotent (re-merging the same values doubles their weight), so a
-    * replayed batch must REPLACE its previous partials rather than add to
-    * them — same rows in, same directory out, byte-equal effect.
+    * (series, day) KLL partials and land them with [[landBatch]] in this
+    * batch's own `batch_id=N` directory. Idempotence comes from the
+    * layout, not from the sketch: KLL merge is NOT idempotent (re-merging
+    * the same values doubles their weight), so a replayed batch must
+    * REPLACE its previous partials rather than add to them.
     */
   def sketchMvBatch(
       batch: DataFrame,
@@ -1214,13 +1208,12 @@ object Streams {
       batchId: Long,
       k: Int = 16384): Unit = {
     if (batch.isEmpty) return
-    batch
-      .withColumn("day", to_date(col("timestamp")))
-      .groupBy(col("timeseries_id"), col("day"))
-      .agg(kll_sketch_agg_double(col("value"), k).as("sketch"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$mvDir/batch_id=$batchId")
+    landBatch(
+      batch
+        .withColumn("day", to_date(col("timestamp")))
+        .groupBy(col("timeseries_id"), col("day"))
+        .agg(kll_sketch_agg_double(col("value"), k).as("sketch")),
+      mvDir, "batch_id", batchId)
   }
 
   /** Streaming maintenance of the mergeable quantile-sketch MV — the
@@ -1231,8 +1224,8 @@ object Streams {
     * the reference's periodic-recompute loop (`main.rs:234-240`) inverted:
     * the scan work is amortized into ingest, and a p99-over-a-week at
     * 100 TB reads (series x days x batches) sketch rows, not events.
-    * Exactly-once in effect: partials land per-batch-directory
-    * ([[sketchMvBatch]]), so at-least-once replay overwrites rather than
+    * Exactly-once in effect: partials land per batch directory
+    * ([[sketchMvBatch]]), so at-least-once replay replaces rather than
     * double-merges. StreamingSpec asserts stream-MV == direct batch sketch
     * on the same rows, replay idempotence, and day-range pruning.
     */
@@ -1275,21 +1268,18 @@ object Streams {
   // ---- Streaming count-MV + data-mix drift monitor ----
 
   /** One micro-batch of the daily count MV ([[countMvSink]]): per
-    * (series, day) row counts landed in this batch's OWN `batch_id=N`
-    * directory, overwritten whole. Counts merge by SUM across stored
-    * partials (associative and, thanks to the per-batch-directory
-    * overwrite, exactly-once in effect under replay — the simplest
-    * instance of the [[sketchMvBatch]] layout discipline).
+    * (series, day) row counts landed with [[landBatch]]. Counts merge by
+    * SUM across stored partials, so the per-batch replacement makes
+    * replay exactly-once in effect.
     */
   def countMvBatch(batch: DataFrame, mvDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch
-      .withColumn("day", to_date(col("timestamp")))
-      .groupBy(col("timeseries_id"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$mvDir/batch_id=$batchId")
+    landBatch(
+      batch
+        .withColumn("day", to_date(col("timestamp")))
+        .groupBy(col("timeseries_id"), col("day"))
+        .agg(count(lit(1)).as("n")),
+      mvDir, "batch_id", batchId)
   }
 
   /** Streaming maintenance of the per-(series, day) count MV — the input
@@ -1348,10 +1338,10 @@ object Streams {
 
   /** One micro-batch of the heavy-hitters MV ([[hhMvSink]]): the batch's
     * series ids fold into ONE Misra-Gries summary row (bounded counter
-    * map + total n) per day, landed in this batch's own `batch_id=N`
-    * directory — the third classic mergeable summary in the MV family
-    * (counts: [[countMvBatch]]; quantiles: [[sketchMvBatch]]; frequent
-    * items: here). Replay overwrites the directory with a VALID summary
+    * map + total n) per day, landed with [[landBatch]] — the third
+    * classic mergeable summary in the MV family (counts:
+    * [[countMvBatch]]; quantiles: [[sketchMvBatch]]; frequent items:
+    * here). Replay replaces the directory with a VALID summary
     * of the same rows; within MG's exact regime (k >= distinct items per
     * batch-day) that summary is the exact count map regardless of row
     * order, beyond it the MG guarantee — est in [f - n/(k+1), f] — is
@@ -1366,15 +1356,14 @@ object Streams {
     val mgUdaf = org.apache.spark.sql.functions.udaf(
       new graft.functions.HeavyHitters.MisraGries(k),
       org.apache.spark.sql.Encoders.STRING)
-    batch
-      .withColumn("day", to_date(col("timestamp")))
-      .groupBy(col("day"))
-      .agg(
-        mgUdaf(col("timeseries_id")).as("hh"),
-        count(lit(1)).as("n"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$mvDir/batch_id=$batchId")
+    landBatch(
+      batch
+        .withColumn("day", to_date(col("timestamp")))
+        .groupBy(col("day"))
+        .agg(
+          mgUdaf(col("timeseries_id")).as("hh"),
+          count(lit(1)).as("n")),
+      mvDir, "batch_id", batchId)
   }
 
   /** Streaming maintenance of the Misra-Gries heavy-hitters MV. Caller
@@ -1422,30 +1411,28 @@ object Streams {
 
   /** One micro-batch of the Count-Min frequency MV (`q_agg_cm_mv`'s
     * streaming maintenance path): the batch's series ids hash into
-    * depth×width = 4×512 count cells per day, landed in this batch's own
-    * `batch_id=N` directory. Cells merge by SUM across stored partials
-    * (each cell is an independent count — Cormode & Muthukrishnan 2005),
-    * so the per-batch-directory overwrite gives replay the exactly-once
-    * effect of the [[countMvBatch]] layout discipline, and unlike the MG
+    * depth×width = 4×512 count cells per day, landed with [[landBatch]].
+    * Cells merge by SUM across stored partials (each cell is an
+    * independent count — Cormode & Muthukrishnan 2005), so replay is
+    * exactly-once in effect as for [[countMvBatch]], and unlike the MG
     * summary the replayed bytes are IDENTICAL regardless of row order.
     * The bucket hash is [[graft.functions.Md5Prefix64]] — deterministic
     * and engine-portable, so any md5-capable engine can read the MV.
     */
   def cmMvBatch(batch: DataFrame, mvDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch
-      .withColumn("day", to_date(col("timestamp")))
-      .withColumn("dep", explode(expr("sequence(0, 3)")))
-      .groupBy(
-        col("day"),
-        col("dep"),
-        (graft.functions.Md5Prefix64.md5Prefix64(concat(
-          col("dep").cast("string"), lit(":"), col("timeseries_id"))) % 512)
-          .as("bkt"))
-      .agg(count(lit(1)).as("cnt"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$mvDir/batch_id=$batchId")
+    landBatch(
+      batch
+        .withColumn("day", to_date(col("timestamp")))
+        .withColumn("dep", explode(expr("sequence(0, 3)")))
+        .groupBy(
+          col("day"),
+          col("dep"),
+          (graft.functions.Md5Prefix64.md5Prefix64(concat(
+            col("dep").cast("string"), lit(":"), col("timeseries_id"))) % 512)
+            .as("bkt"))
+        .agg(count(lit(1)).as("cnt")),
+      mvDir, "batch_id", batchId)
   }
 
   /** Streaming maintenance of the Count-Min frequency MV. Caller starts
@@ -1550,12 +1537,11 @@ object Streams {
     * with the highest agreement, ties to the lowest doc_id — a
     * min(struct) over integers, order-independent at any parallelism.
     *
-    * Exactly-once in effect, the [[sketchMvBatch]] layout discipline:
-    * candidate generation reads ONLY batches < `batchId` from the store,
-    * and both outputs land in this batch's OWN `batch_id=N` directories
-    * (`sigs/` — survivors' signatures, the accumulating LSH index;
-    * `decisions/` — (doc_id, dup_of, agree) drops), overwritten whole, so
-    * an at-least-once replay rewrites byte-identical content instead of
+    * Exactly-once in effect: candidate generation reads ONLY batches
+    * < `batchId` from the store, and both outputs land with
+    * [[landBatch]] (`sigs/` — survivors' signatures, the accumulating LSH
+    * index; `decisions/` — (doc_id, dup_of, agree) drops), so an
+    * at-least-once replay rewrites byte-identical content instead of
     * re-matching against its own previous attempt.
     *
     * Scale: the stored index is signatures (256 B/doc) + band buckets
@@ -1614,16 +1600,13 @@ object Streams {
         col("m.dup_of").as("dup_of"),
         (lit(MinHashPerms.toLong) - col("m.d")).as("agree"))
       .localCheckpoint()
-    decisions.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/decisions/batch_id=$batchId")
-    batch
-      .select(col("doc_id"))
-      .join(decisions.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .join(sigs, Seq("doc_id"), "left")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/sigs/batch_id=$batchId")
+    landBatch(decisions, s"$storeDir/decisions", "batch_id", batchId)
+    landBatch(
+      batch
+        .select(col("doc_id"))
+        .join(decisions.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .join(sigs, Seq("doc_id"), "left"),
+      s"$storeDir/sigs", "batch_id", batchId)
   }
 
   /** Streaming incremental near-dup dedup — the streaming form of batch

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Streaming operators verified by batch equivalence (SURVEY.md §5.2.4):
   * each group-J transform run over a MemoryStream (complete/append output to
@@ -1323,6 +1324,96 @@ class StreamingSpec extends SparkSpec {
     foldDistributed(ref, twin)
     assert(partRows(out) === partRows(twin))
     assert(Streams.Resolved.get(spark, out).exists(_.rows.isEmpty))
+  }
+
+  /** Name and length of every file under `dir`, recursively. */
+  private def filesUnder(dir: String): Set[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.size(f)).toSet
+  }
+
+  /** A copy of `batch` whose `column` raises an error when a job reads it.
+    * The exchange keeps the optimizer from evaluating the column on the
+    * driver, as it would over a local relation. */
+  private def failingAt(batch: org.apache.spark.sql.DataFrame, column: String) =
+    batch.repartition(1).withColumn(column,
+      raise_error(lit("replay failed")).cast(batch.schema(column).dataType))
+
+  test("a replayed MV batch whose job fails leaves the stored partials and the reader as they were") {
+    val mv = java.nio.file.Files.createTempDirectory("graft_mv_fail").toString
+    def t(s: String, id: String) = Tele("S", ts(s), 1.0, None, id)
+    val b0 = Seq(t("2024-08-25 10:00:00", "id-a"), t("2024-08-26 10:00:00", "id-b"))
+    val b1 = Seq(t("2024-08-27 10:00:00", "id-a"), t("2024-08-28 10:00:00", "id-b"))
+    Streams.countMvBatch(b0.toDF(), mv, batchId = 0L)
+    Streams.countMvBatch(b1.toDF(), mv, batchId = 1L)
+    def read() = Streams.mvMixDrift(spark, mv).collect().toSeq
+    val (stored, answer) = (filesUnder(s"$mv/batch_id=1"), read())
+    assert(answer.nonEmpty)
+    intercept[Exception](Streams.countMvBatch(failingAt(b1.toDF(), "timeseries_id"), mv, batchId = 1L))
+    assert(filesUnder(s"$mv/batch_id=1") === stored)
+    assert(read() === answer, "a failed replay must not change what the MV reads")
+  }
+
+  test("a re-landed delta batch whose job fails leaves _delta/batch=N and upsertRead as they were") {
+    val out = java.nio.file.Files.createTempDirectory("graft_delta_fail").toString
+    def t(s: String, v: Double, id: String) = Tele("S", ts(s), v, None, id)
+    val b0 = Seq(t("2024-08-28 12:00:00", 1.0, "id-a"), t("2024-08-29 09:00:00", 5.0, "id-b"))
+    val b1 = Seq(t("2024-08-28 12:00:00", 2.0, "id-a"))
+    Streams.upsertDeltaBatch(b0.toDF(), out, batchId = 0, compactEvery = 99)
+    Streams.upsertDeltaBatch(b1.toDF(), out, batchId = 1, compactEvery = 99)
+    def read() = Streams.upsertRead(spark, out)
+      .select("timeseries_id", "timestamp", "value").collect().toSet
+    val (stored, answer) = (filesUnder(s"$out/_delta/batch=1"), read())
+    assert(answer.map(_.getDouble(2)) === Set(2.0, 5.0))
+    intercept[Exception](
+      Streams.upsertDeltaBatch(failingAt(b1.toDF(), "value"), out, batchId = 1, compactEvery = 99))
+    assert(filesUnder(s"$out/_delta/batch=1") === stored)
+    assert(read() === answer, "a failed re-landing must not change what upsertRead returns")
+  }
+
+  test("one write discipline: one batch landing, one per-date fold, one partition swap, one key dedup") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 40, s"premise: the main sources are under $root")
+    val streams = root.resolve("graft/streaming/Streams.scala")
+    val layout = root.resolve("graft/sources/Layout.scala")
+    def lines(p: Path) = Files.readAllLines(p).asScala.toIndexedSeq
+    /** Line numbers of the member `name` of the object in `p`: its `def`
+      * line up to the next line at the members' indentation. */
+    def body(p: Path, name: String): Set[Int] = {
+      val ls = lines(p)
+      val start = ls.indexWhere(_.matches(s"  (private )?def $name[(\\[].*"))
+      assert(start >= 0, s"premise: $p defines $name")
+      val end = ls.indexWhere(_.matches("  \\S.*"), start + 1)
+      (start until (if (end < 0) ls.length else end)).toSet
+    }
+    /** Lines of `files` matching `re`, outside the members `allowed` of `home`. */
+    def strays(files: Seq[Path], re: String, home: Path, allowed: String*): Seq[String] = {
+      val inside = allowed.flatMap(body(home, _)).toSet
+      files.flatMap { p =>
+        lines(p).zipWithIndex.collect {
+          case (l, i) if re.r.findFirstIn(l).isDefined && !(p == home && inside(i)) =>
+            s"$p:${i + 1}: ${l.trim}"
+        }
+      }
+    }
+    // a per-batch directory is written only by the landing helper
+    assert(strays(files, "=\\$\\{?batchId\\b|\\b(batch|batch_id)=\\$", streams, "landBatch") === Nil)
+    assert(strays(Seq(streams), "\\.write\\b|\\.rename\\(", streams, "landBatch") === Nil)
+    // Layout renames only to swap a partition and to heal a crashed swap
+    assert(strays(Seq(layout), "\\.rename\\(", layout, "swapPartition", "recoverPartition") === Nil)
+    assert(strays(Seq(layout), "swapPartition\\(", layout,
+      "swapPartition", "compactPartition", "upsertPartition") === Nil)
+    // one per-date fold and one distinct-date helper
+    assert(strays(files.filter(_ != layout), "upsertPartition\\(", streams, "foldDates") === Nil)
+    assert(strays(Seq(streams), "col\\(\"event_date\"\\)\\.cast\\(", streams, "datesOf") === Nil)
+    // one (series, ts) window; the in-batch rule in one place
+    assert(strays(Seq(streams), "row_number\\(", streams, "firstPerKey") === Nil)
+    assert(strays(Seq(streams), "firstPerKey\\(", streams,
+      "firstPerKey", "dedupBatch", "deltaWinners") === Nil)
   }
 
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
