@@ -116,9 +116,11 @@ object UpsertReadBench {
     // the REALISTIC backlog regime (r17): late corrections touch a handful
     // of dates, not every partition — land 4 pending deltas confined to
     // the two most recent event dates and re-price the merge-on-read.
-    // The date-pruned anti-join (Streams.upsertRead) should collapse the
-    // tax to the touched partitions + pending volume; the merged row
-    // count is unchanged (the corrections re-state existing keys).
+    // They fit this process's resolved set, so the read is one scan
+    // anti-joined by a broadcast against it (Streams.upsertRead); on the
+    // window plan the date split keeps the untouched partitions out of
+    // the anti-join. The merged row count is unchanged (the corrections
+    // re-state existing keys).
     locally {
       val locDates = batched
         .select(to_date(col("timestamp")).as("d")).distinct()

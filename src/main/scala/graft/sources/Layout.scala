@@ -357,13 +357,15 @@ object Layout {
 
   /** R2 over the partitioned layout: the date bounds prune partition
     * directories (PartitionFilters), the series equality + exact time range
-    * prune row groups (PushedFilters). */
+    * prune row groups (PushedFilters). Installs [[ParamLiterals]] into
+    * `spark`, so a warm query with a new key or range compiles nothing. */
   def rangeQuery(
       spark: SparkSession,
       dir: String,
       seriesKey: Long,
       startTs: String,
-      endTs: String): DataFrame =
+      endTs: String): DataFrame = {
+    ParamLiterals.install(spark)
     spark.read
       .parquet(dir)
       .filter(
@@ -371,4 +373,5 @@ object Layout {
           col("user_id") === seriesKey &&
           col("ts").between(
             lit(startTs).cast("timestamp"), lit(endTs).cast("timestamp")))
+  }
 }

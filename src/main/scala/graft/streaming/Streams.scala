@@ -1077,24 +1077,35 @@ object Streams {
     * every batch had been merged eagerly. Plain
     * `spark.read.parquet(rootDir)` remains valid for compacted-only reads.
     *
-    * Building the view launches no Spark job: both schemas come from one
-    * parquet footer each and the touched dates from the pending files'
-    * footers ([[Footers]]), all read on the driver. Only the caller's
-    * action runs jobs. (Past
+    * Building the view launches no Spark job: the compacted schema comes
+    * from one parquet footer, read on the driver ([[Footers]]). Only the
+    * caller's action runs jobs. (Past
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32
     * partition directories, Spark's own file index lists with one job.)
+    * The read installs [[graft.sources.ParamLiterals]] into `s`, so the
+    * caller's series id and time bounds stay out of the generated code of
+    * the filter over each scan: a warm read with new bounds compiles
+    * nothing there.
     *
     * Pending winners, two plans. When the process's [[Resolved]] set
     * was built from exactly the pending files listed here, the winners are
-    * its local relation in `s`: the caller's filters fold into it at
-    * optimization (no generated code for that branch) and the anti-join
-    * broadcasts it. Otherwise (another process landed, a replay, a crash,
-    * a pending set past [[Resolved.fits]]) the winners are
-    * [[deltaWinners]] over every pending delta, a window that each read
-    * plans twice, once per anti-join side. Both build with no Spark job.
+    * its local relation in `s` and the view is one scan of the compacted
+    * store, anti-joined against the set and unioned with it. No pending
+    * footer is read: the set's signature needs only the listing. The
+    * caller's filters fold into the set at optimization (no generated
+    * code for that branch) and the anti-join broadcasts it; a filter that
+    * excludes every winner empties the set, and the optimizer
+    * (`PropagateEmptyRelation`) leaves the compacted read's one scan.
+    * Otherwise (another process landed, a replay, a crash, a pending set
+    * past [[Resolved.fits]]) the winners are [[deltaWinners]] over every
+    * pending delta, a window that each read plans twice, once per
+    * anti-join side, with the schema and the touched dates taken from the
+    * pending footers. Both build with no Spark job.
     *
-    * Date-pruned anti-join (r17; BENCH_upsertread_sf100.json found the
-    * naive form paying 8.8x the plain read at a worst-case backlog): a
+    * Date-pruned anti-join, window plan only (r17;
+    * BENCH_upsertread_sf100.json found the naive form paying 8.8x the
+    * plain read at a worst-case backlog; its anti-join shuffles, where the
+    * set's broadcasts): a
     * pending delta row can only replace a stored row on its OWN
     * `event_date` — both sides' partition date is `to_date` of the same
     * (`seriesCol`,`tsCol`) key's timestamp, so equal keys imply equal
@@ -1121,25 +1132,30 @@ object Streams {
       rootDir: String,
       seriesCol: String = "timeseries_id",
       tsCol: String = "timestamp"): DataFrame = {
+    graft.sources.ParamLiterals.install(s)
     val files = deltaFiles(s, deltaDirs(s, rootDir))
-    val footers = files.map(Footers.read(s, _))
     val live = liveStore(s, rootDir)
-    if (footers.isEmpty)
+    if (files.isEmpty)
       return live.map(_._1).getOrElse(
         throw new IllegalStateException(s"no upsert store at $rootDir"))
-    val winners = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
-      .map(_.winners(s))
+    val set = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
+    // the set's plan reads no pending footer: its signature is the listing
+    val footers = if (set.isDefined) Seq.empty else files.map(Footers.read(s, _))
+    val winners = set.map(_.winners(s))
       .getOrElse(deltaWinners(deltaStore(s, rootDir, footers.head), seriesCol, tsCol))
     live match {
       case None => winners
       case Some((lv, storeDates)) =>
-        def antiMerged(in: DataFrame): DataFrame = in
-          .join(
-            winners.select(col(seriesCol), col(tsCol)),
-            Seq(seriesCol, tsCol),
-            "left_anti")
-          .unionByName(winners.select(lv.columns.toIndexedSeq.map(col): _*))
-        Footers.dateRanges(footers, "event_date") match {
+        // in `in`'s column order, where the using-join puts the keys first
+        def antiMerged(in: DataFrame): DataFrame = {
+          val cols = in.columns.toIndexedSeq.map(col)
+          in.join(winners.select(col(seriesCol), col(tsCol)), Seq(seriesCol, tsCol), "left_anti")
+            .select(cols: _*)
+            .unionByName(winners.select(cols: _*))
+        }
+        // the date split is the window plan's alone: the set's anti-join
+        // broadcasts, so its plan stays one scan
+        (if (set.isDefined) None else Footers.dateRanges(footers, "event_date")) match {
           case None => antiMerged(lv)
           case Some(ranges) =>
             // when the pending set touches most of the store (backfill),

@@ -254,6 +254,34 @@ class LayoutSpec extends SparkSpec {
     assert(got.toSeq === want.toSeq)
   }
 
+  test("a warm rangeQuery with a new key and range compiles nothing and returns the brute-force rows") {
+    val picks = U.events(spark, sfDir)
+      .orderBy("ts", "user_id", "event_id")
+      .select(col("user_id"), to_date(col("ts")).as("day"))
+      .collect()
+    // a key and a two-day window around each of four readings spread over the corpus
+    val reads = (1 to 4).map { i =>
+      val r = picks(i * picks.length / 5)
+      val day = r.getDate(1).toLocalDate
+      (r.getLong(0), s"$day 00:00:00", s"${day.plusDays(1)} 23:59:59")
+    }
+    def want(key: Long, from: String, to: String) = U.events(spark, sfDir)
+      .filter(col("user_id") === key &&
+        col("ts").between(lit(from).cast("timestamp"), lit(to).cast("timestamp")))
+      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    def got(key: Long, from: String, to: String) =
+      Layout.rangeQuery(spark, outDir, key, from, to)
+        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    val (k0, from0, to0) = reads.head
+    assert(got(k0, from0, to0) === want(k0, from0, to0))
+    reads.tail.foreach { case (key, from, to) =>
+      val expected = want(key, from, to)
+      val (rows, n) = compilesDuring(got(key, from, to))
+      assert(rows.nonEmpty && rows === expected, s"$key [$from, $to]")
+      assert(n === 0, s"a warm rangeQuery of $key [$from, $to] compiled $n classes")
+    }
+  }
+
   test("zValue: Morton interleave is bit-exact against a driver-side reference") {
     import spark.implicits._
     // the driver-side twin IS ZCurve.z — pin codegen'd and driver math together

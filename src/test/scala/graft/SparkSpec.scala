@@ -27,6 +27,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Janino compiles (Spark's code-cache misses) while `body` runs, on the
+    * driver and in the tasks alike. */
+  def compilesDuring[T](body: => T): (T, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = h.getCount
+    val r = body
+    (r, h.getCount - c0)
+  }
+
   /** Run `body` with AQE (and optionally auto-broadcast) off so physical
     * plan shapes are fully visible and strategy choices are forced. */
   def withPlanShapeConf[T](disableBroadcast: Boolean = false)(body: => T): T = {

@@ -819,12 +819,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsertRead: both anti-join plans — date-pruned split and the all-touched single-scan fallback — resolve identically") {
-    // The r17 date-pruned read has two branches (Streams.upsertRead): a
-    // touched/untouched partition split when at least half the store's
-    // partitions can skip the exchange, and the single-scan fallback when
-    // the pending set touches most dates. The delta-sink test above
-    // exercises the split (its pending delta leaves 08-29 untouched);
-    // this one pins the FALLBACK and that both resolve like eager merges.
+    // The r17 date-pruned read has two branches on the window plan
+    // (Streams.upsertRead): a touched/untouched partition split when at
+    // least half the store's partitions can skip the exchange, and the
+    // single-scan fallback when the pending set touches most dates. This
+    // one pins both, with the process's resolved set set aside (on the
+    // set's path the view is always one scan), and that both resolve like
+    // eager merges.
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_upread").toString
     def t(s: String, v: Double, id: String) = Tele("S", ts(s), v, None, id)
@@ -847,7 +848,8 @@ class StreamingSpec extends SparkSpec {
       t("2024-08-30 10:00:00", 30.0, "id-b"),
       t("2024-08-31 10:00:00", 40.0, "id-b"))
     Streams.upsertDeltaBatch(all.toDF(), out, batchId = 1, compactEvery = 99)
-    assert(snap(Streams.upsertRead(spark, out)) === Set(
+    assert(liveScans(distributedRead(out)) === 1, "premise: the single-scan fallback plans")
+    assert(snap(distributedRead(out)) === Set(
       ("id-a", ts("2024-08-28 10:00:00"), 10.0),
       ("id-a", ts("2024-08-29 10:00:00"), 20.0),
       ("id-b", ts("2024-08-30 10:00:00"), 30.0),
@@ -858,7 +860,8 @@ class StreamingSpec extends SparkSpec {
     // untouched partitions pass through, the touched one anti-joins
     val one = Seq(t("2024-08-30 10:00:00", 99.0, "id-b"))
     Streams.upsertDeltaBatch(one.toDF(), out, batchId = 2, compactEvery = 99)
-    assert(snap(Streams.upsertRead(spark, out)) === Set(
+    assert(liveScans(distributedRead(out)) === 2, "premise: the date split plans")
+    assert(snap(distributedRead(out)) === Set(
       ("id-a", ts("2024-08-28 10:00:00"), 10.0),
       ("id-a", ts("2024-08-29 10:00:00"), 20.0),
       ("id-b", ts("2024-08-30 10:00:00"), 99.0),
@@ -898,16 +901,19 @@ class StreamingSpec extends SparkSpec {
       "compaction must not lose a null-ts row")
     assert(new java.io.File(out).list().contains("event_date=__HIVE_DEFAULT_PARTITION__"))
     val withBase = base.map(r => (r.timeseries_id, r.timestamp, r.value)).toSet
-    // SPLIT path: pending touches 1 of 4 real dates + carries a null-ts
-    // row -> 3 untouched partitions pass through, nulls ride the anti-join
+    // SPLIT path (window plan): pending touches 1 of 4 real dates +
+    // carries a null-ts row -> 3 untouched partitions pass through, nulls
+    // ride the anti-join
     val pend = Seq(
       t("2024-08-30 10:00:00", 30.0, "id-b"),
       t(null, 50.0, "id-n"))
     Streams.upsertDeltaBatch(pend.toDF(), out, batchId = 1, compactEvery = 99)
     val expectSplit = withBase - (("id-b", ts("2024-08-30 10:00:00"), 3.0)) +
       (("id-b", ts("2024-08-30 10:00:00"), 30.0)) + (("id-n", null, 50.0))
-    assert(snap(Streams.upsertRead(spark, out)) === expectSplit,
+    assert(snap(distributedRead(out)) === expectSplit,
       "split plan must keep the stored null-ts row and append the pending one")
+    assert(snap(Streams.upsertRead(spark, out)) === expectSplit,
+      "the resolved set's plan must agree with the split on null-ts rows")
     // FALLBACK path: pending touches every real date -> single scan; the
     // resolution of the null-ts rows must be identical to the split's
     val pendAll = Seq(
@@ -922,8 +928,10 @@ class StreamingSpec extends SparkSpec {
       ("id-b", ts("2024-08-31 10:00:00"), 40.0),
       ("id-n", null: java.sql.Timestamp, 5.0),
       ("id-n", null: java.sql.Timestamp, 50.0))
-    assert(snap(Streams.upsertRead(spark, out)) === expectAll,
+    assert(snap(distributedRead(out)) === expectAll,
       "single-scan fallback must agree with the split on null-ts rows")
+    assert(snap(Streams.upsertRead(spark, out)) === expectAll,
+      "the resolved set's plan must agree with the fallback on null-ts rows")
     // fold everything: the compacted store equals the merge-on-read view,
     // and the DIRECT tier lands the same state from the same batches
     Streams.compactUpsertDeltas(spark, out)
@@ -984,6 +992,14 @@ class StreamingSpec extends SparkSpec {
     Streams.Resolved.drop(spark, dir)
     try Streams.upsertRead(spark, dir) finally set.foreach(Streams.Resolved.put(spark, dir, _))
   }
+
+  /** Scans of the compacted store (not of `_delta`) in `view`'s physical
+    * plan: 2 for the date split, 1 for every single-scan plan. */
+  private def liveScans(view: org.apache.spark.sql.DataFrame): Int =
+    view.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if !f.relation.location.rootPaths.exists(_.getName == "_delta") => f
+    }.size
 
   /** Fold `dir`'s pending deltas on the distributed plan and keep no set
     * for it afterwards, as a store of another process would be. */
@@ -1258,6 +1274,100 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSet
     assert(snap(view) === snap(distributedRead(out)))
     assert(snap(view) === snap(spark.read.parquet(direct)))
+  }
+
+  /** A compacted store of two series over four days, its pending landing
+    * `pend` (one process, so the resolved set holds it), and the same
+    * batches merged eagerly by `upsertBatch`, as driver-side rows. */
+  private def servedStore(name: String, pend: Seq[Tele]) = {
+    val out = java.nio.file.Files.createTempDirectory(name).toString
+    val direct = java.nio.file.Files.createTempDirectory(s"${name}_direct").toString
+    val base = for (d <- 28 to 31; id <- Seq("id-a", "id-b"); h <- 9 to 11)
+      yield Tele("S", ts(f"2024-08-$d%02d $h%02d:00:00"), d * 100.0 + h, None, id)
+    Streams.upsertDeltaBatch(base.toDF(), out, batchId = 0, compactEvery = 99)
+    Streams.compactUpsertDeltas(spark, out)
+    Streams.upsertBatch(base.toDF(), direct)
+    if (pend.nonEmpty) {
+      Streams.upsertDeltaBatch(pend.toDF(), out, batchId = 1, compactEvery = 99)
+      Streams.upsertBatch(pend.toDF(), direct)
+    }
+    (out, triples(spark.read.parquet(direct)))
+  }
+
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.select("timeseries_id", "timestamp", "value").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSet
+
+  /** The serving range query (`main.rs:119-139`): one series over an
+    * inclusive time range, the date bounds pruning partitions. */
+  private def rangeOf(view: org.apache.spark.sql.DataFrame, id: String, from: String, to: String) = {
+    val (f, t) = (lit(from), lit(to))
+    view.filter(col("event_date").between(to_date(f), to_date(t)) &&
+      col("timeseries_id") === id &&
+      col("timestamp").between(f.cast("timestamp"), t.cast("timestamp")))
+  }
+
+  private def inRange(rows: Set[(String, Timestamp, Double)], id: String, from: String, to: String) =
+    rows.filter { case (i, at, _) => i == id && !at.before(ts(from)) && !at.after(ts(to)) }
+
+  private val winner = Tele("S", ts("2024-08-30 10:00:00"), 99.0, None, "id-b")
+
+  test("a warm upsertRead with new bounds compiles nothing over a compacted store, and at most the set's two local-relation predicates on the resolved-set path") {
+    // each plan shape is read once to warm it: on the set's path a range
+    // holding a winner plans the anti-join, one holding none a lone scan
+    val warm = Seq(
+      ("id-b", "2024-08-29 00:00:00", "2024-08-30 23:59:59"),
+      ("id-a", "2024-08-28 00:00:00", "2024-08-31 23:59:59"))
+    val fresh = Seq(
+      ("id-b", "2024-08-30 09:30:00", "2024-08-31 10:30:00"),
+      ("id-a", "2024-08-28 10:00:00", "2024-08-30 10:00:00"),
+      ("id-b", "2024-08-28 00:00:00", "2024-08-31 23:59:59"),
+      ("id-b", "2024-08-28 00:00:00", "2024-08-29 23:59:59"))
+    def serve(what: String, out: String, eager: Set[(String, Timestamp, Double)], most: Long): Unit = {
+      def read(id: String, from: String, to: String) =
+        triples(rangeOf(Streams.upsertRead(spark, out), id, from, to))
+      warm.foreach { case (id, from, to) =>
+        assert(read(id, from, to) === inRange(eager, id, from, to), s"$what: warm $id [$from, $to]")
+      }
+      fresh.foreach { case (id, from, to) =>
+        val (got, n) = compilesDuring(read(id, from, to))
+        assert(got === inRange(eager, id, from, to), s"$what: $id [$from, $to]")
+        assert(n <= most, s"$what: a warm read of $id [$from, $to] compiled $n classes")
+      }
+    }
+    val (compacted, all) = servedStore("graft_upcompile", Nil)
+    serve("compacted store", compacted, all, 0)
+    val (pending, merged) = servedStore("graft_upcompile_set", Seq(winner))
+    assert(usesResolved(Streams.upsertRead(spark, pending)), "premise: the set serves the reads")
+    serve("resolved set", pending, merged, 2)
+  }
+
+  test("resolved-set read plans: a filter past every winner leaves the compacted read's one scan; one on a winner adds a broadcast anti-join") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val (out, eager) = servedStore("graft_upshape", Seq(winner))
+    val view = Streams.upsertRead(spark, out)
+    assert(usesResolved(view), "premise: the set serves the read")
+    withPlanShapeConf() {
+      val (from, to) = ("2024-08-28 00:00:00", "2024-08-31 23:59:59")
+      // id-a holds no winner; nor does id-b before 08-30
+      Seq(("id-a", from, to), ("id-b", from, "2024-08-29 23:59:59")).foreach { case (id, f, t) =>
+        val past = rangeOf(view, id, f, t)
+        val plan = executedPlan(past)
+        assert(plan.collect { case s: FileSourceScanExec => s }.size === 1, s"one scan:\n$plan")
+        assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"no join:\n$plan")
+        assert(plan.collect { case u: UnionExec => u }.isEmpty, s"no union:\n$plan")
+        assert(triples(past) === inRange(eager, id, f, t))
+      }
+      val on = rangeOf(view, "id-b", from, to)
+      val plan = executedPlan(on)
+      assert(plan.collect { case s: FileSourceScanExec => s }.size === 1, s"one scan:\n$plan")
+      assert(plan.collect { case j: BaseJoinExec => j }.map(j => (j.getClass, j.joinType)) ===
+        Seq((classOf[BroadcastHashJoinExec], LeftAnti)), s"one broadcast anti-join:\n$plan")
+      assert(triples(on) === inRange(eager, "id-b", from, to))
+      assert(triples(on).contains(("id-b", winner.timestamp, 99.0)))
+    }
   }
 
   test("compaction from the resolved set leaves the distributed fold's rows per partition; a failed delete leaves no set and the re-fold is exact") {
