@@ -66,6 +66,20 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
+  /** The near-dup geometry of the batch (`DedupOps`) and streaming
+    * (`Streams.minhashDedupBatch`) paths: [[Perms]] permutations in
+    * [[Bands]] LSH bands of `Perms / Bands` = 4 rows. */
+  val Perms = 32
+  val Bands = 8
+
+  /** The [[Bands]] LSH band hashes of a [[Perms]]-slot signature, as one
+    * array: band b is the xxHash64 of its `Perms / Bands` slots. */
+  def bandHashes(sig: Column): Column = {
+    import org.apache.spark.sql.functions.{array, slice, xxhash64}
+    val rows = Perms / Bands
+    array((0 until Bands).map(b => xxhash64(slice(sig, b * rows + 1, rows))): _*)
+  }
+
   /** Column-level entry point: `minhashSig(setCol, 32)`. */
   def minhashSig(c: Column, numPerms: Int): Column = {
     import org.apache.spark.sql.GraftShims

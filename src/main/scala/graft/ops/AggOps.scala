@@ -788,7 +788,7 @@ object AggOps {
     // rank brackets when compacted) at whatever scale Verify runs.
     Q.noOracle("q_agg_kll_mv") { (s, d) =>
       val day = (floor(unix_timestamp(col("ts")) / 86400) * 86400).cast("long")
-      val k = 16384
+      val k = U.KllK
       val daily = U.events(s, d)
         .groupBy(col("event_type"), day.as("day"))
         .agg(kll_sketch_agg_double(col("value"), k).as("sketch"))

@@ -30,9 +30,6 @@ object DedupOps {
   private def words: Column = U.words
   private def shingled(s: SparkSession, d: String): DataFrame = U.shingled(s, d)
 
-  private val MinHashPerms = 32
-  private val Bands = 8 // 8 bands x 4 rows
-
   /** Stop-shingle cap for CANDIDATE GENERATION in the exact inverted-index
     * pair builder — and for generation ONLY (r13; VERDICT r12 item 1): a
     * shingle shared by df docs contributes df*(df-1)/2 candidate pairs, so
@@ -307,14 +304,11 @@ object DedupOps {
     val sig = shingled(s, d).select(
       col("doc_id"),
       // codegen'd one-pass signature — see [[graft.functions.MinHashSig]]
-      graft.functions.MinHashSig.minhashSig(col("shingles"), MinHashPerms)
+      graft.functions.MinHashSig.minhashSig(col("shingles"), graft.functions.MinHashSig.Perms)
         .as("sig"))
-    val rowsPerBand = MinHashPerms / Bands
-    val bandCols = (0 until Bands).map(b =>
-      xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
     val banded = sig.select(
       col("doc_id"),
-      posexplode(array(bandCols: _*)))
+      posexplode(graft.functions.MinHashSig.bandHashes(col("sig"))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
       // same canonical exchange on both self-join sides => the 32-perm

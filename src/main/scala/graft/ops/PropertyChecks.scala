@@ -393,7 +393,7 @@ object PropertyChecks {
 
     "q_agg_kll_mv" -> at("strong")((s, d) => {
       val res = run(s, d, "q_agg_kll_mv")
-      val k = 16384 // must match the query's sketch parameter
+      val k = U.KllK // the query's sketch parameter
       // Two regimes, two contracts. n <= k: the sketch is uncompacted, so
       // merged and direct are both the EXACT sorted value set — assert
       // bit-equality plus the exact order statistic. n > k (sf0.1's ~20k

@@ -49,6 +49,11 @@ object Q {
 object U {
   val Dec: DecimalType = DecimalType(18, 6)
 
+  /** KLL `k` of every stored quantile sketch (`q_agg_kll_mv`, the
+    * streaming sketch MV) and of the merges and checks that read them: a
+    * partial of at most k values stays uncompacted, so merged == direct. */
+  val KllK = 16384
+
   /** `localCheckpoint()` with an inspectable derivation (r19; VERDICT r18
     * item 8): a checkpoint cuts lineage, so a committed `.explain` dump of
     * a checkpointed query shows the segment ABOVE the checkpoint only —

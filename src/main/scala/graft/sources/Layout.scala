@@ -276,6 +276,15 @@ object Layout {
     out
   }
 
+  /** Bytes per file when a date partition is rewritten whole, by
+    * [[compactPartition]] (its default) and by [[upsertPartition]]. */
+  private val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** Files for `bytes` of partition data at `target` bytes each, at least
+    * one. */
+  private def filesFor(bytes: BigInt, target: Long = TargetFileBytes): Int =
+    ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
+
   /** Compact one date partition in place: streaming ingest appends a file
     * per micro-batch per partition, and at 100 TB the accumulated small
     * files dominate scan setup cost (footer reads, task scheduling).
@@ -292,15 +301,14 @@ object Layout {
       spark: SparkSession,
       rootDir: String,
       eventDate: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
+      targetFileBytes: Long = TargetFileBytes,
       seriesCol: String = "user_id",
       tsCol: String = "ts"): (Int, Int) = {
     val files = graft.streaming.Streams.Footers.files _
     val before = swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
       val before = files(fs, path)
-      val nOut = math.max(1, math.ceil(before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
       spark.read.parquet(path.toString)
-        .repartition(nOut)
+        .repartition(filesFor(before.map(_.getLen).sum, targetFileBytes))
         .sortWithinPartitions(col(seriesCol), col(tsCol))
         .write.mode(SaveMode.Overwrite).parquet(tmp)
       before.length
@@ -311,45 +319,54 @@ object Layout {
 
   /** Merge `updates` (rows of ONE event date, WITHOUT the event_date
     * column) into that date's partition with upsert semantics: live rows
-    * whose (series, ts) key appears in the batch are replaced, all other
-    * live rows survive, new keys append. The rewrite goes through
-    * [[swapPartition]], so a complete copy of the data exists at every
-    * instant. IDEMPOTENT: re-merging identical updates replaces rows
-    * with identical rows — the property [[graft.streaming.Streams.upsertSink]]
+    * whose (series, ts) key ([[graft.streaming.Streams.TelemetryKey]])
+    * appears in the batch are replaced, all other live rows survive, new
+    * keys append. The rewrite goes through [[swapPartition]], so a
+    * complete copy of the data exists at every instant. IDEMPOTENT:
+    * re-merging identical updates replaces rows with identical rows —
+    * the property [[graft.streaming.Streams.upsertSink]]
     * relies on to make at-least-once `foreachBatch` delivery exactly-once
     * in effect.
     *
     * Scale: the batch keys are one micro-batch's worth — broadcast to the
     * anti-join, so the live partition scans once with no shuffle; each
     * affected date is an independent rewrite (same unit of work as
-    * compaction), embarrassingly parallel across dates.
+    * compaction), embarrassingly parallel across dates. The rewrite is
+    * coalesced, with no shuffle, to one file per [[TargetFileBytes]] of
+    * the live files plus the updates' plan-size estimate ([[filesFor]]),
+    * as [[compactPartition]] sizes its files. Left to the plan, a rewrite
+    * writes one file per scan split plus one per slice of the updates (8
+    * for a 3 k-row date on 4 cores), and every later read opens them all.
     */
   def upsertPartition(
       spark: SparkSession,
       rootDir: String,
       eventDate: String,
-      updates: DataFrame,
-      seriesCol: String = "user_id",
-      tsCol: String = "ts"): Unit =
+      updates: DataFrame): Unit =
     swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
-      val merged =
+      import graft.streaming.Streams.TelemetryKey.{SeriesCol, TsCol}
+      val (merged, liveBytes) =
         if (fs.exists(path)) {
           // schema from one footer, not an inference job per merged date
           val footers = graft.streaming.Streams.Footers
-          val first = footers.files(fs, path).headOption.getOrElse(
+          val liveFiles = footers.files(fs, path)
+          val first = liveFiles.headOption.getOrElse(
             throw new IllegalStateException(s"upsert: no parquet file under $path"))
           val live = spark.read
             .schema(footers.schema(spark, footers.read(spark, first)))
             .parquet(path.toString)
-          live
+          (live
             .join(
-              broadcast(updates.select(col(seriesCol), col(tsCol))),
-              Seq(seriesCol, tsCol),
+              broadcast(updates.select(col(SeriesCol), col(TsCol))),
+              Seq(SeriesCol, TsCol),
               "left_anti")
-            .unionByName(updates.select(live.columns.toIndexedSeq.map(col): _*))
-        } else updates
+            .unionByName(updates.select(live.columns.toIndexedSeq.map(col): _*)),
+            liveFiles.map(_.getLen).sum)
+        } else (updates, 0L)
+      val files = filesFor(liveBytes + updates.queryExecution.optimizedPlan.stats.sizeInBytes)
       merged
-        .sortWithinPartitions(col(seriesCol), col(tsCol))
+        .coalesce(files)
+        .sortWithinPartitions(col(SeriesCol), col(TsCol))
         .write
         .mode(SaveMode.Overwrite)
         .parquet(tmp)

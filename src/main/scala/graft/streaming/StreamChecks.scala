@@ -486,7 +486,7 @@ object StreamChecks {
       val mv = tmp("graft_sc_hhmv")
       val ckpt = tmp("graft_sc_hhmv_ckpt")
       val mem = MemoryStream[Telemetry]
-      val q = Streams.hhMvSink(mem.toDF(), mv, ckpt, k = 8, Trigger.ProcessingTime("0 seconds")).start()
+      val q = Streams.hhMvSink(mem.toDF(), mv, ckpt, Trigger.ProcessingTime("0 seconds")).start()
       val b0 = Seq(T("2024-08-25 10:00:00", 1.0, "id-hot"), T("2024-08-25 11:00:00", 1.0, "id-hot"),
         T("2024-08-25 12:00:00", 1.0, "id-warm"), T("2024-08-26 10:00:00", 1.0, "id-hot"))
       val b1 = Seq(T("2024-08-26 11:00:00", 1.0, "id-hot"), T("2024-08-26 12:00:00", 1.0, "id-warm"),
@@ -495,12 +495,12 @@ object StreamChecks {
         mem.addData(b0); q.processAllAvailable()
         mem.addData(b1); q.processAllAvailable()
       } finally q.stop()
-      def hh() = Streams.mvHeavyHitters(s, mv, "2024-08-25", "2024-08-26", k = 8)
+      def hh() = Streams.mvHeavyHitters(s, mv, "2024-08-25", "2024-08-26")
         .collect().map(r => r.getString(0) -> r.getAs[Long]("est")).toMap
       val got = hh()
       expect(got == Map("id-hot" -> 4L, "id-warm" -> 2L, "id-cold" -> 1L),
         s"merged MG partials != exact counts in the exact regime: $got")
-      Streams.hhMvBatch(b1.toDF(), mv, batchId = 1L, k = 8) // replay
+      Streams.hhMvBatch(b1.toDF(), mv, batchId = 1L) // replay
       expect(hh() == got, "replay changed the merged summary")
       "MG partials merge to exact counts (k >= distinct); replay idempotent"
     }),
@@ -527,7 +527,7 @@ object StreamChecks {
       val got = snap()
       val direct = (b1 ++ b2).toDF()
         .groupBy("timeseries_id")
-        .agg(kll_sketch_agg_double(col("value"), 16384).as("sk"))
+        .agg(kll_sketch_agg_double(col("value"), graft.U.KllK).as("sk"))
         .select(col("timeseries_id"), kll_sketch_get_n_double(col("sk")).as("n"),
           kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("p50"))
         .collect().map(r => r.getString(0) -> ((r.getAs[Long]("n"), r.getAs[Double]("p50"))))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.faults.FaultRules
+import graft.functions.MinHashSig
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -119,6 +120,31 @@ object Streams {
     StructField("fc1_flag", ByteType),
     StructField("timeseries_id", StringType)))
 
+  /** The telemetry key, (series, ts): every store here is written and read
+    * by it, so a landing and a read can never disagree on it. An object,
+    * not two members: the public members of [[Streams]] are its kernels. */
+  object TelemetryKey {
+    val SeriesCol = "timeseries_id"
+    val TsCol = "timestamp"
+  }
+  import TelemetryKey.{SeriesCol, TsCol}
+
+  /** The production trigger of every sink here: one micro-batch per 5
+    * minutes, the reference's periodic-job tick (`main.rs:327-331`). */
+  private val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 minutes")
+
+  /** The one `foreachBatch` sink: `f` gets each micro-batch and its id.
+    * Delivery is at-least-once; each `f` here is exactly-once in effect
+    * through its own layout (a replay replaces what its first delivery
+    * wrote). Caller starts the returned writer (`.start()`).
+    */
+  private def batchSink(df: DataFrame, checkpointDir: String, trigger: Trigger)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+
   /** R1/R9: JSON-lines dir → parquet sink, checkpointed, day-partitioned.
     * Caller starts the returned writer (`.start()`), which lets tests use
     * `Trigger.AvailableNow` while production uses processing-time.
@@ -128,7 +154,7 @@ object Streams {
       inDir: String,
       outDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes"))
+      trigger: Trigger = DefaultTrigger)
       : DataStreamWriter[Row] = {
     val in = spark.readStream
       .schema(telemetrySchema)
@@ -149,11 +175,8 @@ object Streams {
     * stream; Spark re-reads the static side per micro-batch, picking up
     * catalog updates without restarting the query.
     */
-  def enrich(
-      telemetry: DataFrame,
-      seriesCatalog: DataFrame,
-      key: String = "timeseries_id"): DataFrame =
-    telemetry.join(broadcast(seriesCatalog), Seq(key), "left")
+  def enrich(telemetry: DataFrame, seriesCatalog: DataFrame): DataFrame =
+    telemetry.join(broadcast(seriesCatalog), Seq(SeriesCol), "left")
 
   /** R5 stateless: flag rows over threshold; composes onto any telemetry
     * stream or batch frame (same code path both ways).
@@ -558,14 +581,10 @@ object Streams {
       }
   }
 
-  /** One row per (`seriesCol`, `tsCol`) key: the first under `order`. */
-  private def firstPerKey(
-      df: DataFrame,
-      seriesCol: String,
-      tsCol: String,
-      order: Seq[Column]): DataFrame =
+  /** One row per [[TelemetryKey]] value: the first under `order`. */
+  private def firstPerKey(df: DataFrame, order: Seq[Column]): DataFrame =
     df.withColumn("_rn",
-        row_number().over(Window.partitionBy(col(seriesCol), col(tsCol)).orderBy(order: _*)))
+        row_number().over(Window.partitionBy(col(SeriesCol), col(TsCol)).orderBy(order: _*)))
       .filter(col("_rn") === 1)
       .drop("_rn")
 
@@ -574,11 +593,11 @@ object Streams {
     * so two deliveries of the same conflicting batch resolve identically.
     * Each winner carries its key's `event_date`.
     */
-  private def dedupBatch(batch: DataFrame, seriesCol: String, tsCol: String): DataFrame =
-    firstPerKey(batch, seriesCol, tsCol,
-      batch.columns.toIndexedSeq.filterNot(c => c == seriesCol || c == tsCol)
+  private def dedupBatch(batch: DataFrame): DataFrame =
+    firstPerKey(batch,
+      batch.columns.toIndexedSeq.filterNot(c => c == SeriesCol || c == TsCol)
         .map(col(_).desc_nulls_last))
-      .withColumn("event_date", to_date(col(tsCol)))
+      .withColumn("event_date", to_date(col(TsCol)))
 
   /** Each distinct `event_date` of `winners` with its rows: one job. */
   private def datesOf(winners: DataFrame): Seq[(String, DataFrame)] =
@@ -600,36 +619,28 @@ object Streams {
     * handful per micro-batch: the current day plus late corrections), not
     * by rows; each iteration launches one distributed merge job.
     */
-  private def foldDates(
-      s: SparkSession,
-      rootDir: String,
-      byDate: Seq[(String, DataFrame)],
-      seriesCol: String,
-      tsCol: String): Unit =
+  private def foldDates(s: SparkSession, rootDir: String, byDate: Seq[(String, DataFrame)]): Unit =
     byDate.sortBy { case (d, _) => (d == null, d) }.foreach { case (d, updates) =>
       graft.sources.Layout.upsertPartition(
         s,
         rootDir,
         Option(d).getOrElse("__HIVE_DEFAULT_PARTITION__"),
-        updates.drop("event_date"),
-        seriesCol,
-        tsCol)
+        updates.drop("event_date"))
     }
 
-  /** One micro-batch of the streaming upsert ([[upsertSink]]), exposed so
-    * a replay is directly testable: [[dedupBatch]], then [[foldDates]]
-    * over the batch's distinct dates.
-    */
-  def upsertBatch(
-      batch: DataFrame,
-      rootDir: String,
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp"): Unit = {
-    if (batch.isEmpty) return
-    val deduped = dedupBatch(batch, seriesCol, tsCol).persist()
-    try foldDates(batch.sparkSession, rootDir, datesOf(deduped), seriesCol, tsCol)
-    finally deduped.unpersist()
+  /** [[foldDates]] over a frame of winners, persisted across its
+    * distinct-date job ([[datesOf]]) and the per-date merges. */
+  private def foldWinners(s: SparkSession, rootDir: String, winners: DataFrame): Unit = {
+    val persisted = winners.persist()
+    try foldDates(s, rootDir, datesOf(persisted))
+    finally persisted.unpersist()
   }
+
+  /** One micro-batch of the streaming upsert ([[upsertSink]]), exposed so
+    * a replay is directly testable: [[dedupBatch]], then [[foldWinners]].
+    */
+  def upsertBatch(batch: DataFrame, rootDir: String): Unit =
+    if (!batch.isEmpty) foldWinners(batch.sparkSession, rootDir, dedupBatch(batch))
 
   /** Exactly-once-EFFECT streaming upsert into the day-partitioned parquet
     * layout — the reference's R3 in-place update
@@ -653,14 +664,8 @@ object Streams {
       telemetry: DataFrame,
       outDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp"): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], _: Long) =>
-        upsertBatch(b, outDir, seriesCol, tsCol))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(telemetry, checkpointDir, trigger)((b, _) => upsertBatch(b, outDir))
 
   // ---- delta-log upsert tier (r16; VERDICT r15 item 6) --------------------
   //
@@ -675,10 +680,11 @@ object Streams {
   // deltas into the day partitions once every `compactEvery` batches — the
   // store is rewritten once per K batches instead of once per batch.
   //
-  // Semantics are IDENTICAL to the direct tier: within a batch the
-  // greatest-tuple row wins ([[dedupBatch]], shared), across batches the
-  // later batch wins (exactly what serial [[upsertBatch]] merges produce),
-  // and both tiers fold with [[foldDates]], so a drained-and-compacted
+  // Semantics are IDENTICAL to the direct tier, on the same key
+  // ([[TelemetryKey]]): within a batch the greatest-tuple row wins
+  // ([[dedupBatch]], shared), across batches the later batch wins (exactly
+  // what serial [[upsertBatch]] merges produce), and both tiers fold with
+  // [[foldWinners]] or [[foldDates]], so a drained-and-compacted
   // delta store is byte-identical to the direct sink's on the same
   // batches (pinned in StreamingSpec).
   //
@@ -834,13 +840,10 @@ object Streams {
     * in-batch greatest-tuple tie-break — the order serial direct merges
     * produce. Input carries the discovered `batch` partition column.
     */
-  private def deltaWinners(
-      all: DataFrame,
-      seriesCol: String,
-      tsCol: String): DataFrame = {
+  private def deltaWinners(all: DataFrame): DataFrame = {
     val others = all.columns.filterNot(c =>
-      c == seriesCol || c == tsCol || c == "batch" || c == "event_date")
-    firstPerKey(all, seriesCol, tsCol,
+      c == SeriesCol || c == TsCol || c == "batch" || c == "event_date")
+    firstPerKey(all,
       col("batch").cast("long").desc +: others.toIndexedSeq.map(c => col(c).desc_nulls_last))
       .drop("batch")
   }
@@ -852,7 +855,7 @@ object Streams {
 
   /** The resolved pending set of one store, as this process knows it:
     * `deltaWinners` of the pending files in `sig`, keyed by the
-    * (`seriesCol`, `tsCol`) value pair. A null key value is one key, as
+    * [[TelemetryKey]] value pair. A null key value is one key, as
     * the window's partitioning groups it. `bytes` is the footer byte
     * total of every delta landed since the seeding compaction, an upper
     * bound on the rows held; `schema` is None while nothing is pending.
@@ -866,8 +869,6 @@ object Streams {
       val maxBatch: Long,
       val bytes: Long,
       val schema: Option[StructType],
-      val seriesCol: String,
-      val tsCol: String,
       val rows: Map[Row, Row]) {
     import scala.jdk.CollectionConverters._
 
@@ -936,11 +937,8 @@ object Streams {
     def matching(
         s: SparkSession,
         rootDir: String,
-        pending: Seq[org.apache.hadoop.fs.FileStatus],
-        seriesCol: String,
-        tsCol: String): Option[Resolved] =
-      get(s, rootDir).filter(r =>
-        r.seriesCol == seriesCol && r.tsCol == tsCol && r.sig == signature(pending))
+        pending: Seq[org.apache.hadoop.fs.FileStatus]): Option[Resolved] =
+      get(s, rootDir).filter(_.sig == signature(pending))
 
     /** A set of at most `rows` winners over `bytes` footer bytes is kept. */
     def fits(rows: Long, bytes: Long): Boolean = rows <= MaxRows && bytes <= MaxBytes
@@ -984,9 +982,9 @@ object Streams {
   }
 
   /** One micro-batch of the delta-tier upsert ([[upsertDeltaSink]]):
-    * [[dedupBatch]], land the winners O(batch) with [[landBatch]] in the
-    * batch's own `_delta/batch=<id>` directory, then compact if
-    * `compactEvery` deltas have accumulated.
+    * [[dedupBatch]] per [[TelemetryKey]] value, land the winners
+    * O(batch) with [[landBatch]] in the batch's own `_delta/batch=<id>`
+    * directory, then compact if `compactEvery` deltas have accumulated.
     *
     * When the process holds the store's [[Resolved]] set, the landing
     * extends it with the landed rows, read back in one O(batch) job, if
@@ -1000,18 +998,16 @@ object Streams {
       batch: DataFrame,
       rootDir: String,
       batchId: Long,
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp",
       compactEvery: Int = 8): Unit = {
     if (batch.isEmpty) return
     val s = batch.sparkSession
     val prior = Resolved.get(s, rootDir)
       .map(r => r -> signature(deltaFiles(s, deltaDirs(s, rootDir))))
     Resolved.drop(s, rootDir)
-    val dst = landBatch(dedupBatch(batch, seriesCol, tsCol), s"$rootDir/_delta", "batch", batchId)
+    val dst = landBatch(dedupBatch(batch), s"$rootDir/_delta", "batch", batchId)
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
     prior.foreach { case (r, before) =>
-      if (r.sig == before && batchId > r.maxBatch && r.seriesCol == seriesCol && r.tsCol == tsCol) {
+      if (r.sig == before && batchId > r.maxBatch) {
         import scala.jdk.CollectionConverters._
         val landed = Footers.files(fs, dst)
         val footers = landed.map(Footers.read(s, _))
@@ -1021,17 +1017,17 @@ object Streams {
         val rowsAtMost = r.rows.size + blocks.map(_.getRowCount).sum
         footers.headOption.map(Footers.schema(s, _)).filter(sc =>
           r.schema.forall(_ == sc) && Resolved.fits(rowsAtMost, bytes) &&
-            Seq(seriesCol, tsCol).forall(c => Resolved.keyable(sc(c).dataType))
+            Seq(SeriesCol, TsCol).forall(c => Resolved.keyable(sc(c).dataType))
         ).foreach { sc =>
-          val (si, ti) = (sc.fieldIndex(seriesCol), sc.fieldIndex(tsCol))
+          val (si, ti) = (sc.fieldIndex(SeriesCol), sc.fieldIndex(TsCol))
           val rows = s.read.schema(sc).parquet(dst.toString).collect()
           Resolved.put(s, rootDir, new Resolved(before ++ signature(landed), batchId, bytes,
-            Some(sc), seriesCol, tsCol, r.rows ++ rows.map(x => Row(x.get(si), x.get(ti)) -> x)))
+            Some(sc), r.rows ++ rows.map(x => Row(x.get(si), x.get(ti)) -> x)))
         }
       }
     }
     if (deltaDirs(s, rootDir).size >= compactEvery)
-      compactUpsertDeltas(s, rootDir, seriesCol, tsCol)
+      compactUpsertDeltas(s, rootDir)
   }
 
   /** Fold every pending delta into the day partitions (see the tier doc
@@ -1044,21 +1040,15 @@ object Streams {
     * folded directory is deleted the store has nothing pending that this
     * process did not see, so the set is seeded empty here, and only here.
     */
-  def compactUpsertDeltas(
-      s: SparkSession,
-      rootDir: String,
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp"): Int = {
+  def compactUpsertDeltas(s: SparkSession, rootDir: String): Int = {
     val dirs = deltaDirs(s, rootDir)
     val files = deltaFiles(s, dirs)
     if (files.isEmpty) return 0
-    val resolved = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
-    val persisted = if (resolved.isDefined) None else Some(
-      deltaWinners(deltaStore(s, rootDir, Footers.read(s, files.head)), seriesCol, tsCol)
-        .persist())
-    try foldDates(s, rootDir, resolved.map(_.byDate(s)).getOrElse(datesOf(persisted.get)),
-      seriesCol, tsCol)
-    finally persisted.foreach(_.unpersist())
+    Resolved.matching(s, rootDir, files) match {
+      case Some(r) => foldDates(s, rootDir, r.byDate(s))
+      case None =>
+        foldWinners(s, rootDir, deltaWinners(deltaStore(s, rootDir, Footers.read(s, files.head))))
+    }
     Resolved.drop(s, rootDir)
     val fs = new org.apache.hadoop.fs.Path(rootDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1067,7 +1057,7 @@ object Streams {
     val deleted = dirs.forall { case (_, p) => fs.delete(p, true) }
     if (deleted)
       Resolved.put(s, rootDir, new Resolved(
-        Set.empty, dirs.last._1, 0L, None, seriesCol, tsCol, Map.empty))
+        Set.empty, dirs.last._1, 0L, None, Map.empty))
     dirs.size
   }
 
@@ -1108,7 +1098,7 @@ object Streams {
     * set's broadcasts): a
     * pending delta row can only replace a stored row on its OWN
     * `event_date` — both sides' partition date is `to_date` of the same
-    * (`seriesCol`,`tsCol`) key's timestamp, so equal keys imply equal
+    * [[TelemetryKey]] value's timestamp, so equal keys imply equal
     * dates. Restricting the anti-join to any SUPERSET of the dates the
     * pending set touches is therefore exact; only a subset could drop a
     * replacement. The superset used is the union of the `event_date`
@@ -1127,29 +1117,25 @@ object Streams {
     * date per landing (8 instead of 1 on a 100 k-row, 30-day store landed
     * in 4 batches) and made those landings 15-20 % slower (4-core host).
     */
-  def upsertRead(
-      s: SparkSession,
-      rootDir: String,
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp"): DataFrame = {
+  def upsertRead(s: SparkSession, rootDir: String): DataFrame = {
     graft.sources.ParamLiterals.install(s)
     val files = deltaFiles(s, deltaDirs(s, rootDir))
     val live = liveStore(s, rootDir)
     if (files.isEmpty)
       return live.map(_._1).getOrElse(
         throw new IllegalStateException(s"no upsert store at $rootDir"))
-    val set = Resolved.matching(s, rootDir, files, seriesCol, tsCol)
+    val set = Resolved.matching(s, rootDir, files)
     // the set's plan reads no pending footer: its signature is the listing
     val footers = if (set.isDefined) Seq.empty else files.map(Footers.read(s, _))
     val winners = set.map(_.winners(s))
-      .getOrElse(deltaWinners(deltaStore(s, rootDir, footers.head), seriesCol, tsCol))
+      .getOrElse(deltaWinners(deltaStore(s, rootDir, footers.head)))
     live match {
       case None => winners
       case Some((lv, storeDates)) =>
         // in `in`'s column order, where the using-join puts the keys first
         def antiMerged(in: DataFrame): DataFrame = {
           val cols = in.columns.toIndexedSeq.map(col)
-          in.join(winners.select(col(seriesCol), col(tsCol)), Seq(seriesCol, tsCol), "left_anti")
+          in.join(winners.select(col(SeriesCol), col(TsCol)), Seq(SeriesCol, TsCol), "left_anti")
             .select(cols: _*)
             .unionByName(winners.select(cols: _*))
         }
@@ -1200,15 +1186,9 @@ object Streams {
       telemetry: DataFrame,
       outDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
-      seriesCol: String = "timeseries_id",
-      tsCol: String = "timestamp",
+      trigger: Trigger = DefaultTrigger,
       compactEvery: Int = 8): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        upsertDeltaBatch(b, outDir, id, seriesCol, tsCol, compactEvery))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+    batchSink(telemetry, checkpointDir, trigger)(upsertDeltaBatch(_, outDir, _, compactEvery))
 
   /** One micro-batch of the streaming quantile-sketch MV ([[sketchMvSink]]),
     * exposed for direct replay testing: aggregate the batch into per
@@ -1218,17 +1198,13 @@ object Streams {
     * the same values doubles their weight), so a replayed batch must
     * REPLACE its previous partials rather than add to them.
     */
-  def sketchMvBatch(
-      batch: DataFrame,
-      mvDir: String,
-      batchId: Long,
-      k: Int = 16384): Unit = {
+  def sketchMvBatch(batch: DataFrame, mvDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
     landBatch(
       batch
         .withColumn("day", to_date(col("timestamp")))
         .groupBy(col("timeseries_id"), col("day"))
-        .agg(kll_sketch_agg_double(col("value"), k).as("sketch")),
+        .agg(kll_sketch_agg_double(col("value"), graft.U.KllK).as("sketch")),
       mvDir, "batch_id", batchId)
   }
 
@@ -1249,12 +1225,8 @@ object Streams {
       telemetry: DataFrame,
       mvDir: String,
       checkpointDir: String,
-      k: Int = 16384,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) => sketchMvBatch(b, mvDir, id, k))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(telemetry, checkpointDir, trigger)(sketchMvBatch(_, mvDir, _))
 
   /** Range read over the [[sketchMvSink]] MV: union-merge the stored daily
     * partials per series across `[startDay, endDay]` and read the
@@ -1267,13 +1239,12 @@ object Streams {
       spark: SparkSession,
       mvDir: String,
       startDay: String,
-      endDay: String,
-      k: Int = 16384): DataFrame =
+      endDay: String): DataFrame =
     spark.read
       .parquet(mvDir)
       .filter(col("day").between(lit(startDay).cast("date"), lit(endDay).cast("date")))
       .groupBy(col("timeseries_id"))
-      .agg(kll_merge_agg_double(col("sketch"), k).as("m"))
+      .agg(kll_merge_agg_double(col("sketch"), graft.U.KllK).as("m"))
       .select(
         col("timeseries_id"),
         kll_sketch_get_n_double(col("m")).as("n"),
@@ -1306,11 +1277,8 @@ object Streams {
       telemetry: DataFrame,
       mvDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) => countMvBatch(b, mvDir, id))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(telemetry, checkpointDir, trigger)(countMvBatch(_, mvDir, _))
 
   /** Data-mix drift off the [[countMvSink]] MV — the batch `q_ts_drift`
     * semantics (older vs newer half of the observed day range, exact ppm
@@ -1352,6 +1320,10 @@ object Streams {
 
   // ---- Streaming heavy-hitters MV (Misra-Gries partials) ----
 
+  /** Misra-Gries counters per summary, at landing and at merge: the read's
+    * guarantee threshold n/(k+1) holds only for the writer's k. */
+  private val HhK = 8
+
   /** One micro-batch of the heavy-hitters MV ([[hhMvSink]]): the batch's
     * series ids fold into ONE Misra-Gries summary row (bounded counter
     * map + total n) per day, landed with [[landBatch]] — the third
@@ -1363,14 +1335,10 @@ object Streams {
     * order, beyond it the MG guarantee — est in [f - n/(k+1), f] — is
     * the invariant, not the bytes.
     */
-  def hhMvBatch(
-      batch: DataFrame,
-      mvDir: String,
-      batchId: Long,
-      k: Int = 8): Unit = {
+  def hhMvBatch(batch: DataFrame, mvDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val mgUdaf = org.apache.spark.sql.functions.udaf(
-      new graft.functions.HeavyHitters.MisraGries(k),
+      new graft.functions.HeavyHitters.MisraGries(HhK),
       org.apache.spark.sql.Encoders.STRING)
     landBatch(
       batch
@@ -1389,27 +1357,22 @@ object Streams {
       telemetry: DataFrame,
       mvDir: String,
       checkpointDir: String,
-      k: Int = 8,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) => hhMvBatch(b, mvDir, id, k))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(telemetry, checkpointDir, trigger)(hhMvBatch(_, mvDir, _))
 
   /** Heavy hitters over the [[hhMvSink]] MV for a day range: merge the
-    * stored per-batch summaries (O(k) each — raw rows are never
-    * rescanned) and report each retained series with its estimate, the
-    * merged total, and the guarantee threshold n/(k+1): every series with
+    * stored per-batch summaries (O(k) each, k = [[HhK]] — raw rows are
+    * never rescanned) and report each retained series with its estimate,
+    * the merged total, and the guarantee threshold n/(k+1): every series with
     * true frequency above it is PRESENT, and est <= f <= est + n/(k+1).
     */
   def mvHeavyHitters(
       s: SparkSession,
       mvDir: String,
       startDay: String,
-      endDay: String,
-      k: Int = 8): DataFrame = {
+      endDay: String): DataFrame = {
     val mergeUdaf = org.apache.spark.sql.functions.udaf(
-      new graft.functions.HeavyHitters.MisraGriesMerge(k),
+      new graft.functions.HeavyHitters.MisraGriesMerge(HhK),
       org.apache.spark.sql.Encoders.product[
         graft.functions.HeavyHitters.MGSummary])
     s.read
@@ -1419,7 +1382,7 @@ object Streams {
       .agg(mergeUdaf(col("hh"), col("n")).as("m"))
       .select(explode(col("m.counts")).as(Seq("timeseries_id", "est")),
         col("m.n").as("n_total"))
-      .withColumn("threshold", expr(s"n_total div (${k + 1})"))
+      .withColumn("threshold", expr(s"n_total div (${HhK + 1})"))
       .orderBy(col("est").desc, col("timeseries_id"))
   }
 
@@ -1458,11 +1421,8 @@ object Streams {
       telemetry: DataFrame,
       mvDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): DataStreamWriter[Row] =
-    telemetry.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) => cmMvBatch(b, mvDir, id))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(telemetry, checkpointDir, trigger)(cmMvBatch(_, mvDir, _))
 
   /** Point-frequency estimates over the [[cmMvSink]] MV for a day range:
     * re-ADD the stored cells across the range (the day filter prunes
@@ -1502,8 +1462,9 @@ object Streams {
 
   // ---- Streaming incremental near-dup dedup (MinHash-LSH index) ----
 
-  private val MinHashPerms = 32
-  private val Bands = 8 // 8 bands x 4 rows — same geometry as the batch op
+  /** Signature slots a new doc must share with an earlier one to drop: 26
+    * of [[MinHashSig.Perms]], about Jaccard 0.8. */
+  private val MinAgree = 26
 
   /** (doc_id, sig) MinHash signatures for the batch's docs with >= 3
     * tokens (shorter docs cannot shingle, so they can never near-dup —
@@ -1515,20 +1476,15 @@ object Streams {
       .filter(size(col("w")) >= 3)
       .select(
         col("doc_id"),
-        graft.functions.MinHashSig
-          .minhashSig(graft.functions.Shingles.shingles(col("w"), 3), MinHashPerms)
+        MinHashSig.minhashSig(graft.functions.Shingles.shingles(col("w"), 3), MinHashSig.Perms)
           .as("sig"))
 
   /** (doc_id, band, bucket) LSH band buckets of a signature frame. */
-  private def bandsOf(sigs: DataFrame): DataFrame = {
-    val rowsPerBand = MinHashPerms / Bands
-    val bandCols = (0 until Bands).map(b =>
-      xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
+  private def bandsOf(sigs: DataFrame): DataFrame =
     sigs
-      .select(col("doc_id"), posexplode(array(bandCols: _*)))
+      .select(col("doc_id"), posexplode(MinHashSig.bandHashes(col("sig"))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
-  }
 
   private def readStore(s: SparkSession, dir: String): Option[DataFrame] = {
     // Only "no store yet" maps to None. A blanket Try(...).toOption here
@@ -1546,7 +1502,7 @@ object Streams {
     *
     * Semantics (greedy stream dedup, the corpus-ingest standard): a new
     * doc is DROPPED iff its MinHash signature agrees with any
-    * earlier-seen doc's on >= `minAgree` of the 32 permutations —
+    * earlier-seen doc's on >= [[MinAgree]] of the 32 permutations —
     * "earlier" meaning any stored doc from batches < `batchId`, or any
     * same-batch doc with a LOWER doc_id (so two deliveries of the same
     * batch resolve identically). The canonical match recorded is the one
@@ -1567,11 +1523,7 @@ object Streams {
     * corpus the store is ~0.3% of it, and each micro-batch touches only
     * its own collision buckets.
     */
-  def minhashDedupBatch(
-      batch: DataFrame,
-      storeDir: String,
-      batchId: Long,
-      minAgree: Int = 26): Unit = {
+  def minhashDedupBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val s = batch.sparkSession
     import s.implicits._
     if (batch.isEmpty) return
@@ -1606,15 +1558,15 @@ object Streams {
           .unionAll(oldSigs.select(col("doc_id").as("oid"), col("sig").as("osig"))),
         "oid")
       .select(col("nid"), col("oid"), agree.as("agree"))
-      .filter(col("agree") >= minAgree)
+      .filter(col("agree") >= MinAgree)
       .groupBy(col("nid"))
       .agg(min(struct(
-        (lit(MinHashPerms.toLong) - col("agree")).as("d"),
+        (lit(MinHashSig.Perms.toLong) - col("agree")).as("d"),
         col("oid").as("dup_of"))).as("m"))
       .select(
         col("nid").as("doc_id"),
         col("m.dup_of").as("dup_of"),
-        (lit(MinHashPerms.toLong) - col("m.d")).as("agree"))
+        (lit(MinHashSig.Perms.toLong) - col("m.d")).as("agree"))
       .localCheckpoint()
     landBatch(decisions, s"$storeDir/decisions", "batch_id", batchId)
     landBatch(
@@ -1640,13 +1592,8 @@ object Streams {
       docs: DataFrame,
       storeDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
-      minAgree: Int = 26): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        minhashDedupBatch(b, storeDir, id, minAgree))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] =
+    batchSink(docs, checkpointDir, trigger)(minhashDedupBatch(_, storeDir, _))
 
   /** The surviving (deduplicated) doc ids in the [[minhashDedupSink]]
     * index, with the batch that admitted each.

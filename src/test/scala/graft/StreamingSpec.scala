@@ -601,7 +601,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_hhmv_ckpt").toString
     val mem = MemoryStream[Tele]
     val q = Streams
-      .hhMvSink(mem.toDF(), mv, ckpt, k = 8, Trigger.ProcessingTime("0 seconds"))
+      .hhMvSink(mem.toDF(), mv, ckpt, Trigger.ProcessingTime("0 seconds"))
       .start()
     def t(s: String, id: String) = Tele("S", ts(s), 1.0, None, id)
     // two days, three series, split across two batches; k=8 >= 3 distinct
@@ -617,7 +617,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b1); q.processAllAvailable()
     q.stop()
     def readHh() = Streams
-      .mvHeavyHitters(spark, mv, "2024-08-25", "2024-08-26", k = 8)
+      .mvHeavyHitters(spark, mv, "2024-08-25", "2024-08-26")
       .collect()
       .map(r => r.getAs[String]("timeseries_id") ->
         ((r.getAs[Long]("est"), r.getAs[Long]("n_total"))))
@@ -626,13 +626,13 @@ class StreamingSpec extends SparkSpec {
     assert(got === Map(
       "id-hot" -> ((4L, 7L)), "id-warm" -> ((2L, 7L)), "id-cold" -> ((1L, 7L))))
     // day-range pruning: day 25 alone sees only its own rows
-    val d25 = Streams.mvHeavyHitters(spark, mv, "2024-08-25", "2024-08-25", k = 8)
+    val d25 = Streams.mvHeavyHitters(spark, mv, "2024-08-25", "2024-08-25")
       .collect().map(r => r.getAs[String]("timeseries_id") -> r.getAs[Long]("est")).toMap
     assert(d25 === Map("id-hot" -> 2L, "id-warm" -> 1L))
     // replay batch 1 (at-least-once): the overwritten partial summarizes
     // the same rows, so the merged read is unchanged
     import spark.implicits._
-    Streams.hhMvBatch(b1.toDF(), mv, batchId = 1L, k = 8)
+    Streams.hhMvBatch(b1.toDF(), mv, batchId = 1L)
     assert(readHh() === got)
   }
 
@@ -1436,6 +1436,34 @@ class StreamingSpec extends SparkSpec {
     assert(Streams.Resolved.get(spark, out).exists(_.rows.isEmpty))
   }
 
+  test("a fold writes one file per date partition below the target file size: window fold, resolved-set fold, direct tier") {
+    val delta = java.nio.file.Files.createTempDirectory("graft_foldfiles").toString
+    val direct = java.nio.file.Files.createTempDirectory("graft_foldfiles_direct").toString
+    // 12 rows over two dates: more rows per date than local slices
+    def batch(v: Double) = (0 until 12).map(i =>
+      Tele("S", ts(f"2024-08-${28 + i % 2}%02d 10:$i%02d:00"), v + i, None, s"id-${i % 5}")).toDF()
+    /** parquet data files per `event_date=` directory of `dir` */
+    def filesPerDate(dir: String): Map[String, Int] =
+      new java.io.File(dir).listFiles().toSeq.filter(_.getName.startsWith("event_date="))
+        .map(d => d.getName -> d.list().count(_.endsWith(".parquet"))).toMap
+    val want = Map("event_date=2024-08-28" -> 1, "event_date=2024-08-29" -> 1)
+    // no live partition and no set: the window fold
+    Seq(0L, 1L).foreach(i => Streams.upsertDeltaBatch(batch(i), delta, i, compactEvery = 99))
+    Streams.compactUpsertDeltas(spark, delta)
+    assert(filesPerDate(delta) === want)
+    // live partitions and this session's set: the resolved-set fold
+    Seq(2L, 3L).foreach(i => Streams.upsertDeltaBatch(batch(i), delta, i, compactEvery = 99))
+    assert(Streams.Resolved.get(spark, delta).exists(_.rows.nonEmpty), "premise: the set holds the landings")
+    Streams.compactUpsertDeltas(spark, delta)
+    assert(filesPerDate(delta) === want)
+    // live partitions and no set: the window fold over them
+    Streams.upsertDeltaBatch(batch(4), delta, 4L, compactEvery = 99)
+    assert(foldDistributed(spark, delta) === 1)
+    assert(filesPerDate(delta) === want)
+    Seq(0.0, 1.0).foreach(v => Streams.upsertBatch(batch(v), direct))
+    assert(filesPerDate(direct) === want)
+  }
+
   /** Name and length of every file under `dir`, recursively. */
   private def filesUnder(dir: String): Set[(String, Long)] = {
     val root = java.nio.file.Paths.get(dir)
@@ -1524,6 +1552,12 @@ class StreamingSpec extends SparkSpec {
     assert(strays(Seq(streams), "row_number\\(", streams, "firstPerKey") === Nil)
     assert(strays(Seq(streams), "firstPerKey\\(", streams,
       "firstPerKey", "dedupBatch", "deltaWinners") === Nil)
+    // one foreachBatch sink chain; only it and the ingest sink checkpoint
+    assert(strays(Seq(streams), "\\.foreachBatch\\(", streams, "batchSink") === Nil)
+    assert(strays(Seq(streams), "\"checkpointLocation\"", streams,
+      "batchSink", "ingestFiles") === Nil)
+    // the key and the summary sizes are constants, never parameters
+    assert(strays(Seq(streams), "\\b(seriesCol|tsCol|k|minAgree)\\s*:\\s*[A-Z]", streams) === Nil)
   }
 
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
