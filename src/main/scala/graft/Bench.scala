@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.DataFrame
-import Harness.jq
+import Harness.{fixed, jq}
 import org.apache.spark.sql.functions.{avg, col, count, lit, row_number, sum}
 
 /** Benchmark harness. Timing discipline (why this is not a single-pass
@@ -13,13 +13,9 @@ import org.apache.spark.sql.functions.{avg, col, count, lit, row_number, sum}
   * to one-off GC/scheduler noise in either pass.
   */
 object Bench {
-  /** `%.3f` under `Locale.ROOT`: a comma-decimal default locale (de_DE)
-    * must not turn a JSON number into two. */
-  private def f3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
-
   /** The canary fragment of the main JSON line. */
   private[graft] def canaryFragment(probes: Int, startSec: Double, endSec: Double): String =
-    s""","canary":{"probes":$probes,"start_sec":${f3(startSec)},"end_sec":${f3(endSec)},"drift":${f3(endSec / startSec)}}"""
+    s""","canary":{"probes":$probes,"start_sec":${fixed(startSec)},"end_sec":${fixed(endSec)},"drift":${fixed(endSec / startSec)}}"""
 
   // Canary-normalized totals (r19; VERDICT r18 items 2+5). The raw totals
   // ride whatever the host is doing (the r16→r18 hash series moved ±20%
@@ -35,7 +31,7 @@ object Bench {
 
   /** A canary-normalized total fragment, `"field":<t in reference seconds>`. */
   private[graft] def normFragment(field: String, t: Double, canaryMean: Double): String =
-    s""","$field":${f3(t * CanaryRefSec / canaryMean)}"""
+    s""","$field":${fixed(t * CanaryRefSec / canaryMean)}"""
 
   /** The host-speed estimate for a series: the mean of the canary probes
     * timed just before and just after it, None (no normalized field) when

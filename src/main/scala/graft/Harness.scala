@@ -117,4 +117,11 @@ object Harness {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c            => c.toString
   } + "\""
+
+  /** `x` with `digits` decimals under `Locale.ROOT`, the one number
+    * formatter of the mains' output. Under a comma-decimal default locale
+    * (de_DE) `%.3f` prints `0,734`: a JSON number splits in two, and a
+    * tool reading `min=([\d.]+)` takes the value as 0 s. */
+  def fixed(x: Double, digits: Int = 3): String =
+    s"%.${digits}f".formatLocal(java.util.Locale.ROOT, x)
 }

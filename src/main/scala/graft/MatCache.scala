@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.ConcurrentHashMap
-import scala.jdk.CollectionConverters._
+import scala.collection.concurrent.TrieMap
 
-/** Session-scoped materialization cache for the small derived frames the
+/** Session-scoped materialization cache for the small derived values the
   * operator families share: the near-dup pair graph (consumed by
-  * ngram-jaccard, triangles, PageRank, and connected components) and the
-  * trained IVF / PQ codebooks (consumed by the ANN family and SemDeDup).
+  * ngram-jaccard, triangles, PageRank, and connected components), the
+  * trained IVF / PQ codebooks (consumed by the ANN family and SemDeDup),
+  * and the scalars and paths their builders derive once per dataset (the
+  * corpus doc count, the two candidate-volume gates, the media store's
+  * directory).
   *
   * This is the "materialize the index once for the whole family" discipline
   * a production deployment runs as an offline job — expressed engine-side,
@@ -17,15 +19,30 @@ import scala.jdk.CollectionConverters._
   * builder); corpus-sized frames must never be cached — the memory cost
   * would scale with the data, not the schema.
   *
-  * Keyed by (session identity, builder key): a DataFrame is only valid in
-  * the session that built it, and tests that run the same builder against
-  * fixture directories get distinct entries per directory.
+  * Keyed by (session, builder key): a DataFrame is only valid in the
+  * session that built it, and tests that run the same builder against
+  * fixture directories get distinct entries per directory. The key holds
+  * the `SparkSession` itself, whose `equals` is identity, so two sessions
+  * never share an entry. A map keyed by `identityHashCode(session)` (the
+  * ADVICE r12 hazard) could: a session collected while its entry stayed
+  * could hand its hash, and with it a stale value, to a new session. Here
+  * an entry keeps its session reachable, so it lives as long as the
+  * session's cached pair graph already did (a DataFrame holds its
+  * session); the scalars add three Longs and one path per (session,
+  * dataset), and nothing is evicted.
+  *
+  * A builder may look up other entries (the pair-graph builder reads the
+  * doc count): no lock is held while it runs. Two threads that miss one
+  * key at once may both build it; both get the value stored first.
   */
 object MatCache {
-  private val m = new ConcurrentHashMap[(Int, String), DataFrame]()
+  private val m = TrieMap.empty[(SparkSession, String), Any]
+
+  def value[T](s: SparkSession, key: String)(build: => T): T =
+    m.getOrElseUpdate((s, key), build).asInstanceOf[T]
 
   def df(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    m.computeIfAbsent((System.identityHashCode(s), key), _ => build)
+    value(s, key)(build)
 
   /** Block-manager ids of every RDD a cached artifact's plan reads from —
     * the blocks that must SURVIVE a [[sweepTransients]]. Collected across
@@ -34,10 +51,12 @@ object MatCache {
     * session's sweep silently evict another's artifacts.
     */
   private def pinnedRddIds: Set[Int] =
-    m.values.asScala.flatMap { df =>
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }
+    m.values.flatMap {
+      case df: org.apache.spark.sql.Dataset[_] =>
+        df.queryExecution.analyzed.collect {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+        }
+      case _ => Nil
     }.toSet
 
   /** Free every persisted RDD except the cached artifacts' own blocks.

@@ -31,6 +31,13 @@ object QTime {
   private[graft] def evalRows(df: DataFrame, forceHash: Boolean): Long =
     if (forceHash) hashConsumer(df).head.getLong(0)
     else df.count()
+
+  /** A key's result line; the sf100 gate and A/B tools parse its
+    * `min=([\d.]+)`, so the times print under `Locale.ROOT`. */
+  private[graft] def line(name: String, rows: Long, passSecs: Seq[Double]): String =
+    s"[qtime] $name rows=$rows min=${Harness.fixed(passSecs.min)} s " +
+      s"(passes: ${passSecs.map(Harness.fixed(_)).mkString(", ")})"
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
@@ -76,7 +83,7 @@ object QTime {
           evalRows(fn(spark, sfDir), forceHash)
           (System.nanoTime() - t0) / 1e9
         }
-        println(f"[qtime] $n rows=$r0 min=${ts.min}%.3f s (passes: ${ts.map(t => f"$t%.3f").mkString(", ")})")
+        println(line(n, r0, ts))
       }
     }
     spark.stop()

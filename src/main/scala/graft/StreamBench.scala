@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import Harness.jq
+import Harness.{fixed, jq}
 
 /** Measured facts for the streaming surface (r14; VERDICT r13 item 4):
   * the 19 StreamChecks contracts prove the kernels CORRECT, but nothing
@@ -49,6 +49,16 @@ object StreamBench {
       col("value"),
       lit(null).cast("byte").as("fc1_flag"),
       col("user_id").cast("string").as("timeseries_id"))
+
+  private def rowsPerSec(rows: Long, wall: Double): Long =
+    if (wall > 0) (rows / wall).toLong else 0L
+
+  /** One kernel's JSON record; `extra` is a `,"field":value` tail. */
+  private[graft] def recordJson(
+      rows: Long, wall: Double, perBatchMs: Seq[Long], extra: String): String =
+    s"""{"rows":$rows,"wall_sec":${fixed(wall, 2)},"rows_per_sec":${rowsPerSec(rows, wall)},""" +
+      s""""n_batches":${perBatchMs.size},""" +
+      s""""batch_ms":[${perBatchMs.mkString(",")}]$extra}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -131,13 +141,9 @@ object StreamBench {
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def record(name: String, rows: Long, wall: Double, perBatchMs: Seq[Long],
         extra: String = ""): Unit = {
-      val rps = if (wall > 0) (rows / wall).toLong else 0L
-      results(name) =
-        f"""{"rows":$rows,"wall_sec":$wall%.2f,"rows_per_sec":$rps,""" +
-          s""""n_batches":${perBatchMs.size},""" +
-          s""""batch_ms":[${perBatchMs.mkString(",")}]$extra}"""
-      println(f"[streambench] $name: $rows rows in $wall%.2f s " +
-        f"($rps rows/s, ${perBatchMs.size} batches)")
+      results(name) = recordJson(rows, wall, perBatchMs, extra)
+      println(s"[streambench] $name: $rows rows in ${fixed(wall, 2)} s " +
+        s"(${rowsPerSec(rows, wall)} rows/s, ${perBatchMs.size} batches)")
     }
 
     // ---- 1. ingest: JSON landing -> day-partitioned parquet
@@ -266,7 +272,7 @@ object StreamBench {
       val nDrift = streaming.Streams.mvMixDrift(spark, dir("cmv_out")).count()
       val readSec = (System.nanoTime() - t0) / 1e9
       record("count_mv", nEvents, wall, perBatch,
-        f""","mv_read_sec":$readSec%.2f,"drift_rows":$nDrift""")
+        s""","mv_read_sec":${fixed(readSec, 2)},"drift_rows":$nDrift""")
     }
 
     // ---- 4b. CM-sketch MV maintenance + a point-frequency read (r17;
@@ -290,7 +296,7 @@ object StreamBench {
         .count()
       val readSec = (System.nanoTime() - t0) / 1e9
       record("cm_mv", nEvents, wall, perBatch,
-        f""","mv_read_sec":$readSec%.2f,"probe_keys":$nEst""")
+        s""","mv_read_sec":${fixed(readSec, 2)},"probe_keys":$nEst""")
     }
 
     // ---- 4c. stateful kernels (the flatMapGroupsWithState family) —

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import Harness.fixed
 import org.apache.spark.sql.functions._
 
 /** Price the delta tier's MERGE-ON-READ view (r17; VERDICT r16 item 4):
@@ -81,8 +82,8 @@ object UpsertReadBench {
       val (sec, rows) = time(mk)
       require(rows == expect, s"$tag rows=$rows expected=$expect")
       results(tag) =
-        f"""{"backlog_batches":$backlog,"read_sec":$sec%.2f,"rows":$rows}"""
-      println(f"[upsertread] $tag: $sec%.2f s ($rows rows, backlog $backlog)")
+        s"""{"backlog_batches":$backlog,"read_sec":${fixed(sec, 2)},"rows":$rows}"""
+      println(s"[upsertread] $tag: ${fixed(sec, 2)} s ($rows rows, backlog $backlog)")
     }
 
     // backlog 0: merge-on-read over a fully-compacted store must price at
@@ -107,8 +108,8 @@ object UpsertReadBench {
       val n = streaming.Streams.compactUpsertDeltas(spark, store)
       val sec = (System.nanoTime() - t0) / 1e9
       require(n == 8, s"final compaction folded $n of 8")
-      results("compact_8") = f"""{"folded":$n,"compact_sec":$sec%.2f}"""
-      println(f"[upsertread] compact_8: $sec%.2f s")
+      results("compact_8") = s"""{"folded":$n,"compact_sec":${fixed(sec, 2)}}"""
+      println(s"[upsertread] compact_8: ${fixed(sec, 2)} s")
       price("compacted_only_after", 0,
         () => spark.read.parquet(store), expectRows(NBatches))
     }

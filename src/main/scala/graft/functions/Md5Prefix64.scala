@@ -63,3 +63,34 @@ object Md5Prefix64 {
     GraftShims.column(Md5Prefix64(GraftShims.expression(c)))
   }
 }
+
+/** The Count-Min geometry of the frequency MVs (`q_agg_cm_mv`,
+  * `Streams.cmMvBatch` and its reader `Streams.cmEstimate`): [[Depth]]
+  * rows of [[Width]] cells, row `dep` bucketing a key into
+  * `md5Prefix64("<dep>:<key>") % Width`. A writer and a reader that
+  * disagree on any of it mis-estimate without an error, so it is defined
+  * once, for Spark and for the DuckDB oracle.
+  */
+object CountMin {
+  val Depth = 4
+  val Width = 512
+
+  /** One row per depth: `explode` of the rows' indices 0 until [[Depth]]. */
+  def deps: Column =
+    org.apache.spark.sql.functions.explode(
+      org.apache.spark.sql.functions.expr(s"sequence(0, ${Depth - 1})"))
+
+  /** The cell of string `key` in row `dep`. */
+  def bucket(dep: Column, key: Column): Column = {
+    import org.apache.spark.sql.functions.{concat, lit}
+    Md5Prefix64.md5Prefix64(concat(dep.cast("string"), lit(":"), key)) % Width
+  }
+
+  /** DuckDB mirror of [[deps]]: a one-column `dep` relation. */
+  val depsSql: String = s"(SELECT unnest([${(0 until Depth).mkString(", ")}]) AS dep)"
+
+  /** DuckDB mirror of [[bucket]] over the SQL expressions `dep` and a
+    * VARCHAR `key`. */
+  def bucketSql(dep: String, key: String): String =
+    s"CAST(('0x' || substr(md5(CAST($dep AS VARCHAR) || ':' || $key), 1, 8))::BIGINT % $Width AS BIGINT)"
+}

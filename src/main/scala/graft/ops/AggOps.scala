@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, U}
+import graft.functions.CountMin
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.4 group D — aggregation. The reference's only aggregate is a
@@ -845,20 +846,20 @@ object AggOps {
     // against a broadcast 2048-row merged table.
     Q(
       "q_agg_cm_mv",
-      """WITH nn AS (
+      s"""WITH nn AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day
         |  FROM events WHERE user_id >= 0),
         |h AS (
         |  SELECT day, ds.dep AS dep,
-        |    CAST(('0x' || substr(md5(CAST(ds.dep AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 512 AS BIGINT) AS bkt
-        |  FROM nn CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS dep) ds),
+        |    ${CountMin.bucketSql("ds.dep", "CAST(user_id AS VARCHAR)")} AS bkt
+        |  FROM nn CROSS JOIN ${CountMin.depsSql} ds),
         |daily AS (SELECT day, dep, bkt, count(*) AS cnt FROM h GROUP BY 1, 2, 3),
         |m AS (SELECT dep, bkt, CAST(sum(cnt) AS BIGINT) AS cell FROM daily GROUP BY 1, 2),
         |p AS (SELECT DISTINCT user_id FROM nn WHERE user_id % 10 = 0),
         |ph AS (
         |  SELECT user_id, ds.dep AS dep,
-        |    CAST(('0x' || substr(md5(CAST(ds.dep AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 512 AS BIGINT) AS bkt
-        |  FROM p CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS dep) ds),
+        |    ${CountMin.bucketSql("ds.dep", "CAST(user_id AS VARCHAR)")} AS bkt
+        |  FROM p CROSS JOIN ${CountMin.depsSql} ds),
         |est AS (
         |  SELECT user_id, CAST(min(cell) AS BIGINT) AS cm_est
         |  FROM ph JOIN m USING (dep, bkt) GROUP BY 1),
@@ -868,16 +869,13 @@ object AggOps {
         |SELECT user_id, cm_est, n_exact
         |FROM est JOIN ex USING (user_id) ORDER BY user_id""".stripMargin) {
       (s, d) =>
-        import graft.functions.Md5Prefix64.md5Prefix64
-        def bucket(dep: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          md5Prefix64(concat(
-            dep.cast("string"), lit(":"), col("user_id").cast("string"))) % 512
+        val bucket = CountMin.bucket(col("dep"), col("user_id").cast("string"))
         val nn = U.events(s, d)
           .filter(col("user_id") >= 0)
           .select(col("user_id"), col("ts").cast("date").as("day"))
         val daily = nn
-          .withColumn("dep", explode(expr("sequence(0, 3)")))
-          .groupBy(col("day"), col("dep"), bucket(col("dep")).as("bkt"))
+          .withColumn("dep", CountMin.deps)
+          .groupBy(col("day"), col("dep"), bucket.as("bkt"))
           .agg(count(lit(1)).as("cnt"))
         // the stored MV: daily cell rows round-trip through parquet (same
         // scratch discipline as q_agg_bitmap_mv)
@@ -890,8 +888,8 @@ object AggOps {
           .filter(col("user_id") % 10 === 0)
           .select(col("user_id"))
           .distinct()
-          .withColumn("dep", explode(expr("sequence(0, 3)")))
-          .withColumn("bkt", bucket(col("dep")))
+          .withColumn("dep", CountMin.deps)
+          .withColumn("bkt", bucket)
         val est = probes
           .join(broadcast(merged), Seq("dep", "bkt"))
           .groupBy(col("user_id"))

@@ -70,31 +70,12 @@ object DedupOps {
   private[ops] def windowDfCap(ndocs: Long): Long =
     math.max(MaxWindowDfFloor, ndocs * WindowDfCapPpm / 1000000L)
 
-  /** Session-scoped memo backed by the session's OWN RuntimeConfig
-    * (ADVICE r12: a static map keyed by `identityHashCode(session)` never
-    * evicts — it leaks across long-lived multi-session JVMs, and an
-    * identity-hash reuse after a session is GC'd can replay a stale
-    * decision for a new session. SQLConf lives and dies with its session,
-    * so nothing leaks and nothing aliases; the discriminators are hashed
-    * into the conf key). Two concurrent computes race benignly — both
-    * compute the same deterministic value.
-    */
-  private def memo(s: SparkSession, kind: String, parts: String*)(
-      compute: => String): String = {
-    val key = "spark.graft.internal." + kind + "." +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(parts.mkString("\u0000").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    val cur = s.conf.get(key, "")
-    if (cur.nonEmpty) cur
-    else { val v = compute; s.conf.set(key, v); v }
-  }
-
-  /** Corpus doc count, memoized per (session, dataset): the relative caps
-    * need it, and one count job per dataset per session is the right
-    * price (the builders it feeds are themselves MatCache'd). */
+  /** Corpus doc count, memoized per (session, dataset) in
+    * [[graft.MatCache]]: the relative caps need it, and one count job per
+    * dataset per session is the right price (the builders it feeds are
+    * themselves MatCache'd). */
   private[ops] def docCount(s: SparkSession, d: String): Long =
-    memo(s, "doccount", d)(U.documents(s, d).count().toString).toLong
+    graft.MatCache.value(s, s"doccount:$d")(U.documents(s, d).count())
 
   /** The caps' DuckDB mirrors — scalar subqueries over the same
     * `documents` count the engine uses, all-integer so no float crosses
@@ -523,23 +504,23 @@ object DedupOps {
 
   /** Predicted candidate volume of the exact index. A DATA property
     * (independent of the budget conf), so it is memoized per (session,
-    * dataset) and the routing comparison against the current budget stays
-    * a driver-side long compare ([[pairStats]]). */
+    * dataset) in [[graft.MatCache]] and the routing comparison against the
+    * current budget stays a driver-side long compare ([[pairStats]]). */
   private[ops] def predictedCandidateVolume(s: SparkSession, d: String): Long =
-    memo(s, "pairvolume", d) {
+    graft.MatCache.value(s, s"pairvolume:$d") {
       val (_, dfTbl, _, ranked) = prefixIndexFrames(s, d)
-      probeVolume(jaccardProbe(ranked), dfTbl).toString
-    }.toLong
+      probeVolume(jaccardProbe(ranked), dfTbl)
+    }
 
   /** Predicted candidate volume of the asymmetric containment probe —
     * always well below the exact index's (its prefix is half as long and
     * keeps only the globally rarest digests), so there are corpora where
     * the exact index is refused but this probe is still admitted. */
   private[graft] def containmentProbeVolume(s: SparkSession, d: String): Long =
-    memo(s, "contvolume", d) {
+    graft.MatCache.value(s, s"contvolume:$d") {
       val (_, dfTbl, _, ranked) = prefixIndexFrames(s, d)
-      probeVolume(containmentProbe(ranked), dfTbl).toString
-    }.toLong
+      probeVolume(containmentProbe(ranked), dfTbl)
+    }
 
   /** probe-prefix ⋈ full cold postings on the digest, deduped on the
     * ordered pair — the candidate join both prefix sources share. */

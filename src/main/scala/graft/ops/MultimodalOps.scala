@@ -78,8 +78,9 @@ object MultimodalOps {
   /** Parquet-backed media payload store: one row per document with the three
     * encoded payloads as parquet BINARY columns (`img` P6, `wav` RIFF/WAVE,
     * `y4m` YUV4MPEG2). Materialized ONCE per (session, testdata dir) under
-    * the JVM temp dir, then every decode query READS THE BINARY COLUMN BACK
-    * FROM PARQUET before decoding — the actual storage path a production
+    * the JVM temp dir (the path is kept in [[graft.MatCache]]), then every
+    * decode query READS THE BINARY COLUMN BACK FROM PARQUET before
+    * decoding — the actual storage path a production
     * media pipeline uses (payload bytes live in parquet; a decode job scans
     * the binary column and parses). At 100 TB the synthesize+write step
     * doesn't exist (the payloads already sit in parquet); here it stands in
@@ -87,9 +88,6 @@ object MultimodalOps {
     * per partition, map-side stats — is exactly the production plan.
     */
   object MediaStore {
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
     private def storeDir(d: String): String = {
       val abs = new java.io.File(d).getAbsolutePath
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -100,26 +98,24 @@ object MultimodalOps {
     def payloads(s: org.apache.spark.sql.SparkSession, d: String)
         : org.apache.spark.sql.DataFrame = {
       import s.implicits._
-      val path = built.computeIfAbsent(
-        (System.identityHashCode(s), d),
-        _ => {
-          val dir = storeDir(d)
-          // overwrite on first use per session: the driver regenerates
-          // /root/testdata between rounds, so a stale store must never
-          // survive a testdata regen (the r8 failure class)
-          U.documents(s, d)
-            .select(col("doc_id"), col("n_chars"))
-            .as[(Long, Long)]
-            .map { case (id, n) =>
-              (id,
-                Ppm.encode(syntheticImage(id, n)),
-                Wav.encode(syntheticAudio(id, n)),
-                Y4m.encode(syntheticVideo(id, n)))
-            }
-            .toDF("doc_id", "img", "wav", "y4m")
-            .write.mode("overwrite").parquet(dir)
-          dir
-        })
+      val path = graft.MatCache.value(s, s"mediastore:$d") {
+        val dir = storeDir(d)
+        // overwrite on first use per session: the input corpus may be
+        // regenerated between runs, so a stale store must never survive a
+        // corpus regen (the r8 failure class)
+        U.documents(s, d)
+          .select(col("doc_id"), col("n_chars"))
+          .as[(Long, Long)]
+          .map { case (id, n) =>
+            (id,
+              Ppm.encode(syntheticImage(id, n)),
+              Wav.encode(syntheticAudio(id, n)),
+              Y4m.encode(syntheticVideo(id, n)))
+          }
+          .toDF("doc_id", "img", "wav", "y4m")
+          .write.mode("overwrite").parquet(dir)
+        dir
+      }
       s.read.parquet(path)
     }
   }

@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   *     lineage; near-dup components are dense little cliques (diameter ~2-3
   *     at any corpus size — docs at Jaccard >= 0.8 of a common neighbor are
   *     near each other too), so the loop converges in a handful of rounds.
+  *     Its precondition: every node fewer than 20 hops from its
+  *     component's minimum doc id; a deeper component fails loudly, naming
+  *     the bound ([[connectedComponents]]).
   */
 object PipelineOps {
 
@@ -280,7 +283,10 @@ object PipelineOps {
     // recursion. The dedup graph's components are tiny (a few hundred
     // nodes), so the closure's O(component²) rows are nothing next to the
     // pair pipeline that feeds it. ScalaTest still cross-checks against a
-    // driver-side union-find on the same pairs.
+    // driver-side union-find on the same pairs. Precondition: every doc is
+    // fewer than 20 hops from its cluster's minimum doc id (the propagation
+    // bound, see connectedComponents); a deeper cluster fails the key
+    // loudly instead of returning partial labels.
     Q(
       "q_dedup_clusters",
       s"""${DedupOps.NgramJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
@@ -470,6 +476,11 @@ object PipelineOps {
     }
   )
 
+  /** The most propagation rounds [[connectedComponents]] runs before it
+    * fails: labels settle after as many rounds as the deepest hop count,
+    * and one more round must see no change. */
+  private val CcMaxIters = 20
+
   /** Connected components by min-label propagation: input is an undirected
     * edge list (a, b); output one row per node with its component's minimum
     * node id as the label. `localCheckpoint` truncates lineage each
@@ -479,42 +490,34 @@ object PipelineOps {
     * ever decrease). Empty edge list => empty result (sum() over an empty
     * frame is null — guarded, not NPE'd).
     *
-    * Plain propagation moves the min label ONE hop per iteration, so the
-    * iteration count is the max eccentricity of a component's min-id node.
-    * Near-dup components are near-cliques (diameter 2-3); for general
-    * graphs `maxIters` bounds the loop and non-convergence THROWS rather
-    * than silently returning partial labels — a wrong cluster assignment
-    * must never look like a result. (For genuinely deep graphs use
-    * [[connectedComponentsAlternating]], which converges in O(log n)
-    * rounds.)
+    * Precondition: every node lies fewer than [[CcMaxIters]] = 20 hops
+    * from its component's minimum id. Propagation moves the min label ONE
+    * hop per iteration, so the iteration count is the max eccentricity of
+    * a component's min-id node, plus the one round that finds no change;
+    * near-dup components are near-cliques (diameter 2-3), far inside the
+    * bound. A deeper component THROWS rather than returning partial
+    * labels — a wrong cluster assignment must never look like a result.
+    * (An alternating-star kernel, which converges in O(log n) rounds on
+    * any graph, took about twice as long on the sf0.01 and sf0.1 pair
+    * graphs: SCALING.md §"Connected components priced".)
     *
-    * `checkpointDir`: by default iterations truncate lineage with
-    * `localCheckpoint` — blocks live on EXECUTORS, so on a real cluster an
-    * executor loss mid-loop kills the job (lineage is gone; Spark cannot
-    * recompute the lost blocks). Pass a reliable dir (HDFS/S3 on a
-    * cluster) to use `checkpoint()` instead: each iteration is written to
-    * fault-tolerant storage and the loop survives executor churn, at the
-    * cost of one distributed write per iteration. Checkpoint FILES are not
-    * deleted until application exit unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
+    * `localCheckpoint` blocks live on the executors: an executor lost
+    * mid-loop fails the query, since the truncated lineage cannot be
+    * recomputed.
     */
-  def connectedComponents(
-      pairs: DataFrame,
-      maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = checkpointer(pairs.sparkSession, checkpointDir)
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // checkpoint the INPUT first: the union below references it twice, and
     // an expensive producing pipeline (e.g. the near-dup pair join) would
     // otherwise run once per reference
-    val p = ckpt(pairs.toDF("a", "b"))
-    val edges = ckpt(
-      p.union(p.select(col("b"), col("a")))
-        .toDF("u", "v"))
-    var labels = ckpt(
-      edges
-        .select(col("u").as("node"))
-        .distinct()
-        .withColumn("label", col("node")))
+    val p = pairs.toDF("a", "b").localCheckpoint()
+    val edges = p.union(p.select(col("b"), col("a")))
+      .toDF("u", "v")
+      .localCheckpoint()
+    var labels = edges
+      .select(col("u").as("node"))
+      .distinct()
+      .withColumn("label", col("node"))
+      .localCheckpoint()
     def labelSum(): Long = {
       val r = labels.agg(sum(col("label"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -522,18 +525,18 @@ object PipelineOps {
     var prevSum = labelSum()
     var converged = labels.isEmpty
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < CcMaxIters) {
       val nbrMin = edges
         .join(labels.withColumnRenamed("node", "v"), "v")
         .groupBy(col("u").as("node2"))
         .agg(min(col("label")).as("nlab"))
       val prev = labels
-      labels = ckpt( // eager: materializes before prev is dropped
-        prev
-          .join(nbrMin, col("node") === col("node2"), "left")
-          .select(
-            col("node"),
-            least(col("label"), coalesce(col("nlab"), col("label"))).as("label")))
+      labels = prev // eager: materializes before prev is dropped
+        .join(nbrMin, col("node") === col("node2"), "left")
+        .select(
+          col("node"),
+          least(col("label"), coalesce(col("nlab"), col("label"))).as("label"))
+        .localCheckpoint()
       unpersistCheckpoint(prev)
       val sumNow = labelSum()
       converged = sumNow == prevSum
@@ -542,148 +545,13 @@ object PipelineOps {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations — " +
-          "component diameter exceeds the bound; raise maxIters or use an " +
-          "alternating-star implementation for deep graphs")
+        s"connectedComponents did not converge in $CcMaxIters iterations: a " +
+          s"component has a node $CcMaxIters hops or more from its minimum " +
+          "id, past the documented bound of q_dedup_clusters' pair graph")
     unpersistCheckpoint(edges)
     unpersistCheckpoint(p)
     labels.select(col("node"), col("label"))
   }
-
-  /** Connected components by the alternating large-star/small-star
-    * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — a published algorithm, re-expressed on DataFrames).
-    * Same contract as [[connectedComponents]] (undirected (a,b) edge list
-    * in, one (node, min-id label) row per node out, non-convergence
-    * THROWS), but where plain propagation moves the min label ONE hop per
-    * round — O(diameter) rounds, hopeless on a deep graph — the
-    * star operations REWIRE the graph toward stars and converge in
-    * O(log n) rounds on any topology:
-    *
-    *   - large-star: per node u, connect every strictly-larger neighbor to
-    *     m = min(N(u) ∪ {u}). Preserves connectivity, strictly shrinks
-    *     large-id-to-large-id edges.
-    *   - small-star: per node u (edges now oriented big→small), connect
-    *     every smaller-or-equal neighbor and u itself to m = min(N(u) ∪
-    *     {u}).
-    *
-    * At the fixpoint the edge set IS the answer: one (node, root) edge per
-    * non-root node. Each round is two join+agg rounds on the node key with
-    * a distinct to keep the edge multiset bounded by the input; lineage is
-    * truncated per round exactly as in [[connectedComponents]].
-    *
-    * Fixpoint detection compares (count, bit_xor(xxhash64(u,v))) across
-    * rounds — one tiny aggregate instead of an except().isEmpty job pair
-    * (xor, unlike sum, is order-independent AND cannot overflow under ANSI
-    * arithmetic); a false positive needs a 64-bit hash-xor collision
-    * between consecutive edge sets of equal size, and the result is still
-    * label-sound because the final labeling reads the converged star edges
-    * directly.
-    */
-  def connectedComponentsAlternating(
-      pairs: DataFrame,
-      maxIters: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = checkpointer(pairs.sparkSession, checkpointDir)
-    // keep the RAW pair list: the star rewiring needs self-loops stripped,
-    // but a node whose only edges are self-loops is still a node — it must
-    // come back labeled as its own root (same contract as
-    // connectedComponents, whose symmetrized edge list keeps it naturally)
-    val raw = ckpt(pairs.toDF("a", "b"))
-    val allNodes = raw.select(col("a").as("node"))
-      .union(raw.select(col("b").as("node")))
-      .distinct()
-    val input = ckpt(raw.filter(col("a") =!= col("b")).distinct())
-    if (input.isEmpty) {
-      val out = ckpt(allNodes.withColumn("label", col("node")))
-      unpersistCheckpoint(input)
-      unpersistCheckpoint(raw)
-      return out
-    }
-
-    // large-star over an arbitrary edge list: symmetrize, m(u) = min over
-    // N(u) ∪ {u}, emit (v, m) for v > u. Output oriented big→small.
-    def largeStar(e: DataFrame): DataFrame = {
-      val nbrs = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      val mins = nbrs.groupBy(col("a"))
-        .agg(least(min(col("b")), first(col("a"))).as("m"))
-      nbrs.join(mins, "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .distinct()
-    }
-
-    // small-star over big→small edges: m(u) = min(N(u)) (all neighbors are
-    // < u here), connect u and each non-min neighbor to m.
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy(col("a")).agg(min(col("b")).as("m"))
-      e.join(mins, "a")
-        .filter(col("b") =!= col("m"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .union(mins.select(col("a"), col("m").as("b")))
-        .distinct()
-    }
-
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(
-        count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var edges = ckpt(largeStar(input))
-    var prevSig = signature(edges)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val prev = edges
-      edges = ckpt(largeStar(smallStar(prev)))
-      unpersistCheckpoint(prev)
-      val sig = signature(edges)
-      converged = sig == prevSig
-      prevSig = sig
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsAlternating did not converge in $maxIters " +
-          "rounds — raise maxIters")
-    // converged star edges: (node, root) per non-root node; small-star's
-    // final form may leave root self-edges out, so roots label themselves;
-    // self-loop-only nodes re-enter as their own root via the anti join
-    val edgeLabels = edges
-      .select(col("a").as("node"), col("b").as("label"))
-      .union(
-        edges.select(col("b")).distinct()
-          .select(col("b").as("node"), col("b").as("label")))
-      .groupBy(col("node")).agg(min(col("label")).as("label"))
-    val labels = edgeLabels.union(
-      allNodes.join(edgeLabels, Seq("node"), "left_anti")
-        .withColumn("label", col("node")))
-    // ckpt, not localCheckpoint: in reliable-checkpointDir mode the RESULT
-    // must survive executor loss too, or the protection the option buys
-    // ends at the return statement
-    val out = ckpt(labels)
-    unpersistCheckpoint(edges)
-    unpersistCheckpoint(input)
-    unpersistCheckpoint(raw)
-    out
-  }
-
-  /** Lineage-truncation strategy for the iterative loops: executor-local
-    * by default (fast, but an executor loss loses blocks), reliable when a
-    * fault-tolerant `dir` is supplied — see [[connectedComponents]]'s
-    * Scaladoc for the tradeoff.
-    */
-  private def checkpointer(
-      spark: SparkSession,
-      dir: Option[String]): DataFrame => DataFrame =
-    dir match {
-      case Some(path) =>
-        spark.sparkContext.setCheckpointDir(path)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
 
   /** Free a localCheckpoint'd DataFrame's storage blocks eagerly. The
     * persisted RDD is the one captured inside the checkpoint's LogicalRDD

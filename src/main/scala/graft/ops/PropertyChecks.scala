@@ -674,8 +674,8 @@ object PropertyChecks {
             subPairs.join(restricted, Seq("a", "b"), "left_semi").count()
           val cov = covered.toDouble / nSub
           if (covered * 100 >= nSub * 98)
-            Right(f"subcorpus-superset recall $covered/$nSub ($cov%.4f) vs $sub")
-          else Left(f"subcorpus-superset recall $covered/$nSub ($cov%.4f) < 0.98 " +
+            Right(s"subcorpus-superset recall $covered/$nSub (${graft.Harness.fixed(cov, 4)}) vs $sub")
+          else Left(s"subcorpus-superset recall $covered/$nSub (${graft.Harness.fixed(cov, 4)}) < 0.98 " +
             s"vs $sub: pairs present in the contained subcorpus are missing at scale")
         }
     }

@@ -342,30 +342,48 @@ object SimOps {
       .withColumn("cnrm", norm(col("cv")))
       .transform(U.ckpt(_, "codebook_seed"))
     for (_ <- 1 to iters) {
-      val newCents = assignCells(e, cents)
-        .select(col("cell"), posexplode(col("embedding")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(
-          sum(floor(col("col").cast("double") * 1000000 + 0.5).cast("long"))
-            .as("sm"),
-          count(lit(1)).as("n"))
-        .select(
-          col("cell"),
-          col("pos"),
-          (col("sm").cast("double") / col("n") / 1000000.0).as("c"))
-        .groupBy(col("cell"))
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as("cv"))
-      cents = cents
-        .select(col("cell"), col("cv").as("prev_cv"))
-        .join(newCents.withColumnRenamed("cv", "next_cv"), Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("next_cv"), col("prev_cv")).as("cv"))
+      cents = recentered(cents, assignCells(e, cents), Seq("cell"), "embedding")
         .withColumn("cnrm", norm(col("cv")))
         .transform(U.ckpt(_, "codebook_iter"))
     }
     cents
+  }
+
+  /** One Lloyd re-centering step, shared by [[trainCodebook]] and
+    * [[trainPqCodebooks]]. `assigned` holds the `keys` of each vector's
+    * centroid and the vector in column `vec`; the new centroid of a key is
+    * the component mean of its vectors in micro-integer units (an exact
+    * long sum of floor(x·1e6 + 0.5) per (key, pos), one double division,
+    * components ordered by pos), so it is deterministic at any
+    * parallelism. Left-joined to the previous centroids `prev` (keys,
+    * `cv`), a key that lost every vector keeps its previous centroid.
+    * Returns (keys, cv).
+    */
+  private def recentered(
+      prev: DataFrame,
+      assigned: DataFrame,
+      keys: Seq[String],
+      vec: String): DataFrame = {
+    val k = keys.map(col)
+    val next = assigned
+      .select(k :+ posexplode(col(vec)): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(
+        sum(floor(col("col").cast("double") * 1000000 + 0.5).cast("long"))
+          .as("sm"),
+        count(lit(1)).as("n"))
+      .select(k ++ Seq(
+        col("pos"),
+        (col("sm").cast("double") / col("n") / 1000000.0).as("c")): _*)
+      .groupBy(k: _*)
+      .agg(
+        transform(
+          array_sort(collect_list(struct(col("pos"), col("c")))),
+          x => x.getField("c")).as("next_cv"))
+    prev
+      .select(k :+ col("cv").as("prev_cv"): _*)
+      .join(next, keys, "left")
+      .select(k :+ coalesce(col("next_cv"), col("prev_cv")).as("cv"): _*)
   }
 
   /** IVF (inverted-file) ANN search body, parameterized by codebook
@@ -914,34 +932,13 @@ object SimOps {
       .withColumn("cvv", dot(col("cv"), col("cv")))
       .transform(U.ckpt(_, "pqbooks_seed"))
     for (_ <- 1 to iters) {
-      val next = e
+      val assigned = e
         .crossJoin(broadcast(pqBooksRow(books)))
         .select(
           col("sub"),
           bestPqCell(col("cbs"), col("sub"), col("sv"), col("svv")).as("cell"),
           col("sv"))
-        .select(col("sub"), col("cell"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("cell"), col("pos"))
-        .agg(
-          sum(floor(col("col") * 1000000 + 0.5).cast("long")).as("sm"),
-          count(lit(1)).as("n"))
-        .select(
-          col("sub"),
-          col("cell"),
-          col("pos"),
-          (col("sm").cast("double") / col("n") / 1000000.0).as("c"))
-        .groupBy(col("sub"), col("cell"))
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as("next_cv"))
-      books = books
-        .select(col("sub"), col("cell"), col("cv").as("prev_cv"))
-        .join(next, Seq("sub", "cell"), "left")
-        .select(
-          col("sub"),
-          col("cell"),
-          coalesce(col("next_cv"), col("prev_cv")).as("cv"))
+      books = recentered(books, assigned, Seq("sub", "cell"), "sv")
         .withColumn("cvv", dot(col("cv"), col("cv")))
         .transform(U.ckpt(_, "pqbooks_iter"))
     }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.faults.FaultRules
-import graft.functions.MinHashSig
+import graft.functions.{CountMin, MinHashSig}
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1390,7 +1390,8 @@ object Streams {
 
   /** One micro-batch of the Count-Min frequency MV (`q_agg_cm_mv`'s
     * streaming maintenance path): the batch's series ids hash into
-    * depth×width = 4×512 count cells per day, landed with [[landBatch]].
+    * depth×width = 4×512 count cells per day ([[CountMin]], shared with
+    * the reader [[cmEstimate]]), landed with [[landBatch]].
     * Cells merge by SUM across stored partials (each cell is an
     * independent count — Cormode & Muthukrishnan 2005), so replay is
     * exactly-once in effect as for [[countMvBatch]], and unlike the MG
@@ -1403,13 +1404,11 @@ object Streams {
     landBatch(
       batch
         .withColumn("day", to_date(col("timestamp")))
-        .withColumn("dep", explode(expr("sequence(0, 3)")))
+        .withColumn("dep", CountMin.deps)
         .groupBy(
           col("day"),
           col("dep"),
-          (graft.functions.Md5Prefix64.md5Prefix64(concat(
-            col("dep").cast("string"), lit(":"), col("timeseries_id"))) % 512)
-            .as("bkt"))
+          CountMin.bucket(col("dep"), col("timeseries_id")).as("bkt"))
         .agg(count(lit(1)).as("cnt")),
       mvDir, "batch_id", batchId)
   }
@@ -1448,10 +1447,8 @@ object Streams {
       .groupBy(col("dep"), col("bkt"))
       .agg(sum(col("cnt")).as("cell"))
     val probes = keys.toDF("timeseries_id")
-      .withColumn("dep", explode(expr("sequence(0, 3)")))
-      .withColumn("bkt",
-        graft.functions.Md5Prefix64.md5Prefix64(concat(
-          col("dep").cast("string"), lit(":"), col("timeseries_id"))) % 512)
+      .withColumn("dep", CountMin.deps)
+      .withColumn("bkt", CountMin.bucket(col("dep"), col("timeseries_id")))
     probes
       .join(broadcast(cells), Seq("dep", "bkt"), "left")
       .na.fill(0L, Seq("cell"))

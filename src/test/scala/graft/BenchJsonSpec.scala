@@ -30,6 +30,27 @@ class BenchJsonSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(saved)
   }
 
+  test("QTime's line and a StreamBench record keep their numbers under a de_DE default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(String.format("%.3f", Double.box(0.734)) === "0,734", "premise: de_DE uses a decimal comma")
+      // the regex the sf10/sf100 graph gates read QTime's output with
+      val qtime = """\[qtime\] (\S+) rows=(\d+) min=([\d.]+) s""".r.unanchored
+      QTime.line("q_a", 42L, Seq(1.25, 0.734)) match {
+        case qtime(name, rows, min) =>
+          assert((name, rows, min) === ("q_a", "42", "0.734"))
+        case other => fail(s"no match: $other")
+      }
+      val rec = mapper.readTree(StreamBench.recordJson(
+        1000L, 2.5, Seq(10L, 20L), s""","mv_read_sec":${Harness.fixed(0.25, 2)}"""))
+      assert(rec.get("wall_sec").asDouble === 2.5)
+      assert(rec.get("rows_per_sec").asLong === 400L)
+      assert(rec.get("batch_ms").size === 2)
+      assert(rec.get("mv_read_sec").asDouble === 0.25)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("a series is normalized by the mean of the canary probes bracketing it; a failed probe omits the field") {
     // count series: (start, end); hash series: (end, after hash)
     val (start, end, afterHash) = (Some(1.0), Some(2.0), Some(4.0))

@@ -102,38 +102,22 @@ class EdgeCaseSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("connectedComponents with a reliable checkpoint dir matches localCheckpoint labels") {
+  test("connectedComponents: 19 hops converge, 20 fail naming the bound") {
     import spark.implicits._
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L)).toDF("a", "b")
-    val dir = new java.io.File("target/test-cc-checkpoint").getAbsolutePath
-    val got = graft.ops.PipelineOps
-      .connectedComponents(pairs, checkpointDir = Some(dir))
+    // path graph 1-2-...-n: the min id is n - 1 hops from the far end, and
+    // propagation needs one round per hop plus one that sees no change
+    def path(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+    val got = graft.ops.PipelineOps.connectedComponents(path(20))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = graft.ops.PipelineOps.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === want)
-    // the reliable checkpoint actually wrote to the dir (that IS the
-    // executor-loss protection being bought)
-    assert(new java.io.File(dir).exists())
-  }
-
-  test("alternating-star CC converges on a 50-node path where min-label propagation throws") {
-    import spark.implicits._
-    // path graph 1-2-...-50: min-id eccentricity 49, so one-hop propagation
-    // needs 49 rounds — over the default 20 bound
-    val path = (1L until 50L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalStateException] {
-      graft.ops.PipelineOps.connectedComponents(path).collect()
+    assert(got === (1L to 20L).map(_ -> 1L).toMap)
+    val e = intercept[IllegalStateException] {
+      graft.ops.PipelineOps.connectedComponents(path(21)).collect()
     }
-    val got = graft.ops.PipelineOps.connectedComponentsAlternating(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === (1L to 50L).map(_ -> 1L).toMap)
+    assert(e.getMessage.contains("20 hops"), e.getMessage)
+    assert(e.getMessage.contains("q_dedup_clusters"), e.getMessage)
   }
 
-  test("alternating-star CC equals driver-side union-find on random graphs") {
+  test("connectedComponents equals driver-side union-find on random graphs") {
     import spark.implicits._
     // deterministic LCG so the test is reproducible (no Random seed drift)
     var s = 0xDEADBEEFL
@@ -163,17 +147,13 @@ class EdgeCaseSpec extends SparkSpec {
       val want = roots.map { case (x, r) =>
         x -> nodes.filter(y => find(y) == r).min
       }
+      // these fixtures' min-id eccentricities are 7, 7 and 5: inside the
+      // 20-hop bound
       val got = graft.ops.PipelineOps
-        .connectedComponentsAlternating(edges.toDF("a", "b"))
+        .connectedComponents(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === want)
     }
-  }
-
-  test("alternating-star CC: empty edge list yields empty result") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(graft.ops.PipelineOps.connectedComponentsAlternating(empty).count() === 0)
   }
 
   test("set ops on disjoint inputs: intersect empty, except is identity") {
@@ -183,20 +163,14 @@ class EdgeCaseSpec extends SparkSpec {
     assert(a.except(b).orderBy("k").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
-  test("self-loop-only nodes survive BOTH connected-components variants as their own root") {
-    val pairs = Seq((5L, 5L), (1L, 2L)).toDF("a", "b")
-    Seq(
-      graft.ops.PipelineOps.connectedComponents(pairs),
-      graft.ops.PipelineOps.connectedComponentsAlternating(pairs)
-    ).foreach { out =>
-      val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(m === Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
-    }
+  test("self-loop-only nodes survive connectedComponents as their own root") {
+    def labels(pairs: org.apache.spark.sql.DataFrame) =
+      graft.ops.PipelineOps.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(Seq((5L, 5L), (1L, 2L)).toDF("a", "b")) ===
+      Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
     // degenerate: ONLY self-loops — every node labels itself
-    val loops = Seq((7L, 7L), (9L, 9L)).toDF("a", "b")
-    val alt = graft.ops.PipelineOps.connectedComponentsAlternating(loops)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt === Map(7L -> 7L, 9L -> 9L))
+    assert(labels(Seq((7L, 7L), (9L, 9L)).toDF("a", "b")) === Map(7L -> 7L, 9L -> 9L))
   }
 
   test("chunking invariants: full token coverage, 16-token overlap, tails never empty") {

@@ -179,6 +179,46 @@ class RegistrySpec extends SparkSpec {
     assert(builds === 2, "a different key must build independently")
   }
 
+  test("MatCache values: one build per (session, key), nested lookups, no sharing across sessions") {
+    val k = s"registryspec-value-${System.nanoTime()}"
+    var builds = 0
+    def outer(s: org.apache.spark.sql.SparkSession): Long =
+      MatCache.value(s, k) {
+        builds += 1
+        // a builder that reads another entry, as the pair graph reads the
+        // doc count
+        MatCache.value(s, k + ":inner") { builds += 1; 20L } + 1L
+      }
+    assert(outer(spark) === 21L)
+    assert(outer(spark) === 21L)
+    assert(builds === 2, "a hit must not rebuild, inner or outer")
+    val other = spark.newSession()
+    assert(outer(other) === 21L)
+    assert(builds === 4, "another session builds its own entries")
+  }
+
+  test("the pair-graph family keeps one connected-components kernel and one session cache") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 40, s"premise: the main sources are under $root")
+    def hits(pattern: String): Seq[String] = {
+      val re = pattern.r
+      files.flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if re.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    }
+    assert(hits("System\\.identityHashCode") === Nil, "a session key must be the session")
+    assert(hits("spark\\.graft\\.internal\\.") === Nil, "memos live in MatCache, not in SQLConf")
+    assert(hits("setCheckpointDir") === Nil, "a library call must not set the checkpoint dir")
+    assert(hits("checkpointDir\\s*:\\s*Option") === Nil, "no reliable-checkpoint option")
+    assert(hits("def connectedComponents").size === 1, "one connected-components kernel")
+  }
+
   for (q <- Registry.all) {
     test(s"${q.name} runs and is deterministic at sf0.001") {
       val a = q.fn(spark, sfDir).collect()
