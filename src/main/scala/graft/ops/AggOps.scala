@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Q, U}
 import graft.functions.CountMin
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.4 group D — aggregation. The reference's only aggregate is a
@@ -755,7 +756,7 @@ object AggOps {
       // q_ingest_roundtrip; see U.scratchDir)
       val tmp = U.scratchDir("bitmap_mv", d)
       daily.write.mode("overwrite").parquet(tmp)
-      s.read.parquet(tmp)
+      Tables.read(s, tmp)
         .groupBy(col("event_type"), col("word"))
         .agg(bit_or(col("bits")).as("bits"), count(lit(1)).as("n_partials"))
         .groupBy(col("event_type"))
@@ -881,7 +882,7 @@ object AggOps {
         // scratch discipline as q_agg_bitmap_mv)
         val tmp = U.scratchDir("cm_mv", d)
         daily.write.mode("overwrite").parquet(tmp)
-        val merged = s.read.parquet(tmp)
+        val merged = Tables.read(s, tmp)
           .groupBy(col("dep"), col("bkt"))
           .agg(sum(col("cnt")).as("cell"))
         val probes = nn

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Q, U}
 import graft.faults.FaultRules
+import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -142,7 +143,7 @@ object CoreOps {
       // would let a concurrent run overwrite this one mid-read
       val tmp = U.scratchDir("ingest_roundtrip", d)
       U.events(s, d).write.mode("overwrite").parquet(tmp)
-      s.read.parquet(tmp).agg(count(lit(1)).as("n"))
+      Tables.read(s, tmp).agg(count(lit(1)).as("n"))
     },
 
     // Source/sink format coverage beyond parquet (§2.3's "no CSV" gap, in

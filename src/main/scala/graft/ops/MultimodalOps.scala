@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Q, U}
 import graft.multimodal.{Ppm, Wav, Y4m}
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (north star, `BASELINE.json:6`): image/audio/
@@ -116,7 +117,7 @@ object MultimodalOps {
           .write.mode("overwrite").parquet(dir)
         dir
       }
-      s.read.parquet(path)
+      Tables.read(s, path)
     }
   }
 

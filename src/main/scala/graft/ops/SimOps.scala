@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Harness, Q, U}
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1211,8 +1212,8 @@ object SimOps {
       d: String,
       dir: String,
       newVecs: DataFrame): Unit = {
-    val cents = s.read.parquet(s"$dir/codebook")
-    val books = s.read.parquet(s"$dir/pqbooks")
+    val cents = Tables.read(s, s"$dir/codebook")
+    val books = Tables.read(s, s"$dir/pqbooks")
     val e = newVecs
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
@@ -1298,11 +1299,11 @@ object SimOps {
       k: Int = 10,
       queryId: Long = 0L): DataFrame = {
     val dir = annIndexDir(s, d)
-    val cents = s.read.parquet(s"$dir/codebook")
+    val cents = Tables.read(s, s"$dir/codebook")
     val qv = collectedQueryRow(s, d, queryId)
     val cells = probedCells(qv, cents, nprobe)
     val q = qv.select(col("embedding").as("qv"), col("nrm").as("qnrm"))
-    s.read.parquet(s"$dir/ivf")
+    Tables.read(s, s"$dir/ivf")
       .filter(cellIn(cells) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(
@@ -1334,8 +1335,8 @@ object SimOps {
       // n_vectors from the index meta: adaptive sizing with NO extra job
       else adaptiveShortlist(readAnnMeta(s, dir)
         .getProperty("n_vectors").toLong, nprobe)
-    val cents = s.read.parquet(s"$dir/codebook")
-    val books = s.read.parquet(s"$dir/pqbooks")
+    val cents = Tables.read(s, s"$dir/codebook")
+    val books = Tables.read(s, s"$dir/pqbooks")
     val qv = collectedQueryRow(s, d, queryId)
     val cells = probedCells(qv, cents, nprobe)
     val qemb = col("embedding").cast("array<double>")
@@ -1352,14 +1353,14 @@ object SimOps {
     val adc = (0 until PqM)
       .map(i => element_at(col("lut"), lit(i.toLong * 32) + col(s"c$i")))
       .reduce(_ + _)
-    val short = s.read.parquet(s"$dir/pq")
+    val short = Tables.read(s, s"$dir/pq")
       .filter(cellIn(cells) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(lutRow))
       .withColumn("adc", adc)
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(slist)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
-    s.read.parquet(s"$dir/ivf")
+    Tables.read(s, s"$dir/ivf")
       .filter(cellIn(cells))
       .select(col("vec_id"), col("embedding"), col("nrm"))
       .join(broadcast(short), "vec_id")
@@ -1399,7 +1400,7 @@ object SimOps {
           lit(0.0).as("cos_sim")).limit(0)
     }
     val probes = (qb +: planes.indices.map(i => qb ^ (1 << i))).map(Int.box)
-    s.read.parquet(s"$dir/lsh")
+    Tables.read(s, s"$dir/lsh")
       .filter(col("bucket").isin(probes: _*) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(qrow))
       .select(

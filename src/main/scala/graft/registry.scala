@@ -159,18 +159,10 @@ object U {
     f.delete(): Unit
   }
 
-  def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    // Upstream testdata has shipped two physical encodings for timestamps
-    // (TIMESTAMP(NANOS) through round 7; plain NTZ micros from round 8's
-    // regen). Read nanos as raw int64 and NTZ as session-UTC instants so
-    // the raw frame is deterministic under EITHER encoding — downstream
-    // readers ([[events]]) then branch on the observed dtype instead of
-    // hard-pinning one encoding (the r8 failure mode: one upstream regen
-    // broke 63 queries at analysis time).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+  /** Table `name` of the corpus at `dir`, read by [[graft.sources.Tables.read]]
+    * (which owns the timestamp-encoding settings). */
+  def tbl(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.Tables.read(s, s"$dir/$name.parquet")
 
   /** `events` with `ts` normalized to TimestampType (UTC micros) regardless
     * of the file's physical encoding: int64 TIMESTAMP(NANOS) is floored to

@@ -20,6 +20,14 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
+  /** The telemetry key, (series, ts): every store of `Streams` is
+    * written and read by it, and [[upsertPartition]] merges by it, so a
+    * landing and a read can never disagree on it. */
+  object TelemetryKey {
+    val SeriesCol = "timeseries_id"
+    val TsCol = "timestamp"
+  }
+
   /** Day-partitioned parquet, rows within each file sorted by
     * (series, time) so min/max row-group stats make series predicates
     * selective. The standard time-series layout: time prunes directories,
@@ -183,7 +191,7 @@ object Layout {
         .getOrElse(throw new IllegalStateException(s"$ZBoundsFile missing $k"))
         .group(1).toLong
     val (s0, s1, t0, t1) = (field("s0"), field("s1"), field("t0"), field("t1"))
-    val data = spark.read.parquet(dir)
+    val data = Tables.read(spark, dir)
     if (!data.columns.contains("z"))
       throw new IllegalStateException(
         s"$dir has no z column: write it with writeTelemetryZOrdered(..., keepZ = true)")
@@ -295,7 +303,7 @@ object Layout {
     * on *every insert* (`main.rs:101`).
     *
     * Returns (filesBefore, filesAfter), counting the data files
-    * [[graft.streaming.Streams.Footers.files]] lists.
+    * [[Tables.files]] lists.
     */
   def compactPartition(
       spark: SparkSession,
@@ -304,27 +312,26 @@ object Layout {
       targetFileBytes: Long = TargetFileBytes,
       seriesCol: String = "user_id",
       tsCol: String = "ts"): (Int, Int) = {
-    val files = graft.streaming.Streams.Footers.files _
     val before = swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
-      val before = files(fs, path)
-      spark.read.parquet(path.toString)
+      val before = Tables.files(fs, path)
+      Tables.read(spark, path.toString)
         .repartition(filesFor(before.map(_.getLen).sum, targetFileBytes))
         .sortWithinPartitions(col(seriesCol), col(tsCol))
         .write.mode(SaveMode.Overwrite).parquet(tmp)
       before.length
     }
     val (path, _, _) = swapPaths(rootDir, eventDate)
-    (before, files(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path).length)
+    (before, Tables.files(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path).length)
   }
 
   /** Merge `updates` (rows of ONE event date, WITHOUT the event_date
     * column) into that date's partition with upsert semantics: live rows
-    * whose (series, ts) key ([[graft.streaming.Streams.TelemetryKey]])
+    * whose (series, ts) key ([[TelemetryKey]])
     * appears in the batch are replaced, all other live rows survive, new
     * keys append. The rewrite goes through [[swapPartition]], so a
     * complete copy of the data exists at every instant. IDEMPOTENT:
     * re-merging identical updates replaces rows with identical rows —
-    * the property [[graft.streaming.Streams.upsertSink]]
+    * the property `Streams.upsertSink`
     * relies on to make at-least-once `foreachBatch` delivery exactly-once
     * in effect.
     *
@@ -344,17 +351,14 @@ object Layout {
       eventDate: String,
       updates: DataFrame): Unit =
     swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
-      import graft.streaming.Streams.TelemetryKey.{SeriesCol, TsCol}
+      import TelemetryKey.{SeriesCol, TsCol}
       val (merged, liveBytes) =
         if (fs.exists(path)) {
           // schema from one footer, not an inference job per merged date
-          val footers = graft.streaming.Streams.Footers
-          val liveFiles = footers.files(fs, path)
+          val liveFiles = Tables.files(fs, path)
           val first = liveFiles.headOption.getOrElse(
             throw new IllegalStateException(s"upsert: no parquet file under $path"))
-          val live = spark.read
-            .schema(footers.schema(spark, footers.read(spark, first)))
-            .parquet(path.toString)
+          val live = Tables.readWith(spark, path.toString, Tables.footer(spark, first))
           (live
             .join(
               broadcast(updates.select(col(SeriesCol), col(TsCol))),
@@ -383,8 +387,7 @@ object Layout {
       startTs: String,
       endTs: String): DataFrame = {
     ParamLiterals.install(spark)
-    spark.read
-      .parquet(dir)
+    Tables.read(spark, dir)
       .filter(
         col("event_date").between(to_date(lit(startTs)), to_date(lit(endTs))) &&
           col("user_id") === seriesKey &&

@@ -2,6 +2,9 @@ package graft.streaming
 
 import graft.faults.FaultRules
 import graft.functions.{CountMin, MinHashSig}
+import graft.sources.Layout.TelemetryKey
+import graft.sources.Tables
+import TelemetryKey.{SeriesCol, TsCol}
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -119,15 +122,6 @@ object Streams {
     StructField("value", DoubleType),
     StructField("fc1_flag", ByteType),
     StructField("timeseries_id", StringType)))
-
-  /** The telemetry key, (series, ts): every store here is written and read
-    * by it, so a landing and a read can never disagree on it. An object,
-    * not two members: the public members of [[Streams]] are its kernels. */
-  object TelemetryKey {
-    val SeriesCol = "timeseries_id"
-    val TsCol = "timestamp"
-  }
-  import TelemetryKey.{SeriesCol, TsCol}
 
   /** The production trigger of every sink here: one micro-batch per 5
     * minutes, the reference's periodic-job tick (`main.rs:327-331`). */
@@ -733,74 +727,6 @@ object Streams {
         .sortBy(_._1)
   }
 
-  /** Driver-side parquet footer reads, so the tier's DataFrames are built
-    * with no Spark job. `read.parquet(dir)` without a schema runs one
-    * schema-inference job per call, even for a single file, and that job
-    * reads one footer anyway (`mergeSchema` is off): every file of a tier
-    * directory comes from the same writer with the same schema. Reading
-    * that footer here and passing `.schema(...)` gives the same schema.
-    */
-  private[graft] object Footers {
-    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-    import scala.jdk.CollectionConverters._
-
-    /** Parquet data files directly under `dir`, skipping the `_`/`.`
-      * names Spark's file index hides. */
-    def files(fs: FileSystem, dir: Path): Seq[FileStatus] =
-      fs.listStatus(dir).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-
-    def read(s: SparkSession, f: FileStatus): Footer = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, s.sparkContext.hadoopConfiguration))
-      try new Footer(f.getPath, r.getFooter) finally r.close()
-    }
-
-    /** The Spark schema of one footer, converted as Spark's inference
-      * converts it (the writer's schema string, else the parquet types). */
-    def schema(s: SparkSession, f: Footer): StructType =
-      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        .readSchemaFromFooter(f,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(s.sessionState.conf))
-
-    /** A superset of the dates `column` holds in `footers`, as disjoint
-      * inclusive ranges merged from every row group's min/max statistics.
-      * A row group whose statistics show only nulls adds no range. None
-      * when some row group has no usable statistics for the column: the
-      * caller must then treat every date as touched.
-      */
-    def dateRanges(
-        footers: Seq[Footer],
-        column: String): Option[Seq[(java.time.LocalDate, java.time.LocalDate)]] = {
-      import org.apache.parquet.column.statistics.IntStatistics
-      val blocks = footers.flatMap(_.getParquetMetadata.getBlocks.asScala).map { b =>
-        b -> b.getColumns.asScala.find(_.getPath.toDotString == column).map(_.getStatistics)
-      }
-      val usable = blocks.forall {
-        case (_, Some(st: IntStatistics)) if st.hasNonNullValue => true
-        case (b, Some(st)) => st.isNumNullsSet && st.getNumNulls == b.getRowCount
-        case _ => false
-      }
-      if (!usable) None
-      else Some(
-        blocks
-          .collect { case (_, Some(st: IntStatistics)) if st.hasNonNullValue =>
-            (st.getMin, st.getMax) }
-          .sorted
-          .foldLeft(List.empty[(Int, Int)]) {
-            case ((lo, hi) :: done, (a, b)) if a <= hi + 1 => (lo, math.max(hi, b)) :: done
-            case (done, r) => r :: done
-          }
-          .reverse
-          .map { case (lo, hi) =>
-            (java.time.LocalDate.ofEpochDay(lo), java.time.LocalDate.ofEpochDay(hi)) })
-    }
-  }
-
   /** The live (compacted) store and its `event_date=` partition values,
     * None before the first compaction (a store with only `_delta` under it
     * has no live file to take a schema from). Built from one footer.
@@ -814,9 +740,8 @@ object Streams {
       if (!fs.exists(root)) Seq.empty
       else fs.listStatus(root).toSeq.filter(st =>
         st.isDirectory && st.getPath.getName.startsWith("event_date="))
-    parts.iterator.flatMap(p => Footers.files(fs, p.getPath)).nextOption().map { f =>
-      val schema = Footers.schema(s, Footers.read(s, f)).add("event_date", DateType)
-      (s.read.schema(schema).parquet(rootDir),
+    parts.iterator.flatMap(p => Tables.files(fs, p.getPath)).nextOption().map { f =>
+      (Tables.readWith(s, rootDir, Tables.footer(s, f), StructField("event_date", DateType)),
         parts.map(_.getPath.getName.stripPrefix("event_date=")))
     }
   }
@@ -824,16 +749,14 @@ object Streams {
   /** Every pending delta as one DataFrame with its `batch` partition
     * column, schema from `first` (any pending delta footer). */
   private def deltaStore(s: SparkSession, rootDir: String, first: Footer): DataFrame =
-    s.read
-      .schema(Footers.schema(s, first).add("batch", LongType))
-      .parquet(s"$rootDir/_delta")
+    Tables.readWith(s, s"$rootDir/_delta", first, StructField("batch", LongType))
 
   /** Data files of every pending delta directory in `dirs`. */
   private def deltaFiles(
       s: SparkSession,
       dirs: Seq[(Long, org.apache.hadoop.fs.Path)]): Seq[org.apache.hadoop.fs.FileStatus] =
     dirs.flatMap { case (_, p) =>
-      Footers.files(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+      Tables.files(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
     }
 
   /** Conflict resolution across pending deltas: later batch wins, then the
@@ -1009,13 +932,13 @@ object Streams {
     prior.foreach { case (r, before) =>
       if (r.sig == before && batchId > r.maxBatch) {
         import scala.jdk.CollectionConverters._
-        val landed = Footers.files(fs, dst)
-        val footers = landed.map(Footers.read(s, _))
+        val landed = Tables.files(fs, dst)
+        val footers = landed.map(Tables.footer(s, _))
         val blocks = footers.flatMap(_.getParquetMetadata.getBlocks.asScala)
         val bytes = r.bytes + blocks.map(_.getTotalByteSize).sum
         // the landed row count bounds the set's new size before any read-back
         val rowsAtMost = r.rows.size + blocks.map(_.getRowCount).sum
-        footers.headOption.map(Footers.schema(s, _)).filter(sc =>
+        footers.headOption.map(Tables.schema(s, _)).filter(sc =>
           r.schema.forall(_ == sc) && Resolved.fits(rowsAtMost, bytes) &&
             Seq(SeriesCol, TsCol).forall(c => Resolved.keyable(sc(c).dataType))
         ).foreach { sc =>
@@ -1047,7 +970,7 @@ object Streams {
     Resolved.matching(s, rootDir, files) match {
       case Some(r) => foldDates(s, rootDir, r.byDate(s))
       case None =>
-        foldWinners(s, rootDir, deltaWinners(deltaStore(s, rootDir, Footers.read(s, files.head))))
+        foldWinners(s, rootDir, deltaWinners(deltaStore(s, rootDir, Tables.footer(s, files.head))))
     }
     Resolved.drop(s, rootDir)
     val fs = new org.apache.hadoop.fs.Path(rootDir)
@@ -1068,7 +991,7 @@ object Streams {
     * `spark.read.parquet(rootDir)` remains valid for compacted-only reads.
     *
     * Building the view launches no Spark job: the compacted schema comes
-    * from one parquet footer, read on the driver ([[Footers]]). Only the
+    * from one parquet footer, read on the driver ([[graft.sources.Tables]]). Only the
     * caller's action runs jobs. (Past
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32
     * partition directories, Spark's own file index lists with one job.)
@@ -1126,7 +1049,7 @@ object Streams {
         throw new IllegalStateException(s"no upsert store at $rootDir"))
     val set = Resolved.matching(s, rootDir, files)
     // the set's plan reads no pending footer: its signature is the listing
-    val footers = if (set.isDefined) Seq.empty else files.map(Footers.read(s, _))
+    val footers = if (set.isDefined) Seq.empty else files.map(Tables.footer(s, _))
     val winners = set.map(_.winners(s))
       .getOrElse(deltaWinners(deltaStore(s, rootDir, footers.head)))
     live match {
@@ -1141,7 +1064,7 @@ object Streams {
         }
         // the date split is the window plan's alone: the set's anti-join
         // broadcasts, so its plan stays one scan
-        (if (set.isDefined) None else Footers.dateRanges(footers, "event_date")) match {
+        (if (set.isDefined) None else Tables.dateRanges(footers, "event_date")) match {
           case None => antiMerged(lv)
           case Some(ranges) =>
             // when the pending set touches most of the store (backfill),
@@ -1240,8 +1163,7 @@ object Streams {
       mvDir: String,
       startDay: String,
       endDay: String): DataFrame =
-    spark.read
-      .parquet(mvDir)
+    Tables.read(spark, mvDir)
       .filter(col("day").between(lit(startDay).cast("date"), lit(endDay).cast("date")))
       .groupBy(col("timeseries_id"))
       .agg(kll_merge_agg_double(col("sketch"), graft.U.KllK).as("m"))
@@ -1289,8 +1211,7 @@ object Streams {
     * and identical to the batch operator's by construction.
     */
   def mvMixDrift(s: SparkSession, mvDir: String): DataFrame = {
-    val daily = s.read
-      .parquet(mvDir)
+    val daily = Tables.read(s, mvDir)
       .select(
         col("timeseries_id"),
         expr("CAST(datediff(day, DATE '1970-01-01') AS BIGINT)").as("day"),
@@ -1375,8 +1296,7 @@ object Streams {
       new graft.functions.HeavyHitters.MisraGriesMerge(HhK),
       org.apache.spark.sql.Encoders.product[
         graft.functions.HeavyHitters.MGSummary])
-    s.read
-      .parquet(mvDir)
+    Tables.read(s, mvDir)
       .filter(col("day").between(
         lit(startDay).cast("date"), lit(endDay).cast("date")))
       .agg(mergeUdaf(col("hh"), col("n")).as("m"))
@@ -1440,8 +1360,7 @@ object Streams {
       startDay: String,
       endDay: String): DataFrame = {
     import s.implicits._
-    val cells = s.read
-      .parquet(mvDir)
+    val cells = Tables.read(s, mvDir)
       .filter(col("day").between(
         lit(startDay).cast("date"), lit(endDay).cast("date")))
       .groupBy(col("dep"), col("bkt"))
@@ -1483,17 +1402,6 @@ object Streams {
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
 
-  private def readStore(s: SparkSession, dir: String): Option[DataFrame] = {
-    // Only "no store yet" maps to None. A blanket Try(...).toOption here
-    // would also swallow transient read failures (permissions, corrupt
-    // footer) — and a batch that silently matched against NOTHING would
-    // admit every duplicate and break replay idempotence. Those must
-    // propagate and fail the micro-batch so the trigger retries.
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None else Some(s.read.parquet(dir))
-  }
-
   /** One micro-batch of the streaming near-dup index
     * ([[minhashDedupSink]]), exposed for direct replay testing.
     *
@@ -1526,7 +1434,9 @@ object Streams {
     if (batch.isEmpty) return
     val sigs = minhashSigs(batch).localCheckpoint()
     val emptySigs = Seq.empty[(Long, Seq[Long])].toDF("doc_id", "sig")
-    val oldSigs = readStore(s, s"$storeDir/sigs")
+    // a failed read must fail the batch: matched against NOTHING it would
+    // admit every duplicate and break replay idempotence
+    val oldSigs = Tables.find(s, s"$storeDir/sigs")
       .map(_.filter(col("batch_id") < batchId && col("sig").isNotNull)
         .select(col("doc_id"), col("sig")))
       .getOrElse(emptySigs)
@@ -1596,14 +1506,14 @@ object Streams {
     * index, with the batch that admitted each.
     */
   def dedupSurvivors(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(s"$storeDir/sigs")
+    Tables.read(s, s"$storeDir/sigs")
       .select(col("doc_id"), col("batch_id").cast("long").as("batch_id"))
 
   /** Every drop decision recorded by [[minhashDedupSink]]: (doc_id,
     * dup_of, agree, batch_id).
     */
   def dedupDecisions(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(s"$storeDir/decisions")
+    Tables.read(s, s"$storeDir/decisions")
       .select(
         col("doc_id"),
         col("dup_of"),

@@ -197,21 +197,30 @@ class RegistrySpec extends SparkSpec {
     assert(builds === 4, "another session builds its own entries")
   }
 
-  test("the pair-graph family keeps one connected-components kernel and one session cache") {
+  /** The main sources, relative to the repository root, with their lines. */
+  private lazy val mainSources: Seq[(String, Seq[String])] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 40, s"premise: the main sources are under $root")
-    def hits(pattern: String): Seq[String] = {
-      val re = pattern.r
-      files.flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if re.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
-        }
+    files.map(p => p.toString -> Files.readAllLines(p).asScala.toSeq)
+  }
+
+  /** `file:line: text` of each line of `files` that matches `pattern`. */
+  private def hits(
+      pattern: String,
+      files: Seq[(String, Seq[String])] = mainSources): Seq[String] = {
+    val re = pattern.r
+    files.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if re.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("the pair-graph family keeps one connected-components kernel and one session cache") {
     assert(hits("System\\.identityHashCode") === Nil, "a session key must be the session")
     assert(hits("spark\\.graft\\.internal\\.") === Nil, "memos live in MatCache, not in SQLConf")
     assert(hits("setCheckpointDir") === Nil, "a library call must not set the checkpoint dir")
@@ -219,11 +228,78 @@ class RegistrySpec extends SparkSpec {
     assert(hits("def connectedComponents").size === 1, "one connected-components kernel")
   }
 
+  test("one stored-table reader: engine parquet reads take their schema from graft.sources.Tables") {
+    val tables = "src/main/scala/graft/sources/Tables.scala"
+    // the engine's reads; the mains' and checks' reads stay independent witnesses
+    val engine = mainSources.filter { case (p, _) =>
+      (p.startsWith("src/main/scala/graft/ops/") || p.startsWith("src/main/scala/graft/sources/") ||
+        p == "src/main/scala/graft/streaming/Streams.scala" ||
+        p == "src/main/scala/graft/registry.scala") && p != tables
+    }
+    assert(engine.exists(_._1.endsWith("Streams.scala")) && engine.exists(_._1.endsWith("registry.scala")),
+      "premise: the engine sources are scanned")
+    // comment lines blanked, the rest joined, so a read split over lines is seen too
+    def code(lines: Seq[String]) = lines.map { l =>
+      val t = l.trim; if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
+    }.mkString("\n")
+    val schemaLess = engine.flatMap { case (p, lines) =>
+      val src = code(lines)
+      "\\.read\\s*\\.parquet\\(".r.findAllMatchIn(src)
+        .map(m => s"$p:${src.take(m.start).count(_ == '\n') + 1}")
+    }.map("a read.parquet without .schema (read it with Tables.read): " + _)
+    val footerReaders = hits("ParquetFileReader").filterNot(_.startsWith(tables))
+      .map("a ParquetFileReader outside Tables: " + _)
+    val sourcesOnStreaming =
+      hits("graft\\.streaming", mainSources.filter(_._1.startsWith("src/main/scala/graft/sources/")))
+        .filterNot { h => val t = h.split(": ", 2)(1); t.startsWith("*") || t.startsWith("/*") }
+        .map("sources/ depends on streaming/: " + _)
+    val violations = schemaLess ++ footerReaders ++ sourcesOnStreaming
+    assert(violations.isEmpty, violations.mkString("\n"))
+    assert(hits("ParquetFileReader", mainSources.filter(_._1 == tables)).nonEmpty,
+      "premise: Tables reads footers")
+  }
+
+  /** Keys whose second DataFrame build in a session may start Spark jobs
+    * before any action, with the most it may start and why. Every other
+    * key builds with none (no hidden Spark job at construction). */
+  private val constructionJobs: Map[String, (Int, String)] = {
+    val ckpt = "localCheckpoint of a frame its plan reads twice"
+    val count = "corpus row count that sizes the plan"
+    Map(
+      // the loops' counts vary from run to run on the same code and data
+      // (pagerank: 37, 38 and 39 seen; clusters: 25 in every run so far)
+      "q_graph_pagerank" -> (40, "its 10 iterations run at construction"),
+      "q_dedup_clusters" -> (27, "its label-propagation loop runs at construction"),
+      "q_ingest_roundtrip" -> (1, "writes the copy it reads back"),
+      "q_ingest_formats" -> (3, "writes the CSV, JSON and ORC copies it reads back"),
+      "q_agg_bitmap_mv" -> (2, "writes the stored MV it reads back"),
+      "q_agg_cm_mv" -> (2, "writes the stored MV it reads back"),
+      "q_sim_ann_ivf" -> (3, "collectedQueryRow and probedCells collects"),
+      "q_sim_ann_ivfpq" -> (3, "collectedQueryRow and probedCells collects"),
+      "q_sim_ann_lsh" -> (2, "collectedQueryRow and query-bucket collects"),
+      "q_tpch_q11" -> (4, ckpt),
+      "q_tpch_q15" -> (2, ckpt),
+      "q_graph_triangles" -> (1, ckpt),
+      "q_pipeline_dataset_card" -> (3, ckpt),
+      "q_mix_temperature" -> (2, ckpt),
+      "q_text_search" -> (1, ckpt),
+      "q_text_perplexity" -> (2, ckpt),
+      "q_dedup_substring" -> (2, ckpt),
+      "q_dedup_embed_cosine" -> (2, "corpus row count for the all-pairs guard"),
+      "q_dedup_embed_lsh" -> (2, count),
+      "q_dedup_semantic" -> (2, count),
+      "q_sim_knn_graph" -> (2, count))
+  }
+
   for (q <- Registry.all) {
     test(s"${q.name} runs and is deterministic at sf0.001") {
       val a = q.fn(spark, sfDir).collect()
-      val b = q.fn(spark, sfDir).collect()
+      val (df, jobs) = jobsDuring(q.fn(spark, sfDir))
+      val b = df.collect()
       assert(a.toSeq === b.toSeq, s"${q.name} not deterministic across runs")
+      val (bound, why) = constructionJobs.getOrElse(q.name, (0, "no job at construction"))
+      assert(jobs <= bound,
+        s"${q.name}: building the DataFrame started $jobs Spark job(s), at most $bound ($why)")
     }
   }
 }

@@ -10,13 +10,43 @@ import org.apache.spark.sql.types._
   * yield IDENTICAL results over the same instants in EITHER physical
   * encoding, and `U.probeTables` must name drifted columns loudly.
   *
-  * (The nanos fixture stores a plain int64 column: Spark reads parquet
-  * TIMESTAMP(NANOS) as LongType under `nanosAsLong=true`, so the observed
-  * dtype — all the reader branches on — is identical.)
+  * Two nanos fixtures: a plain int64 column, and a true
+  * `INT64 TIMESTAMP(NANOS, false)` column written with parquet's own
+  * example writer, which only `nanosAsLong=true` (set by
+  * [[graft.sources.Tables.read]]) reads, as LongType.
   */
 class SchemaDriftSpec extends SparkSpec {
 
-  private def fixtures(): (String, String) = {
+  /** `rows` as `dir/events.parquet`, one file whose `ts` is parquet
+    * `INT64 TIMESTAMP(NANOS, false)`, the encoding Spark never writes. */
+  private def writeTimestampNanos(dir: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), conf))
+      .withType(schema)
+      .withConf(conf)
+      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    val g = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, ns, uid, et, v, p) =>
+      w.write(g.newGroup().append("event_id", id).append("ts", ns).append("user_id", uid)
+        .append("event_type", et).append("value", v).append("props", p))
+    } finally w.close()
+  }
+
+  private def fixtures(): (String, String, String) = {
     import spark.implicits._
     val base = new java.io.File("target/schema-drift-fixture").getAbsolutePath
     // Three rows spanning a day boundary; micros chosen non-round so the
@@ -26,31 +56,35 @@ class SchemaDriftSpec extends SparkSpec {
       (i.toLong, u, 7L, s"e$i", i * 1.5, s"""{"k":$i}""")
     }
     val nanosDir = s"$base/nanos"
-    rows.map { case (id, u, uid, et, v, p) => (id, u * 1000L, uid, et, v, p) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val nanosRows = rows.map { case (id, u, uid, et, v, p) => (id, u * 1000L, uid, et, v, p) }
+    nanosRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$nanosDir/events.parquet")
+    val tsNanosDir = s"$base/timestamp-nanos"
+    writeTimestampNanos(tsNanosDir, nanosRows)
     val microsDir = s"$base/micros"
     rows.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$microsDir/events.parquet")
-    (nanosDir, microsDir)
+    (nanosDir, microsDir, tsNanosDir)
   }
 
   test("U.events yields identical TimestampType rows in either physical encoding") {
-    val (nanosDir, microsDir) = fixtures()
-    val a = U.events(spark, nanosDir)
-    val b = U.events(spark, microsDir)
-    assert(a.schema("ts").dataType === TimestampType)
-    assert(b.schema("ts").dataType === TimestampType)
+    val (nanosDir, microsDir, tsNanosDir) = fixtures()
+    assert(graft.sources.Tables.read(spark, s"$tsNanosDir/events.parquet").schema("ts").dataType
+      === LongType, "TIMESTAMP(NANOS) reads as raw int64")
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    val ra = a.select(cols.map(col): _*).orderBy("event_id").collect().toSeq
-    val rb = b.select(cols.map(col): _*).orderBy("event_id").collect().toSeq
+    val Seq(ra, rb, rc) = Seq(nanosDir, microsDir, tsNanosDir).map { d =>
+      val e = U.events(spark, d)
+      assert(e.schema("ts").dataType === TimestampType, d)
+      e.select(cols.map(col): _*).orderBy("event_id").collect().toSeq
+    }
     assert(ra === rb)
+    assert(rc === rb)
   }
 
   test("U.tsRangeUs / U.tsUsCol agree across encodings, inclusive bounds") {
-    val (nanosDir, microsDir) = fixtures()
+    val (nanosDir, microsDir, tsNanosDir) = fixtures()
     // Bounds chosen to include exactly the middle row (endUs inclusive at
     // the row's own micros value) in both encodings.
     val startUs = 1704412800123457L
@@ -63,6 +97,7 @@ class SchemaDriftSpec extends SparkSpec {
     }
     assert(run(nanosDir) === Seq(1704499199999999L))
     assert(run(nanosDir) === run(microsDir))
+    assert(run(tsNanosDir) === run(microsDir))
   }
 
   test("tsUsCol is exact on nanos values that misround under double division") {
@@ -87,7 +122,7 @@ class SchemaDriftSpec extends SparkSpec {
   }
 
   test("q_select_by_id_range is encoding-agnostic end-to-end") {
-    val (nanosDir, microsDir) = fixtures()
+    val (nanosDir, microsDir, _) = fixtures()
     val fn = SparkEntry.queries("q_select_by_id_range")
     // Fixture instants are outside the query's fixed Jan-2024 window start,
     // so assert on schema + execution success across encodings plus equal
@@ -95,6 +130,27 @@ class SchemaDriftSpec extends SparkSpec {
     val a = fn(spark, nanosDir).collect().toSeq
     val b = fn(spark, microsDir).collect().toSeq
     assert(a === b)
+  }
+
+  test("Tables.read names the path of a missing table and of a table with no data file") {
+    import java.nio.file.{Files, Paths}
+    val missing = new java.io.File("target/schema-drift-missing").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(missing))
+    val e = intercept[IllegalStateException](graft.sources.Tables.read(spark, missing))
+    assert(e.getMessage.contains(missing), e.getMessage)
+    assert(graft.sources.Tables.find(spark, missing) === None, "no table yet is None")
+    // what a writer leaves around no data: markers, checksums, an empty
+    // partition, and a data file only under a hidden directory
+    val empty = new java.io.File("target/schema-drift-empty").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(empty))
+    Files.createDirectories(Paths.get(s"$empty/k=1"))
+    Files.createFile(Paths.get(s"$empty/_SUCCESS"))
+    Files.createFile(Paths.get(s"$empty/.part-0.parquet.crc"))
+    spark.range(1).write.parquet(s"$empty/_temporary/0")
+    Seq(
+      intercept[IllegalStateException](graft.sources.Tables.read(spark, empty)),
+      intercept[IllegalStateException](graft.sources.Tables.find(spark, empty))
+    ).foreach(e => assert(e.getMessage.contains(empty), e.getMessage))
   }
 
   test("probeTables passes on the real testdata and names a drifted column") {

@@ -36,6 +36,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (r, h.getCount - c0)
   }
 
+  /** Spark jobs launched while `body` runs (listener bus drained on both
+    * sides, so no earlier or later job is counted). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Run `body` with AQE (and optionally auto-broadcast) off so physical
     * plan shapes are fully visible and strategy choices are forced. */
   def withPlanShapeConf[T](disableBroadcast: Boolean = false)(body: => T): T = {

@@ -942,30 +942,13 @@ class StreamingSpec extends SparkSpec {
       "direct tier must land null-ts rows identically")
   }
 
-  /** Spark jobs launched while `body` runs (listener bus drained on both
-    * sides, so no earlier or later job is counted). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** Footers of the pending delta files of a delta-tier store. */
   private def pendingFooters(out: String) = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     new java.io.File(s"$out/_delta").list().filter(_.startsWith("batch=")).toSeq
-      .flatMap(b => Streams.Footers.files(fs, new org.apache.hadoop.fs.Path(s"$out/_delta/$b")))
-      .map(Streams.Footers.read(spark, _))
+      .flatMap(b => graft.sources.Tables.files(fs, new org.apache.hadoop.fs.Path(s"$out/_delta/$b")))
+      .map(graft.sources.Tables.footer(spark, _))
   }
 
   /** True when `view` merges against its session's resolved pending set
@@ -1085,7 +1068,7 @@ class StreamingSpec extends SparkSpec {
         t("2024-08-27 11:00:00", 271.0, "id-b"),
         t("2024-08-30 10:00:00", 300.0, "id-a")),
       "non-adjacent touched dates") {
-      val ranges = Streams.Footers.dateRanges(pendingFooters(out), "event_date")
+      val ranges = graft.sources.Tables.dateRanges(pendingFooters(out), "event_date")
       assert(ranges.exists(_.exists { case (lo, hi) =>
         !lo.isAfter(java.time.LocalDate.parse("2024-08-28")) &&
           !hi.isBefore(java.time.LocalDate.parse("2024-08-29")) }),
@@ -1098,7 +1081,7 @@ class StreamingSpec extends SparkSpec {
     finally spark.conf.unset("parquet.column.statistics.enabled")
     Streams.upsertBatch(Seq(t("2024-08-26 10:00:00", 260.0, "id-a")).toDF(), direct)
     batchId += 1
-    assert(Streams.Footers.dateRanges(pendingFooters(out), "event_date") === None,
+    assert(graft.sources.Tables.dateRanges(pendingFooters(out), "event_date") === None,
       "premise: the delta was written without statistics")
     assert(snap(Streams.upsertRead(spark, out)) === snap(spark.read.parquet(direct)),
       "stats-less delta (single-scan fallback)")
@@ -1106,7 +1089,7 @@ class StreamingSpec extends SparkSpec {
     // every pending timestamp null: no date range, only the null partition
     // is touched; null keys never replace, so the rows append
     landAndCompare(Seq(t(null, 1.5, "id-n"), t(null, 2.5, "id-m")), "all-null-ts delta") {
-      assert(Streams.Footers.dateRanges(pendingFooters(out), "event_date") === Some(Seq.empty),
+      assert(graft.sources.Tables.dateRanges(pendingFooters(out), "event_date") === Some(Seq.empty),
         "premise: an all-null event_date has statistics but no range")
     }
   }
