@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, expr, lit, struct, xxhash64}
 
 /** Dev utility: time (or explain) a subset of queries without the full
@@ -38,6 +38,39 @@ object QTime {
     s"[qtime] $name rows=$rows min=${Harness.fixed(passSecs.min)} s " +
       s"(passes: ${passSecs.map(Harness.fixed(_)).mkString(", ")})"
 
+  /** One key's QTime: the per-query AQE seed from the plan's own size
+    * estimates, set BEFORE any pass so the warm and timed passes run the
+    * same physical configuration (a failed analysis continues on the
+    * starting seed: ADVICE r15, unguarded, it aborted the whole remaining
+    * key list including --explain-only inspection runs), the explain and
+    * the warm pass, all on one build of `fn`; then `passes` timed passes,
+    * each on its own build. Returns the warm pass's rows and the timed
+    * passes' seconds, None with `explainOnly`.
+    */
+  private[graft] def timeKey(
+      spark: SparkSession, sfDir: String, seeder: AutoParts.Seeder, n: String,
+      fn: (SparkSession, String) => DataFrame,
+      explain: Boolean, explainOnly: Boolean, forceHash: Boolean, passes: Int)
+      : Option[(Long, Seq[Double])] = {
+    val df = fn(spark, sfDir)
+    val auto = seeder(n, df)
+    if (auto > 0) println(s"[qtime] $n auto_init_partitions=$auto")
+    // explain what the hash consumer actually executes (count() and the
+    // hash agg prune/keep different subtrees)
+    if (explain) (if (forceHash) hashConsumer(df) else df).explain("formatted")
+    if (explainOnly) None
+    else {
+      val r0 = evalRows(df, forceHash) // warm
+      val ts = (1 to passes).map { _ =>
+        System.gc()
+        val t0 = System.nanoTime()
+        evalRows(fn(spark, sfDir), forceHash)
+        (System.nanoTime() - t0) / 1e9
+      }
+      Some((r0, ts))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
@@ -62,29 +95,8 @@ object QTime {
     val forceHash = cfg.qtimeHash
     val seeder = new AutoParts.Seeder(spark, cpus, "qtime")
     names.foreach { n =>
-      val fn = SparkEntry.queries(n)
-      // per-query AQE seed from the plan's own size estimates, set BEFORE
-      // any pass so the warm and timed passes run the same physical
-      // configuration; a failed analysis continues on the starting seed
-      // (ADVICE r15: unguarded, it aborted the whole remaining key list
-      // including --explain-only inspection runs)
-      val auto = seeder(n, fn(spark, sfDir))
-      if (auto > 0) println(s"[qtime] $n auto_init_partitions=$auto")
-      if (explain && forceHash) {
-        // explain what the hash consumer actually executes (count() and
-        // the hash agg prune/keep different subtrees)
-        hashConsumer(fn(spark, sfDir)).explain("formatted")
-      } else if (explain) fn(spark, sfDir).explain("formatted")
-      if (!explainOnly) {
-        val r0 = evalRows(fn(spark, sfDir), forceHash) // warm
-        val ts = (1 to passes).map { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          evalRows(fn(spark, sfDir), forceHash)
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(line(n, r0, ts))
-      }
+      timeKey(spark, sfDir, seeder, n, SparkEntry.queries(n), explain, explainOnly, forceHash, passes)
+        .foreach { case (r0, ts) => println(line(n, r0, ts)) }
     }
     spark.stop()
   }

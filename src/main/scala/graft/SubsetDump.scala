@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Subset-series oracle dump (r17; VERDICT r16 item 6): certify registry
@@ -24,6 +25,24 @@ import org.apache.spark.sql.functions._
   * Run: runMain graft.SubsetDump <sfDir> <outDir> <key>[,<key>...] [mod]
   */
 object SubsetDump {
+  /** Dumps key `key`'s `user_id % mod == 0` subset to `out` and returns
+    * its full row count: one build of `fn`, seeded from the frame it
+    * counts and writes. Engine-default geometry, same as Verify (the gate
+    * certifies the plans users actually get); analysis failure degrades
+    * to the default seed instead of aborting the dump (ADVICE r17). */
+  private[graft] def dumpKey(
+      spark: SparkSession, sfDir: String, seeder: AutoParts.Seeder, key: String,
+      fn: (SparkSession, String) => DataFrame, out: String, mod: Int): Long = {
+    val df = fn(spark, sfDir)
+    seeder(key, df)
+    require(df.columns.contains("user_id"),
+      s"$key has no user_id series column — the subset form does not apply")
+    val total = df.count()
+    df.filter(pmod(col("user_id"), lit(mod)) === 0)
+      .write.mode("overwrite").parquet(out)
+    total
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -33,17 +52,7 @@ object SubsetDump {
     val spark = Harness.session(32)
     val seeder = new AutoParts.Seeder(spark, cpus, "subsetdump")
     keys.foreach { key =>
-      val q = Registry.byName(key)
-      // engine-default geometry, same as Verify (the gate certifies the
-      // plans users actually get); analysis failure degrades to the
-      // default seed instead of aborting the dump (ADVICE r17)
-      seeder(key, q.fn(spark, sfDir))
-      val df = q.fn(spark, sfDir)
-      require(df.columns.contains("user_id"),
-        s"$key has no user_id series column — the subset form does not apply")
-      val total = df.count()
-      df.filter(pmod(col("user_id"), lit(mod)) === 0)
-        .write.mode("overwrite").parquet(s"$outDir/$key")
+      val total = dumpKey(spark, sfDir, seeder, key, Registry.byName(key).fn, s"$outDir/$key", mod)
       println(s"""{"key":"$key","rows_total":$total,"mod":$mod}""")
     }
     spark.stop()

@@ -1,9 +1,20 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import Harness.jq
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Dumps key `name` to `out`: one build of `fn`, seeded from the frame
+    * it writes. */
+  private[graft] def dumpKey(
+      spark: SparkSession, sfDir: String, seeder: AutoParts.Seeder, name: String,
+      fn: (SparkSession, String) => DataFrame, out: String, coalesceOne: Boolean): Unit = {
+    val df = fn(spark, sfDir)
+    seeder(name, df)
+    (if (coalesceOne) df.coalesce(1) else df).write.mode("overwrite").parquet(out)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // Subset lever (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): a
@@ -58,12 +69,7 @@ object Verify {
     // actually get. Analysis failure degrades to the session default.
     val seeder = new AutoParts.Seeder(spark, cpus, "verify")
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try {
-        seeder(name, fn(spark, sfDir))
-        val df = fn(spark, sfDir)
-        (if (coalesceOne) df.coalesce(1) else df).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
+      try dumpKey(spark, sfDir, seeder, name, fn, s"$outDir/$name", coalesceOne)
       catch { case e: Throwable =>
         val first = Option(e.getMessage).getOrElse(e.getClass.getName)
           .linesIterator.take(3).mkString(" | ")

@@ -267,7 +267,7 @@ object AggOps {
         .agg(
           sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast(U.Dec))
             .cast(U.Dec).as("value"))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "q_tpch_q11_nation_value"))
       val Dec28 = org.apache.spark.sql.types.DecimalType(28, 6)
       val frac = lit(BigDecimal("0.05"))
         .cast(org.apache.spark.sql.types.DecimalType(3, 2))

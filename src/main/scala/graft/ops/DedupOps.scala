@@ -346,7 +346,7 @@ object DedupOps {
         if (probeOn) mh.unionByName(containmentCandidates(s, d)).distinct()
         else mh
       statsFromCandidates(cand, fullDigestSets(s, d))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "minhash_pair_stats"))
     }
   }
 
@@ -366,7 +366,7 @@ object DedupOps {
     */
   private[ops] def ngramPairStats(s: SparkSession, d: String): DataFrame =
     graft.MatCache.df(s, s"ngrampairs:$d") {
-      ngramPairStatsUncached(s, d).localCheckpoint()
+      U.ckpt(ngramPairStatsUncached(s, d), "ngram_pair_stats")
     }
 
   /** Candidate-volume gate for the exact inverted-index pair builder.
@@ -783,7 +783,7 @@ object DedupOps {
           md5(array_join(slice(col("w"), col("i"), lit(W)), " ")).as("h"))
         .repartition(col("h"))
         .distinct()
-        .transform(graft.U.ckpt(_, "q_dedup_substring_digest"))
+        .transform(U.ckpt(_, "q_dedup_substring_digest"))
       val hot = wins
         .groupBy(col("h"))
         .agg(count(lit(1)).as("df"))
@@ -831,7 +831,7 @@ object DedupOps {
       // pairs), but its producing pipeline is the most expensive dedup
       // plan — without the checkpoint each of the four consumers below
       // (and each side of the 3-way self-join) would recompute it
-      val e = pairGraphEdges(s, d).select(col("a"), col("b")).localCheckpoint()
+      val e = U.ckpt(pairGraphEdges(s, d).select(col("a"), col("b")), "q_graph_triangles_edges")
       val nodes = e
         .select(explode(array(col("a"), col("b"))).as("x"))
         .agg(countDistinct(col("x")).as("n_nodes"))
@@ -968,7 +968,7 @@ object DedupOps {
       // consumer (the connectedComponents input discipline)
       val edges0 = pairs.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "pagerank_edges_sym"))
       val deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       // one count job — the only driver-side scalar, same as every
       // PageRank needs its |V| (deg has exactly one row per node: the
@@ -983,11 +983,11 @@ object DedupOps {
       // here because checkpointed loop state is pinned before AQE sees it)
       val parts = math.max(1, math.min(32, n / 10000)).toInt
       val edges = edges0.join(deg, "src")
-        .repartition(parts, col("src")).localCheckpoint()
+        .repartition(parts, col("src")).transform(U.ckpt(_, "pagerank_edges"))
       val init = S / n
       val base = (15L * S) / (100L * n)
       var ranks = deg.select(col("src").as("rid"), lit(init).as("r"))
-        .repartition(parts).localCheckpoint()
+        .repartition(parts).transform(U.ckpt(_, "pagerank_ranks_seed"))
       for (i <- 1 to Iters) {
         // every node receives at least one contribution (symmetrized
         // edges: inbound degree == outbound degree >= 1), so the
@@ -1008,7 +1008,7 @@ object DedupOps {
         // (connectedComponents checkpoints every round because its frame
         // is corpus-sized; rank state is node-sized, so fewer barriers win)
         if (i % 4 == 0 || i == Iters)
-          ranks = ranks.repartition(parts, col("rid")).localCheckpoint()
+          ranks = U.ckpt(ranks.repartition(parts, col("rid")), "pagerank_ranks_iter")
       }
       ranks
         .select(col("rid").as("doc_id"), col("r").as("rank_micro"))

@@ -811,7 +811,7 @@ object JoinOps {
         .groupBy(col("l_suppkey"))
         .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast(U.Dec))
           .as("total_rev"))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "q_tpch_q15_revenue"))
       val top = rev.agg(max(col("total_rev")).as("max_rev"))
       rev
         .crossJoin(broadcast(top))

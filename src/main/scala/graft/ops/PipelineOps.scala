@@ -257,7 +257,7 @@ object PipelineOps {
           sum(col("n_chars")).as("sum_chars"),
           (count(lit(1)) - countDistinct(md5(col("text"))))
             .as("n_exact_dupes"))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "q_pipeline_dataset_card_groups"))
       val total = g.agg(sum(col("n_docs")).as("total_docs"))
       g.crossJoin(broadcast(total))
         .select(
@@ -464,7 +464,7 @@ object PipelineOps {
         .withColumn(
           "weight_micro",
           floor(sqrt(col("n_docs")) * 1000000 + 0.5).cast("long"))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "q_mix_temperature_weights"))
       w.crossJoin(broadcast(w.agg(sum(col("weight_micro")).as("tw"))))
         .select(
           col("source"),
@@ -509,15 +509,15 @@ object PipelineOps {
     // checkpoint the INPUT first: the union below references it twice, and
     // an expensive producing pipeline (e.g. the near-dup pair join) would
     // otherwise run once per reference
-    val p = pairs.toDF("a", "b").localCheckpoint()
+    val p = U.ckpt(pairs.toDF("a", "b"), "cc_pairs")
     val edges = p.union(p.select(col("b"), col("a")))
       .toDF("u", "v")
-      .localCheckpoint()
+      .transform(U.ckpt(_, "cc_edges"))
     var labels = edges
       .select(col("u").as("node"))
       .distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
+      .transform(U.ckpt(_, "cc_labels_seed"))
     def labelSum(): Long = {
       val r = labels.agg(sum(col("label"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -536,7 +536,7 @@ object PipelineOps {
         .select(
           col("node"),
           least(col("label"), coalesce(col("nlab"), col("label"))).as("label"))
-        .localCheckpoint()
+        .transform(U.ckpt(_, "cc_labels_iter"))
       unpersistCheckpoint(prev)
       val sumNow = labelSum()
       converged = sumNow == prevSum

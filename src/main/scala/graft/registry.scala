@@ -62,7 +62,9 @@ object U {
     * directory, the formatted plan of the segment FEEDING the checkpoint
     * is written there as `<label>.txt` before the lineage is cut (loops
     * overwrite; the per-iteration plans differ only in expr ids). Dormant
-    * (one config probe) in every normal run.
+    * (one config probe) in every normal run. Every checkpoint of the
+    * operator modules (`ops/<Name>Ops.scala`) goes through here, so the dump
+    * sees every cut (RegistrySpec scans for a bare one).
     */
   def ckpt(df: org.apache.spark.sql.DataFrame, label: String)
       : org.apache.spark.sql.DataFrame = {

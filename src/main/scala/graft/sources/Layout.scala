@@ -20,28 +20,26 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** The telemetry key, (series, ts): every store of `Streams` is
-    * written and read by it, and [[upsertPartition]] merges by it, so a
-    * landing and a read can never disagree on it. */
+  /** The key of the reference's one telemetry table, (series, ts): every
+    * layout of this module and every store of `Streams` is written and
+    * read by it, and [[upsertPartition]] merges by it, so a landing and a
+    * read can never disagree on it. */
   object TelemetryKey {
     val SeriesCol = "timeseries_id"
     val TsCol = "timestamp"
   }
+
+  import TelemetryKey.{SeriesCol, TsCol}
 
   /** Day-partitioned parquet, rows within each file sorted by
     * (series, time) so min/max row-group stats make series predicates
     * selective. The standard time-series layout: time prunes directories,
     * series prunes row groups.
     */
-  def writeTelemetry(
-      df: DataFrame,
-      outDir: String,
-      tsCol: String = "ts",
-      seriesCol: String = "user_id",
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn("event_date", to_date(col(tsCol)))
+  def writeTelemetry(df: DataFrame, outDir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
+    df.withColumn("event_date", to_date(col(TsCol)))
       .repartition(col("event_date"))
-      .sortWithinPartitions(col("event_date"), col(seriesCol), col(tsCol))
+      .sortWithinPartitions(col("event_date"), col(SeriesCol), col(TsCol))
       .write
       .mode(mode)
       .partitionBy("event_date")
@@ -51,27 +49,21 @@ object Layout {
     * shuffle-free series joins/aggregations; requires the session catalog
     * (bucketing metadata lives in the metastore, not the files).
     */
-  def writeTelemetryBucketed(
-      df: DataFrame,
-      table: String,
-      nBuckets: Int,
-      tsCol: String = "ts",
-      seriesCol: String = "user_id"): Unit =
-    df.withColumn("event_date", to_date(col(tsCol)))
+  def writeTelemetryBucketed(df: DataFrame, table: String, nBuckets: Int): Unit =
+    df.withColumn("event_date", to_date(col(TsCol)))
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy("event_date")
-      .bucketBy(nBuckets, seriesCol)
-      .sortBy(seriesCol, tsCol)
+      .bucketBy(nBuckets, SeriesCol)
+      .sortBy(SeriesCol, TsCol)
       .saveAsTable(table)
 
-  /** Bit-interleave of two 16-bit keys into a 32-bit Morton (Z-curve)
-    * value: bit k of `a` lands at position 2k, bit k of `b` at 2k+1. A
-    * pure Column expression tree (32 shift/mask/add terms) — codegen'd,
-    * no UDF.
-    */
-  private def interleave16(a: Column, b: Column): Column =
-    graft.ops.LayoutOps.zValue(a, b)
+  /** Files of a z-ordered layout. */
+  private val ZFiles = 16
+
+  /** The z layout's series coordinate: the series id as a long, null when
+    * it is not one ([[writeTelemetryZOrdered]] refuses such ids). */
+  private def seriesLong: Column = col(SeriesCol).try_cast("long")
 
   /** Z-order (Morton-curve) clustered parquet: rows are range-partitioned
     * and sorted by the bit-interleave of the min-max-normalized (series,
@@ -84,38 +76,32 @@ object Layout {
     * (~sqrt(n) of files per 1-D probe on a 2-D curve). The technique
     * behind Delta/Iceberg OPTIMIZE ZORDER, as a plain-parquet writer.
     *
-    * Normalization bounds come from one 1-row aggregate broadcast; the
-    * write is one range exchange on the z-value (the sort the layout
-    * exists to buy). With `keepZ` the Morton code is persisted as column
-    * `z` (and the quantization bounds as a `_zbounds.json` sidecar), which
-    * [[zBoxQuery]] requires: 2-D box reads then push 1-D z ranges to the
-    * scan instead of relying on per-file natural-column stats alone.
+    * The series coordinate is the series id cast to long: an id that does
+    * not cast (a UUID, say) fails the write, naming this precondition.
+    * Normalization bounds come from one 1-row aggregate, which also counts
+    * those ids; the write is one range exchange on the z-value (the sort
+    * the layout exists to buy) into [[ZFiles]] files. The Morton code is
+    * kept as column `z` and the quantization bounds as a `_zbounds.json`
+    * sidecar, which [[zBoxQuery]] reads: 2-D box reads then push 1-D z
+    * ranges to the scan instead of relying on per-file natural-column
+    * stats alone. The write always overwrites `outDir`: z codes are
+    * quantized against whole-dataset bounds, so an append would mix z
+    * domains; append into the day-partitioned layout and re-run this
+    * writer instead.
     */
-  def writeTelemetryZOrdered(
-      df: DataFrame,
-      outDir: String,
-      seriesCol: String = "user_id",
-      tsCol: String = "ts",
-      nFiles: Int = 16,
-      mode: SaveMode = SaveMode.Overwrite,
-      keepZ: Boolean = false): Unit = {
-    // Append would mix z codes computed under DIFFERENT quantization
-    // domains (and clobber the bounds sidecar), silently breaking
-    // zBoxQuery's pushdown for the older files. A z layout is a global
-    // recluster by construction — append into the day-partitioned layout
-    // and re-run this writer (or compact) instead.
-    require(mode != SaveMode.Append,
-      "z-ordered layout cannot be appended to: z codes are quantized " +
-        "against whole-dataset bounds; rewrite the layout instead")
-    val sLong = col(seriesCol).cast("long")
-    val tLong = unix_micros(col(tsCol))
+  def writeTelemetryZOrdered(df: DataFrame, outDir: String): Unit = {
+    val tLong = unix_micros(col(TsCol))
     // One bounded 1-row collect BEFORE the write job: the sidecar bounds
     // are then definitionally the bounds the persisted z codes used (a
     // second post-write aggregate could see files that arrived in
     // between), and the quantizers ride as literals — no broadcast join.
     val b = df.agg(
-      min(sLong).as("_s0"), max(sLong).as("_s1"),
-      min(tLong).as("_t0"), max(tLong).as("_t1")).head()
+      min(seriesLong).as("_s0"), max(seriesLong).as("_s1"),
+      min(tLong).as("_t0"), max(tLong).as("_t1"),
+      count_if(col(SeriesCol).isNotNull && seriesLong.isNull).as("_bad")).head()
+    require(b.getLong(4) == 0L,
+      s"z-ordered layout needs every non-null $SeriesCol to cast to long; " +
+        s"${b.getLong(4)} do not")
     val empty = b.isNullAt(0)
     val (s0, s1, t0, t1) =
       if (empty) (0L, 0L, 0L, 0L)
@@ -126,13 +112,10 @@ object Layout {
     // exactly at the endpoints, so the product stays within [0, 65535].
     def norm(x: Column, lo: Long, hi: Long): Column =
       floor((x - lit(lo)) / lit(math.max(hi - lo, 1L)) * 65535.0).cast("long")
-    val zd = df
-      .withColumn("_zval", interleave16(norm(sLong, s0, s1), norm(tLong, t0, t1)))
-      .repartitionByRange(nFiles, col("_zval"))
-      .sortWithinPartitions("_zval")
-    val cleaned =
-      if (keepZ) zd.withColumnRenamed("_zval", "z") else zd.drop("_zval")
-    cleaned.write.mode(mode).parquet(outDir)
+    df.withColumn("z", graft.ops.LayoutOps.zValue(norm(seriesLong, s0, s1), norm(tLong, t0, t1)))
+      .repartitionByRange(ZFiles, col("z"))
+      .sortWithinPartitions("z")
+      .write.mode(SaveMode.Overwrite).parquet(outDir)
     // Quantization bounds sidecar (underscore-prefixed → invisible to
     // parquet listing): [[zBoxQuery]] must quantize its probe box with the
     // write-time domain, not the current data's.
@@ -165,38 +148,32 @@ object Layout {
   }
 
   /** Serve a 2-D box predicate (series range × time range) from a
-    * z-ordered, z-kept layout as ONE-dimensional z ranges: quantize the
+    * z-ordered layout as ONE-dimensional z ranges: quantize the
     * probe box with the write-time bounds (same IEEE divide-then-multiply
     * as the writer, so the mapping is the writer's exactly), decompose it
-    * into ≤ `maxRanges` z intervals ([[ZCurve.ranges]]), and push the OR
+    * into ≤ 32 z intervals ([[ZCurve.ranges]]), and push the OR
     * of BETWEENs down to the parquet scan — row-group stats on the single
     * sorted z column skip everything outside the intervals. The exact box
     * predicate is re-applied on the survivors, so the cover's slop
     * (floor cells + gap coalescing) never leaks a row. The reference scans
     * every row for ANY predicate (`main.rs:126-137`); this reads
     * O(box ∩ curve) row groups no matter the table size, and the range
-    * PLANNING is O(maxRanges) driver work, data-size-independent.
+    * PLANNING is O(ranges) driver work, data-size-independent.
     */
   def zBoxQuery(
       spark: SparkSession,
       dir: String,
       seriesLo: Long, seriesHi: Long,
-      tsLoUs: Long, tsHiUs: Long,
-      seriesCol: String = "user_id",
-      tsCol: String = "ts",
-      maxRanges: Int = 32): DataFrame = {
+      tsLoUs: Long, tsHiUs: Long): DataFrame = {
     val txt = readSidecar(spark, s"$dir/$ZBoundsFile")
-    def field(k: String): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(s"$ZBoundsFile missing $k"))
+    def field(name: String): Long =
+      s""""$name":(-?\\d+)""".r.findFirstMatchIn(txt)
+        .getOrElse(throw new IllegalStateException(s"$ZBoundsFile missing $name"))
         .group(1).toLong
     val (s0, s1, t0, t1) = (field("s0"), field("s1"), field("t0"), field("t1"))
     val data = Tables.read(spark, dir)
-    if (!data.columns.contains("z"))
-      throw new IllegalStateException(
-        s"$dir has no z column: write it with writeTelemetryZOrdered(..., keepZ = true)")
-    val exact = col(seriesCol).cast("long").between(seriesLo, seriesHi) &&
-      unix_micros(col(tsCol)).between(tsLoUs, tsHiUs)
+    val exact = seriesLong.between(seriesLo, seriesHi) &&
+      unix_micros(col(TsCol)).between(tsLoUs, tsHiUs)
     // writer quantization: floor((v - lo) / max(hi - lo, 1) * 65535.0) —
     // monotone, so an inclusive value box maps to an inclusive quant box
     def quant(v: Long, lo: Long, hi: Long): Long =
@@ -208,8 +185,7 @@ object Layout {
       clamp(quant(math.max(seriesLo, s0), s0, s1)),
       clamp(quant(math.min(seriesHi, s1), s0, s1)),
       clamp(quant(math.max(tsLoUs, t0), t0, t1)),
-      clamp(quant(math.min(tsHiUs, t1), t0, t1)),
-      maxRanges = maxRanges)
+      clamp(quant(math.min(tsHiUs, t1), t0, t1)))
     val zPred = zr.map { case (lo, hi) => col("z").between(lo, hi) }
       .reduceOption(_ || _).getOrElse(lit(false))
     data.filter(zPred && exact).drop("z")
@@ -285,41 +261,67 @@ object Layout {
   }
 
   /** Bytes per file when a date partition is rewritten whole, by
-    * [[compactPartition]] (its default) and by [[upsertPartition]]. */
+    * [[compactPartition]] and by [[upsertPartition]]. */
   private val TargetFileBytes: Long = 128L * 1024 * 1024
 
-  /** Files for `bytes` of partition data at `target` bytes each, at least
-    * one. */
-  private def filesFor(bytes: BigInt, target: Long = TargetFileBytes): Int =
-    ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  /** Files for `bytes` of partition data at [[TargetFileBytes]] each, at
+    * least one. */
+  private def filesFor(bytes: BigInt): Int =
+    ((bytes + TargetFileBytes - 1) / TargetFileBytes).max(1).min(Int.MaxValue).toInt
+
+  /** The one rewrite of a date partition's contents, through
+    * [[swapPartition]]: the live files (their schema from one footer),
+    * with the rows of `updates` replacing the live rows of their
+    * [[TelemetryKey]] when given, coalesced with no shuffle to one file
+    * per [[TargetFileBytes]] of the live files plus the updates' plan-size
+    * estimate ([[filesFor]]), sorted by the key. Returns the number of
+    * live data files it read ([[Tables.files]]).
+    */
+  private def rewritePartition(
+      spark: SparkSession,
+      rootDir: String,
+      eventDate: String,
+      updates: Option[DataFrame]): Int =
+    swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
+      val liveFiles = if (fs.exists(path)) Some(Tables.files(fs, path)) else None
+      val live = liveFiles.map { files =>
+        val first = files.headOption.getOrElse(
+          throw new IllegalStateException(s"rewrite: no parquet file under $path"))
+        Tables.readWith(spark, path.toString, Tables.footer(spark, first))
+      }
+      val merged = (live, updates) match {
+        case (Some(l), Some(u)) =>
+          l.join(broadcast(u.select(col(SeriesCol), col(TsCol))), Seq(SeriesCol, TsCol), "left_anti")
+            .unionByName(u.select(l.columns.toIndexedSeq.map(col): _*))
+        case (Some(l), None) => l
+        case (None, Some(u)) => u
+        case (None, None) => throw new IllegalStateException(s"rewrite: no partition at $path")
+      }
+      val bytes = liveFiles.fold(0L)(_.map(_.getLen).sum) +
+        updates.fold(BigInt(0))(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+      merged
+        .coalesce(filesFor(bytes))
+        .sortWithinPartitions(col(SeriesCol), col(TsCol))
+        .write
+        .mode(SaveMode.Overwrite)
+        .parquet(tmp)
+      liveFiles.fold(0)(_.length)
+    }
 
   /** Compact one date partition in place: streaming ingest appends a file
     * per micro-batch per partition, and at 100 TB the accumulated small
     * files dominate scan setup cost (footer reads, task scheduling).
-    * Rewrites the partition dir to ~`targetFileBytes` files through
-    * [[swapPartition]], restoring the (series, time) sort so row-group
-    * pruning keeps working. Embarrassingly parallel across dates; each
-    * date is one independent rewrite, the same unit the reference rewrote
-    * on *every insert* (`main.rs:101`).
+    * [[rewritePartition]] with no updates: ~[[TargetFileBytes]] files,
+    * the (series, time) sort restored so row-group pruning keeps working.
+    * Embarrassingly parallel across dates; each date is one independent
+    * rewrite, the same unit the reference rewrote on *every insert*
+    * (`main.rs:101`).
     *
     * Returns (filesBefore, filesAfter), counting the data files
     * [[Tables.files]] lists.
     */
-  def compactPartition(
-      spark: SparkSession,
-      rootDir: String,
-      eventDate: String,
-      targetFileBytes: Long = TargetFileBytes,
-      seriesCol: String = "user_id",
-      tsCol: String = "ts"): (Int, Int) = {
-    val before = swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
-      val before = Tables.files(fs, path)
-      Tables.read(spark, path.toString)
-        .repartition(filesFor(before.map(_.getLen).sum, targetFileBytes))
-        .sortWithinPartitions(col(seriesCol), col(tsCol))
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      before.length
-    }
+  def compactPartition(spark: SparkSession, rootDir: String, eventDate: String): (Int, Int) = {
+    val before = rewritePartition(spark, rootDir, eventDate, None)
     val (path, _, _) = swapPaths(rootDir, eventDate)
     (before, Tables.files(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path).length)
   }
@@ -328,7 +330,7 @@ object Layout {
     * column) into that date's partition with upsert semantics: live rows
     * whose (series, ts) key ([[TelemetryKey]])
     * appears in the batch are replaced, all other live rows survive, new
-    * keys append. The rewrite goes through [[swapPartition]], so a
+    * keys append. The rewrite is [[rewritePartition]]'s, so a
     * complete copy of the data exists at every instant. IDEMPOTENT:
     * re-merging identical updates replaces rows with identical rows —
     * the property `Streams.upsertSink`
@@ -338,60 +340,31 @@ object Layout {
     * Scale: the batch keys are one micro-batch's worth — broadcast to the
     * anti-join, so the live partition scans once with no shuffle; each
     * affected date is an independent rewrite (same unit of work as
-    * compaction), embarrassingly parallel across dates. The rewrite is
-    * coalesced, with no shuffle, to one file per [[TargetFileBytes]] of
-    * the live files plus the updates' plan-size estimate ([[filesFor]]),
-    * as [[compactPartition]] sizes its files. Left to the plan, a rewrite
-    * writes one file per scan split plus one per slice of the updates (8
-    * for a 3 k-row date on 4 cores), and every later read opens them all.
+    * compaction), embarrassingly parallel across dates. Left to the plan,
+    * a rewrite would write one file per scan split plus one per slice of
+    * the updates (8 for a 3 k-row date on 4 cores), and every later read
+    * would open them all; [[rewritePartition]] coalesces it instead.
     */
   def upsertPartition(
       spark: SparkSession,
       rootDir: String,
       eventDate: String,
       updates: DataFrame): Unit =
-    swapPartition(spark, rootDir, eventDate) { (fs, path, tmp) =>
-      import TelemetryKey.{SeriesCol, TsCol}
-      val (merged, liveBytes) =
-        if (fs.exists(path)) {
-          // schema from one footer, not an inference job per merged date
-          val liveFiles = Tables.files(fs, path)
-          val first = liveFiles.headOption.getOrElse(
-            throw new IllegalStateException(s"upsert: no parquet file under $path"))
-          val live = Tables.readWith(spark, path.toString, Tables.footer(spark, first))
-          (live
-            .join(
-              broadcast(updates.select(col(SeriesCol), col(TsCol))),
-              Seq(SeriesCol, TsCol),
-              "left_anti")
-            .unionByName(updates.select(live.columns.toIndexedSeq.map(col): _*)),
-            liveFiles.map(_.getLen).sum)
-        } else (updates, 0L)
-      val files = filesFor(liveBytes + updates.queryExecution.optimizedPlan.stats.sizeInBytes)
-      merged
-        .coalesce(files)
-        .sortWithinPartitions(col(SeriesCol), col(TsCol))
-        .write
-        .mode(SaveMode.Overwrite)
-        .parquet(tmp)
-    }
+    rewritePartition(spark, rootDir, eventDate, Some(updates))
 
-  /** R2 over the partitioned layout: the date bounds prune partition
-    * directories (PartitionFilters), the series equality + exact time range
-    * prune row groups (PushedFilters). Installs [[ParamLiterals]] into
-    * `spark`, so a warm query with a new key or range compiles nothing. */
-  def rangeQuery(
-      spark: SparkSession,
-      dir: String,
-      seriesKey: Long,
-      startTs: String,
-      endTs: String): DataFrame = {
-    ParamLiterals.install(spark)
-    Tables.read(spark, dir)
-      .filter(
-        col("event_date").between(to_date(lit(startTs)), to_date(lit(endTs))) &&
-          col("user_id") === seriesKey &&
-          col("ts").between(
-            lit(startTs).cast("timestamp"), lit(endTs).cast("timestamp")))
+  /** R2, the reference's range query (`main.rs:119-139`), over a
+    * day-partitioned telemetry table (`Tables.read` of a layout,
+    * `Streams.upsertRead` of a store): one series over an inclusive time
+    * range. The date bounds prune partition directories
+    * (PartitionFilters), the series equality and exact time range prune
+    * row groups (PushedFilters). Installs [[ParamLiterals]] into the
+    * table's session, so a warm query with a new key or range compiles
+    * nothing. */
+  def rangeQuery(table: DataFrame, seriesId: String, from: String, to: String): DataFrame = {
+    ParamLiterals.install(table.sparkSession)
+    val (f, t) = (lit(from), lit(to))
+    table.filter(col("event_date").between(to_date(f), to_date(t)) &&
+      col(SeriesCol) === seriesId &&
+      col(TsCol).between(f.cast("timestamp"), t.cast("timestamp")))
   }
 }

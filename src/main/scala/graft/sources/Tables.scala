@@ -20,19 +20,39 @@ object Tables {
     * not) with the schema of its first data file's footer; fails naming
     * `path` when it is absent or holds no data file. Upstream testdata has
     * stored timestamps as int64 TIMESTAMP(NANOS) (through round 7) and as
-    * NTZ micros (from round 8), so nanos read as raw int64 and NTZ as
+    * NTZ micros (from round 8), so when the footer holds either encoding
+    * ([[foreignTimestamps]]) nanos read as raw int64 and NTZ as
     * session-UTC instants, and [[graft.U.events]] branches on the observed
     * dtype (the r8 failure: one regen broke 63 queries at analysis). The
-    * settings stay on the session: the scan reads them too.
+    * settings stay on the session: the scan reads them too. Spark writes
+    * a `TimestampType` column in neither encoding, so reading the tables
+    * the engine writes leaves the session as it was.
     */
   def read(s: SparkSession, path: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val p = new Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val first = Some(p).filter(fs.exists).flatMap(q => firstFile(fs, fs.getFileStatus(q)))
       .getOrElse(throw new IllegalStateException(s"no parquet data file at $path"))
-    readWith(s, path, footer(s, first))
+    val f = footer(s, first)
+    // before the conversion: the converter reads both settings
+    if (foreignTimestamps(f)) {
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    }
+    readWith(s, path, f)
+  }
+
+  /** Does `f` hold a timestamp column Spark does not write for a
+    * `TimestampType`: an INT64 `TIMESTAMP(NANOS)`, or a
+    * `TIMESTAMP(isAdjustedToUTC=false)`? */
+  private def foreignTimestamps(f: Footer): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    f.getParquetMetadata.getFileMetaData.getSchema.getColumns.asScala.exists { c =>
+      c.getPrimitiveType.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS || !t.isAdjustedToUTC
+        case _ => false
+      }
+    }
   }
 
   /** [[read]] of `path`, None when `path` does not exist: only "no table

@@ -42,6 +42,28 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("Verify, SubsetDump and QTime seed each key from the frame they run: one build, plus one per timed pass") {
+    val s = spark.newSession()
+    val seeder = new AutoParts.Seeder(s, 4, "test")
+    var builds = 0
+    val fn = (ss: org.apache.spark.sql.SparkSession, _: String) => {
+      builds += 1
+      ss.range(20).toDF("user_id")
+    }
+    def count[T](body: => T): (T, Int) = { builds = 0; val r = body; (r, builds) }
+    val out = Files.createTempDirectory("graft_harness_builds").toString
+    assert(count(Verify.dumpKey(s, sfDir, seeder, "q_b", fn, s"$out/verify", coalesceOne = true))._2 === 1)
+    assert(s.read.parquet(s"$out/verify").count() === 20)
+    assert(count(SubsetDump.dumpKey(s, sfDir, seeder, "q_b", fn, s"$out/subset", mod = 5)) === ((20L, 1)))
+    assert(s.read.parquet(s"$out/subset").count() === 4)
+    val (timed, n) = count(QTime.timeKey(s, sfDir, seeder, "q_b", fn,
+      explain = false, explainOnly = false, forceHash = true, passes = 2))
+    assert(timed.map(t => (t._1, t._2.size)) === Some((20L, 2)))
+    assert(n === 3, "seed and warm pass on one build, then one per timed pass")
+    assert(count(QTime.timeKey(s, sfDir, seeder, "q_b", fn,
+      explain = true, explainOnly = true, forceHash = false, passes = 2)) === ((None, 1)))
+  }
+
   test("only Harness reads a SPARK_GRAFT_ variable or builds a SparkSession") {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala

@@ -1,7 +1,6 @@
 package graft
 
-import graft.sources.Layout
-import org.apache.spark.sql.SaveMode
+import graft.sources.{Layout, Tables}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -10,14 +9,23 @@ import org.apache.spark.sql.functions._
   * day-partitioned telemetry and proving the range query PRUNES — partition
   * directories via PartitionFilters and row groups via PushedFilters — by
   * inspecting the executed FileSourceScan, not just trusting the API.
+  * The input is the events corpus on the reference's schema
+  * ([[StreamBench.telemetryOf]]): String `timeseries_id`, `timestamp`.
   */
 class LayoutSpec extends SparkSpec {
 
+  private def telemetry = StreamBench.telemetryOf(spark, sfDir)
+
   private lazy val outDir = {
     val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    Layout.writeTelemetry(U.events(spark, sfDir), dir)
+    Layout.writeTelemetry(telemetry, dir)
     dir
   }
+
+  /** Every row of `df` over the telemetry columns, sorted: a multiset. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("timeseries_id", "timestamp", "value", "sensor_name").collect()
+      .map(_.toString).sorted.toSeq
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
     df.collect() // force execution so AQE finalizes the plan
@@ -30,14 +38,14 @@ class LayoutSpec extends SparkSpec {
 
   test("telemetry lands day-partitioned with all rows intact") {
     val back = spark.read.parquet(outDir)
-    assert(back.count() === U.events(spark, sfDir).count())
+    assert(back.count() === telemetry.count())
     val days = back.select("event_date").distinct().count()
     assert(days > 1, "expected multiple event_date partitions")
   }
 
   test("range query prunes partition directories (PartitionFilters)") {
     val q = Layout.rangeQuery(
-      spark, outDir, 7, "2024-01-05 00:00:00", "2024-01-06 23:59:59")
+      Tables.read(spark, outDir), "7", "2024-01-05 00:00:00", "2024-01-06 23:59:59")
     val scan = scanOf(q)
     assert(scan.partitionFilters.nonEmpty, "no partition filters at the scan")
     // only the 2 matching date dirs may be read
@@ -50,33 +58,35 @@ class LayoutSpec extends SparkSpec {
 
   test("series + time predicates reach the scan as data filters") {
     val q = Layout.rangeQuery(
-      spark, outDir, 7, "2024-01-05 00:00:00", "2024-01-06 23:59:59")
+      Tables.read(spark, outDir), "7", "2024-01-05 00:00:00", "2024-01-06 23:59:59")
     val scan = scanOf(q)
     val pushed = scan.metadata.getOrElse("PushedFilters", "")
-    assert(pushed.contains("EqualTo(user_id,7)"), s"user_id not pushed: $pushed")
-    assert(pushed.contains("GreaterThanOrEqual(ts,") || pushed.contains("ts"),
-      s"ts range not pushed: $pushed")
+    assert(pushed.contains("EqualTo(timeseries_id,7)"), s"timeseries_id not pushed: $pushed")
+    assert(pushed.contains("GreaterThanOrEqual(timestamp,") || pushed.contains("timestamp"),
+      s"timestamp range not pushed: $pushed")
   }
 
   test("z-ordered layout: file stats prune BOTH dimensions; lexicographic sort prunes only its leading column") {
     import org.apache.spark.sql.functions._
     val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     val lexDir = java.nio.file.Files.createTempDirectory("graft_lex").toString
-    val events = U.events(spark, sfDir)
-    Layout.writeTelemetryZOrdered(events, zDir, nFiles = 16)
+    val events = telemetry
+    Layout.writeTelemetryZOrdered(events, zDir)
     // lexicographic strawman: same file count, (series, time) sort
-    events.repartitionByRange(16, col("user_id"), col("ts"))
-      .sortWithinPartitions("user_id", "ts")
+    events.repartitionByRange(16, col("timeseries_id"), col("timestamp"))
+      .sortWithinPartitions("timeseries_id", "timestamp")
       .write.mode("overwrite").parquet(lexDir)
 
-    // per-file min/max — exactly the stats a reader's file/row-group
-    // pruning consults
+    // per-file min/max of the two coordinates the z layout clusters by
+    // (the series id as a long, the time), the stats a reader's
+    // file/row-group pruning consults
     def fileStats(dir: String) = spark.read.parquet(dir)
       .groupBy(input_file_name().as("f"))
       .agg(
-        min("user_id").as("u0"), max("user_id").as("u1"),
-        min(unix_micros(col("ts"))).as("t0"),
-        max(unix_micros(col("ts"))).as("t1"))
+        min(col("timeseries_id").cast("long")).as("u0"),
+        max(col("timeseries_id").cast("long")).as("u1"),
+        min(unix_micros(col("timestamp"))).as("t0"),
+        max(unix_micros(col("timestamp"))).as("t1"))
       .collect()
     val z = fileStats(zDir)
     val lex = fileStats(lexDir)
@@ -86,7 +96,7 @@ class LayoutSpec extends SparkSpec {
     val uProbe = 7L
     val (tLo, tHi) = {
       val r = events.agg(
-        min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+        min(unix_micros(col("timestamp"))), max(unix_micros(col("timestamp")))).head()
       val (a, b) = (r.getLong(0), r.getLong(1))
       (a + (b - a) / 2, a + (b - a) / 2 + (b - a) / 10)
     }
@@ -111,14 +121,13 @@ class LayoutSpec extends SparkSpec {
   test("compaction merges small files, preserves rows, keeps pruning intact") {
     // fragment one partition the way per-micro-batch appends would
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val ev = U.events(spark, sfDir)
-      .withColumn("event_date", to_date(col("ts")))
+    val ev = telemetry
+      .withColumn("event_date", to_date(col("timestamp")))
     val oneDay = ev.filter(col("event_date") === "2024-01-05").drop("event_date")
     oneDay.repartition(7).write.mode("overwrite")
       .parquet(s"$dir/event_date=2024-01-05")
     val rowsBefore = spark.read.parquet(dir).count()
-    val (before, after) = Layout.compactPartition(
-      spark, dir, "2024-01-05", targetFileBytes = 1L << 30)
+    val (before, after) = Layout.compactPartition(spark, dir, "2024-01-05")
     assert(before === 7)
     assert(after === 1, s"expected 1 compacted file, got $after")
     val back = spark.read.parquet(dir)
@@ -131,20 +140,20 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
     // day 1 written with the v1 schema
-    Seq((1L, java.sql.Timestamp.valueOf("2024-01-05 10:00:00"), 1.0))
-      .toDF("user_id", "ts", "value")
+    Seq(("id-1", java.sql.Timestamp.valueOf("2024-01-05 10:00:00"), 1.0))
+      .toDF("timeseries_id", "timestamp", "value")
       .transform(df => { graft.sources.Layout.writeTelemetry(df, dir); df })
     // day 2 written with an added column (append, not overwrite)
-    Seq((2L, java.sql.Timestamp.valueOf("2024-01-06 10:00:00"), 2.0, "siteA"))
-      .toDF("user_id", "ts", "value", "site")
+    Seq(("id-2", java.sql.Timestamp.valueOf("2024-01-06 10:00:00"), 2.0, "siteA"))
+      .toDF("timeseries_id", "timestamp", "value", "site")
       .transform(df => {
         graft.sources.Layout
           .writeTelemetry(df, dir, mode = org.apache.spark.sql.SaveMode.Append)
         df
       })
     val merged = spark.read.option("mergeSchema", "true").parquet(dir)
-    assert(merged.columns.toSet === Set("user_id", "ts", "value", "site", "event_date"))
-    val rows = merged.orderBy("user_id").collect()
+    assert(merged.columns.toSet === Set("timeseries_id", "timestamp", "value", "site", "event_date"))
+    val rows = merged.orderBy("timeseries_id").collect()
     assert(rows.length === 2)
     assert(rows(0).getAs[String]("site") === null, "v1 rows read as null for the new column")
     assert(rows(1).getAs[String]("site") === "siteA")
@@ -155,8 +164,8 @@ class LayoutSpec extends SparkSpec {
 
   test("crash between the compaction renames: recoverPartition rolls back, rows intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_crash").toString
-    val ev = U.events(spark, sfDir)
-      .withColumn("event_date", to_date(col("ts")))
+    val ev = telemetry
+      .withColumn("event_date", to_date(col("timestamp")))
     val oneDay = ev.filter(col("event_date") === "2024-01-05").drop("event_date")
     oneDay.repartition(3).write.mode("overwrite")
       .parquet(s"$dir/event_date=2024-01-05")
@@ -184,8 +193,8 @@ class LayoutSpec extends SparkSpec {
 
   test("compactPartition self-heals a crashed previous swap, then compacts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_crash2").toString
-    val ev = U.events(spark, sfDir)
-      .withColumn("event_date", to_date(col("ts")))
+    val ev = telemetry
+      .withColumn("event_date", to_date(col("timestamp")))
     val oneDay = ev.filter(col("event_date") === "2024-01-05").drop("event_date")
     oneDay.repartition(5).write.mode("overwrite")
       .parquet(s"$dir/event_date=2024-01-05")
@@ -195,8 +204,7 @@ class LayoutSpec extends SparkSpec {
     val live = new org.apache.hadoop.fs.Path(s"$dir/event_date=2024-01-05")
     val old = new org.apache.hadoop.fs.Path(s"$dir/.compact_old_event_date=2024-01-05")
     assert(fs.rename(live, old)) // crashed mid-swap, live missing
-    val (before, after) = Layout.compactPartition(
-      spark, dir, "2024-01-05", targetFileBytes = 1L << 30)
+    val (before, after) = Layout.compactPartition(spark, dir, "2024-01-05")
     assert(before === 5, "retry must see the rolled-back input files")
     assert(after === 1)
     assert(spark.read.parquet(dir).count() === rowsBefore)
@@ -206,7 +214,7 @@ class LayoutSpec extends SparkSpec {
   test("bucketed tables join on the series key with zero shuffle exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val ev = U.events(spark, sfDir)
+    val ev = telemetry
     // a previous JVM's warehouse dirs survive under target/ while the
     // in-memory catalog starts empty -> CTAS location collision; clear both
     for (t <- Seq("tele_a", "tele_b")) {
@@ -224,8 +232,8 @@ class LayoutSpec extends SparkSpec {
     // disabled, zero exchanges is attributable only to bucket alignment.
     withPlanShapeConf(disableBroadcast = true) {
       val joined = spark.table("tele_a").as("a")
-        .join(spark.table("tele_b").as("b"), "user_id")
-        .groupBy(col("user_id"))
+        .join(spark.table("tele_b").as("b"), "timeseries_id")
+        .groupBy(col("timeseries_id"))
         .agg(count(lit(1)).as("n"))
       val plan = executedPlan(joined)
       assert(plan.collect { case j: SortMergeJoinExec => j }.nonEmpty,
@@ -234,44 +242,40 @@ class LayoutSpec extends SparkSpec {
       assert(joinShuffles.isEmpty,
         s"expected shuffle-free bucketed join, found ${joinShuffles.length} exchanges")
       // and the result is still correct
-      val direct = ev.as("a").join(ev.as("b"), "user_id")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        .orderBy("user_id").collect()
-      assert(joined.orderBy("user_id").collect().toSeq === direct.toSeq)
+      val direct = ev.as("a").join(ev.as("b"), "timeseries_id")
+        .groupBy(col("timeseries_id")).agg(count(lit(1)).as("n"))
+        .orderBy("timeseries_id").collect()
+      assert(joined.orderBy("timeseries_id").collect().toSeq === direct.toSeq)
     }
   }
 
   test("pruned range query returns exactly the brute-force rows") {
-    val got = Layout.rangeQuery(
-      spark, outDir, 7, "2024-01-05 00:00:00", "2024-01-06 23:59:59")
-      .select("event_id").collect().map(_.getLong(0)).sorted
-    val want = U.events(spark, sfDir)
-      .filter(col("user_id") === 7 &&
-        col("ts").between(
+    val got = rowsOf(Layout.rangeQuery(
+      Tables.read(spark, outDir), "7", "2024-01-05 00:00:00", "2024-01-06 23:59:59"))
+    val want = rowsOf(telemetry
+      .filter(col("timeseries_id") === "7" &&
+        col("timestamp").between(
           lit("2024-01-05 00:00:00").cast("timestamp"),
-          lit("2024-01-06 23:59:59").cast("timestamp")))
-      .select("event_id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq === want.toSeq)
+          lit("2024-01-06 23:59:59").cast("timestamp"))))
+    assert(got.nonEmpty && got === want)
   }
 
   test("a warm rangeQuery with a new key and range compiles nothing and returns the brute-force rows") {
-    val picks = U.events(spark, sfDir)
-      .orderBy("ts", "user_id", "event_id")
-      .select(col("user_id"), to_date(col("ts")).as("day"))
+    val picks = telemetry
+      .orderBy("timestamp", "timeseries_id")
+      .select(col("timeseries_id"), to_date(col("timestamp")).as("day"))
       .collect()
     // a key and a two-day window around each of four readings spread over the corpus
     val reads = (1 to 4).map { i =>
       val r = picks(i * picks.length / 5)
       val day = r.getDate(1).toLocalDate
-      (r.getLong(0), s"$day 00:00:00", s"${day.plusDays(1)} 23:59:59")
+      (r.getString(0), s"$day 00:00:00", s"${day.plusDays(1)} 23:59:59")
     }
-    def want(key: Long, from: String, to: String) = U.events(spark, sfDir)
-      .filter(col("user_id") === key &&
-        col("ts").between(lit(from).cast("timestamp"), lit(to).cast("timestamp")))
-      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-    def got(key: Long, from: String, to: String) =
-      Layout.rangeQuery(spark, outDir, key, from, to)
-        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    def want(key: String, from: String, to: String) = rowsOf(telemetry
+      .filter(col("timeseries_id") === key &&
+        col("timestamp").between(lit(from).cast("timestamp"), lit(to).cast("timestamp"))))
+    def got(key: String, from: String, to: String) =
+      rowsOf(Layout.rangeQuery(Tables.read(spark, outDir), key, from, to))
     val (k0, from0, to0) = reads.head
     assert(got(k0, from0, to0) === want(k0, from0, to0))
     reads.tail.foreach { case (key, from, to) =>
@@ -386,18 +390,17 @@ class LayoutSpec extends SparkSpec {
   test("zBoxQuery: z-range pushdown answers a 2-D box exactly and skips most files") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_zbox").toString
-    val events = U.events(spark, sfDir)
-    Layout.writeTelemetryZOrdered(events, dir, nFiles = 16, keepZ = true)
+    val events = telemetry
+    Layout.writeTelemetryZOrdered(events, dir)
     val (tLo, tHi) = {
-      val r = events.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+      val r = events.agg(min(unix_micros(col("timestamp"))), max(unix_micros(col("timestamp")))).head()
       val (a, b) = (r.getLong(0), r.getLong(1))
       (a + (b - a) * 2 / 5, a + (b - a) * 3 / 5)
     }
     val got = Layout.zBoxQuery(spark, dir, 5L, 9L, tLo, tHi)
     val want = events.filter(
-      col("user_id").between(5, 9) && unix_micros(col("ts")).between(tLo, tHi))
-    assert(got.select("event_id").collect().map(_.getLong(0)).sorted.toSeq ===
-      want.select("event_id").collect().map(_.getLong(0)).sorted.toSeq)
+      col("timeseries_id").cast("long").between(5, 9) && unix_micros(col("timestamp")).between(tLo, tHi))
+    assert(rowsOf(got) === rowsOf(want))
     assert(got.columns.toSet === events.columns.toSet, "z must not leak into results")
     // the OR-of-z-ranges reaches the parquet scan as pushed filters
     val scan = scanOf(Layout.zBoxQuery(spark, dir, 5L, 9L, tLo, tHi))
@@ -431,18 +434,16 @@ class LayoutSpec extends SparkSpec {
     val miss = Layout.zBoxQuery(spark, dir, 1000L, 2000L, tLo, tHi)
     assert(miss.count() === 0L)
     assert(miss.columns.toSet === got.columns.toSet)
-    // append is refused: z codes are quantized against whole-dataset
-    // bounds, so an append would mix incompatible z domains
-    intercept[IllegalArgumentException] {
-      Layout.writeTelemetryZOrdered(events, dir, mode = SaveMode.Append, keepZ = true)
+    // a series id that is not a long (a UUID) has no z coordinate: the
+    // write fails naming the precondition instead of writing a null z
+    val uuid = java.nio.file.Files.createTempDirectory("graft_zuuid").toString
+    val e = intercept[IllegalArgumentException] {
+      Layout.writeTelemetryZOrdered(
+        events.withColumn("timeseries_id",
+          when(col("timeseries_id") === "7", lit("6f1c2a4e-uuid")).otherwise(col("timeseries_id"))),
+        uuid)
     }
-    // a layout written without keepZ names the contract in its error
-    val noZ = java.nio.file.Files.createTempDirectory("graft_noz").toString
-    Layout.writeTelemetryZOrdered(events.limit(100), noZ)
-    val e = intercept[IllegalStateException] {
-      Layout.zBoxQuery(spark, noZ, 5L, 9L, tLo, tHi)
-    }
-    assert(e.getMessage.contains("keepZ"))
+    assert(e.getMessage.contains("cast to long"), e.getMessage)
   }
 
   test("q_layout_zorder: the z layout opens far fewer files than the date sort on the 2-D probe") {

@@ -37,14 +37,10 @@ class LifecycleSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
 
     // 2. re-lay out for scale: day partitions, series-sorted within files
-    Layout.writeTelemetry(
-      spark.read.parquet(stage).drop("event_date"),
-      store, tsCol = "timestamp", seriesCol = "timeseries_id")
+    Layout.writeTelemetry(spark.read.parquet(stage).drop("event_date"), store)
 
     // 3. compact day 1 (simulating accumulated micro-batch files)
-    val (_, after) = Layout.compactPartition(
-      spark, store, "2024-08-28",
-      seriesCol = "timeseries_id", tsCol = "timestamp")
+    val (_, after) = Layout.compactPartition(spark, store, "2024-08-28")
     assert(after === 1)
 
     // 4. periodic fault rule (R5) as a pure recompute over the store
@@ -52,12 +48,7 @@ class LifecycleSpec extends SparkSpec {
       .withColumn("fc1_flag", FaultRules.thresholdFlag(col("value"), 0.95))
 
     // 5. R2: series + inclusive range query, day-pruned
-    val r2 = flagged.filter(
-      col("timeseries_id") === "id-a" &&
-        col("event_date") === "2024-08-28" &&
-        col("timestamp").between(
-          java.sql.Timestamp.valueOf("2024-08-28 12:00:00"),
-          java.sql.Timestamp.valueOf("2024-08-28 12:05:00")))
+    val r2 = Layout.rangeQuery(flagged, "id-a", "2024-08-28 12:00:00", "2024-08-28 12:05:00")
     val rows = r2.orderBy("timestamp").collect()
     assert(rows.length === 2)
     assert(rows.map(_.getAs[Double]("value")).toSeq === Seq(0.96, 0.50))

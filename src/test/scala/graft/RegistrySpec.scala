@@ -198,13 +198,16 @@ class RegistrySpec extends SparkSpec {
   }
 
   /** The main sources, relative to the repository root, with their lines. */
-  private lazy val mainSources: Seq[(String, Seq[String])] = {
+  private lazy val mainSources = sourcesUnder("src/main/scala", atLeast = 41)
+
+  /** The Scala sources under `root`, relative to the repository root,
+    * with their lines; at least `atLeast` of them. */
+  private def sourcesUnder(root: String, atLeast: Int): Seq[(String, Seq[String])] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala
+    val files = Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 40, s"premise: the main sources are under $root")
+    assert(files.size >= atLeast, s"premise: the sources are under $root")
     files.map(p => p.toString -> Files.readAllLines(p).asScala.toSeq)
   }
 
@@ -257,6 +260,57 @@ class RegistrySpec extends SparkSpec {
     assert(violations.isEmpty, violations.mkString("\n"))
     assert(hits("ParquetFileReader", mainSources.filter(_._1 == tables)).nonEmpty,
       "premise: Tables reads footers")
+  }
+
+  test("every operator-module checkpoint goes through U.ckpt") {
+    val operators = mainSources.filter(_._1.matches("src/main/scala/graft/ops/[A-Za-z]+Ops\\.scala"))
+    assert(operators.size >= 13, "premise: the operator modules are scanned")
+    assert(hits("\\.localCheckpoint\\(", operators) === Nil,
+      "a bare localCheckpoint is invisible to SPARK_GRAFT_DUMP_PRECKPT: use U.ckpt(df, label)")
+  }
+
+  /** The `def`s of `src/main` that only tests call, each with why it stays
+    * in `src/main`. */
+  private val testOnly: Map[String, String] = {
+    val twin = "test oracle: the in-session plan the stored ANN index serving is pinned against"
+    val layout = "LayoutSpec proves the telemetry layout it writes or reads"
+    Map(
+      "ivfTopK" -> twin,
+      "ivfpqTopK" -> twin,
+      "lshTopKInSession" -> twin,
+      "theilsenExact" -> "test oracle: TsOpsSpec's exact all-pairs Theil-Sen against the windowed key",
+      "writeTelemetry" -> layout,
+      "writeTelemetryBucketed" -> layout,
+      "writeTelemetryZOrdered" -> layout,
+      "zBoxQuery" -> layout,
+      "compactPartition" -> layout,
+      "rangeQuery" -> layout,
+      "appendToAnnIndex" -> "AnnIndexSpec proves it; SCALING.md cites it as the incremental-ingest path",
+      "rateOfChangeFlag" -> "CoreOpsSpec proves the reference's second fault rule",
+      "coveredKernels" -> "RegistrySpec's StreamChecks coverage test reads it",
+      "deinterleave" -> "LayoutSpec inverts ZCurve.z with it")
+  }
+
+  test("the test-only surface of src/main is the allowlist, each name with its reason") {
+    val bench = sourcesUnder("layerbench/src", atLeast = 5)
+    // comment lines dropped: a name only a comment mentions has no caller
+    def uncommented(lines: Seq[String]) = lines.filterNot { l =>
+      val t = l.trim; t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
+    val mainCode = mainSources.flatMap(f => uncommented(f._2))
+    val definition = "\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+    val defs = mainCode.filterNot(_.contains("override"))
+      .flatMap(l => definition.findAllMatchIn(l).map(_.group(1)))
+      .toSet - "main" // the JVM calls an entry point
+    // every identifier of the code, less the name each `def` defines
+    val named = (mainCode ++ bench.flatMap(f => uncommented(f._2))).iterator
+      .flatMap(l => "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(definition.replaceAllIn(l, "")))
+      .toSet
+    val uncalled = defs -- named
+    assert(uncalled === testOnly.keySet,
+      s"with no caller in src/main or layerbench/src: ${(uncalled -- testOnly.keySet).toSeq.sorted}; " +
+        s"called now: ${(testOnly.keySet -- uncalled).toSeq.sorted}")
+    assert(testOnly.values.forall(_.nonEmpty))
   }
 
   /** Keys whose second DataFrame build in a session may start Spark jobs

@@ -132,6 +132,30 @@ class SchemaDriftSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("Tables.read sets the timestamp settings only for a footer with NANOS or NTZ timestamps") {
+    import spark.implicits._
+    val (nanosDir, microsDir, tsNanosDir) = fixtures()
+    val settings = Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled")
+    val store = new java.io.File("target/schema-drift-store").getAbsolutePath
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-05 10:00:00"))).toDF("id", "ts")
+      .write.mode("overwrite").partitionBy("id").parquet(store)
+    val s = spark.newSession()
+    // the settings this session holds, defaults aside
+    def set() = settings.flatMap(k => s.conf.getAll.get(k).map(k -> _))
+    assert(set() === Nil, "premise: a fresh session")
+    // Spark-written: a store, and the plain int64 and micros fixtures
+    assert(graft.sources.Tables.read(s, store).schema("ts").dataType === TimestampType)
+    assert(graft.sources.Tables.read(s, s"$nanosDir/events.parquet").schema("ts").dataType === LongType)
+    assert(graft.sources.Tables.read(s, s"$microsDir/events.parquet").schema("ts").dataType === TimestampType)
+    assert(set() === Nil, "a Spark-written table leaves the session as it was")
+    assert(graft.sources.Tables.read(s, s"$tsNanosDir/events.parquet").schema("ts").dataType === LongType)
+    assert(set() === Seq(settings(0) -> "true", settings(1) -> "false"))
+    // the testdata's NTZ micros set them too, and read as instants
+    val ntz = spark.newSession()
+    assert(graft.sources.Tables.read(ntz, s"$sfDir/events.parquet").schema("ts").dataType === TimestampType)
+    assert(settings.map(ntz.conf.getAll.get) === Seq(Some("true"), Some("false")))
+  }
+
   test("Tables.read names the path of a missing table and of a table with no data file") {
     import java.nio.file.{Files, Paths}
     val missing = new java.io.File("target/schema-drift-missing").getAbsolutePath

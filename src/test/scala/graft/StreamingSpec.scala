@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Layout
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -745,8 +746,7 @@ class StreamingSpec extends SparkSpec {
     // compactable via the same swap discipline
     val dirs = new java.io.File(out).list().filter(_.startsWith("event_date=")).sorted
     assert(dirs.toSeq === Seq("event_date=2024-08-28", "event_date=2024-08-29"))
-    graft.sources.Layout.compactPartition(
-      spark, out, "2024-08-28", seriesCol = "timeseries_id", tsCol = "timestamp")
+    Layout.compactPartition(spark, out, "2024-08-28")
     assert(snapshot() === afterUpdate, "compaction after upserts must preserve contents")
   }
 
@@ -1281,15 +1281,6 @@ class StreamingSpec extends SparkSpec {
     df.select("timeseries_id", "timestamp", "value").collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSet
 
-  /** The serving range query (`main.rs:119-139`): one series over an
-    * inclusive time range, the date bounds pruning partitions. */
-  private def rangeOf(view: org.apache.spark.sql.DataFrame, id: String, from: String, to: String) = {
-    val (f, t) = (lit(from), lit(to))
-    view.filter(col("event_date").between(to_date(f), to_date(t)) &&
-      col("timeseries_id") === id &&
-      col("timestamp").between(f.cast("timestamp"), t.cast("timestamp")))
-  }
-
   private def inRange(rows: Set[(String, Timestamp, Double)], id: String, from: String, to: String) =
     rows.filter { case (i, at, _) => i == id && !at.before(ts(from)) && !at.after(ts(to)) }
 
@@ -1308,7 +1299,7 @@ class StreamingSpec extends SparkSpec {
       ("id-b", "2024-08-28 00:00:00", "2024-08-29 23:59:59"))
     def serve(what: String, out: String, eager: Set[(String, Timestamp, Double)], most: Long): Unit = {
       def read(id: String, from: String, to: String) =
-        triples(rangeOf(Streams.upsertRead(spark, out), id, from, to))
+        triples(Layout.rangeQuery(Streams.upsertRead(spark, out), id, from, to))
       warm.foreach { case (id, from, to) =>
         assert(read(id, from, to) === inRange(eager, id, from, to), s"$what: warm $id [$from, $to]")
       }
@@ -1336,14 +1327,14 @@ class StreamingSpec extends SparkSpec {
       val (from, to) = ("2024-08-28 00:00:00", "2024-08-31 23:59:59")
       // id-a holds no winner; nor does id-b before 08-30
       Seq(("id-a", from, to), ("id-b", from, "2024-08-29 23:59:59")).foreach { case (id, f, t) =>
-        val past = rangeOf(view, id, f, t)
+        val past = Layout.rangeQuery(view, id, f, t)
         val plan = executedPlan(past)
         assert(plan.collect { case s: FileSourceScanExec => s }.size === 1, s"one scan:\n$plan")
         assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"no join:\n$plan")
         assert(plan.collect { case u: UnionExec => u }.isEmpty, s"no union:\n$plan")
         assert(triples(past) === inRange(eager, id, f, t))
       }
-      val on = rangeOf(view, "id-b", from, to)
+      val on = Layout.rangeQuery(view, "id-b", from, to)
       val plan = executedPlan(on)
       assert(plan.collect { case s: FileSourceScanExec => s }.size === 1, s"one scan:\n$plan")
       assert(plan.collect { case j: BaseJoinExec => j }.map(j => (j.getClass, j.joinType)) ===
@@ -1445,6 +1436,13 @@ class StreamingSpec extends SparkSpec {
     assert(filesPerDate(delta) === want)
     Seq(0.0, 1.0).foreach(v => Streams.upsertBatch(batch(v), direct))
     assert(filesPerDate(direct) === want)
+    // dates fragmented as per-micro-batch appends leave them: compaction
+    val frag = java.nio.file.Files.createTempDirectory("graft_foldfiles_compact").toString
+    batch(5.0).withColumn("event_date", to_date(col("timestamp")))
+      .repartition(4).write.mode("overwrite").partitionBy("event_date").parquet(frag)
+    assert(filesPerDate(frag).values.forall(_ > 1), "premise: fragmented dates")
+    Seq("2024-08-28", "2024-08-29").foreach(d => Layout.compactPartition(spark, frag, d))
+    assert(filesPerDate(frag) === want)
   }
 
   /** Name and length of every file under `dir`, recursively. */
@@ -1526,8 +1524,7 @@ class StreamingSpec extends SparkSpec {
     assert(strays(Seq(streams), "\\.write\\b|\\.rename\\(", streams, "landBatch") === Nil)
     // Layout renames only to swap a partition and to heal a crashed swap
     assert(strays(Seq(layout), "\\.rename\\(", layout, "swapPartition", "recoverPartition") === Nil)
-    assert(strays(Seq(layout), "swapPartition\\(", layout,
-      "swapPartition", "compactPartition", "upsertPartition") === Nil)
+    assert(strays(Seq(layout), "swapPartition\\(", layout, "swapPartition", "rewritePartition") === Nil)
     // one per-date fold and one distinct-date helper
     assert(strays(files.filter(_ != layout), "upsertPartition\\(", streams, "foldDates") === Nil)
     assert(strays(Seq(streams), "col\\(\"event_date\"\\)\\.cast\\(", streams, "datesOf") === Nil)
@@ -1540,7 +1537,7 @@ class StreamingSpec extends SparkSpec {
     assert(strays(Seq(streams), "\"checkpointLocation\"", streams,
       "batchSink", "ingestFiles") === Nil)
     // the key and the summary sizes are constants, never parameters
-    assert(strays(Seq(streams), "\\b(seriesCol|tsCol|k|minAgree)\\s*:\\s*[A-Z]", streams) === Nil)
+    assert(strays(Seq(streams, layout), "\\b(seriesCol|tsCol|k|minAgree)\\s*:\\s*[A-Z]", streams) === Nil)
   }
 
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
