@@ -164,8 +164,7 @@ object StreamBench {
       val src = fileStream(
         dir("landing_events"), streaming.Streams.telemetrySchema, 8)
       val q = streaming.Streams
-        .faultCounts(src, threshold = 0.9, windowLen = "5 minutes",
-          watermark = wm)
+        .faultCounts(src, threshold = 0.9, watermark = wm)
         .writeStream.format("noop").outputMode("append")
         .option("checkpointLocation", dir(s"fc_ckpt_$tag"))
         .trigger(Trigger.AvailableNow())
@@ -316,7 +315,7 @@ object StreamBench {
         dir("landing_events_ord"), streaming.Streams.telemetrySchema, 8)
         .as[streaming.Telemetry]
       val kernels: Seq[(String, () => DataFrame)] = Seq(
-        ("fault_runs", () => streaming.Streams.faultRuns(teleSrc(), 0.9, 3).toDF()),
+        ("fault_runs", () => streaming.Streams.faultRuns(teleSrc(), 0.9).toDF()),
         ("rates", () => streaming.Streams.rates(teleSrc()).toDF()),
         ("ewma", () => streaming.Streams.ewma(teleSrc()).toDF()),
         ("silent_series", () => streaming.Streams.silentSeries(teleSrc()).toDF()))

@@ -19,6 +19,46 @@ import org.apache.spark.sql.functions._
   */
 object TsOps {
 
+  /** The EWMA weight of `q_ts_ewma` and [[graft.streaming.Streams.ewma]]:
+    * 0.25, an exact power of two, so every fold step is a clean IEEE op. */
+  private val EwmaAlpha = 0.25
+
+  /** One EWMA fold step, e_i = alpha*v_i + (1-alpha)*e_{i-1}: the same
+    * IEEE expression tree in the batch kernel and the streaming one. */
+  private[graft] def ewmaStep(e: Double, v: Double): Double =
+    EwmaAlpha * v + (1 - EwmaAlpha) * e
+
+  /** The data-mix drift of `q_ts_drift` and
+    * [[graft.streaming.Streams.mvMixDrift]] over daily counts: `daily`
+    * holds (`key`, `day` as BIGINT epoch days, `n`). Per key, the rows of
+    * the older and newer half of the observed day range (split at the
+    * midpoint day), exact ppm shares, and the total-variation numerator
+    * over the shared denominator 2·t_old·t_new. All integer arithmetic,
+    * so bit-stable at any parallelism. The split day and the totals are
+    * 1-row broadcasts.
+    */
+  private[graft] def mixDrift(daily: DataFrame, key: String): DataFrame = {
+    // midpoint day splits the range; trunc-div == floor-div on the
+    // positive epoch days (documented divergence for signed inputs)
+    val b = daily.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
+    val t = daily.crossJoin(broadcast(b))
+      .groupBy(col(key))
+      .agg(
+        sum(when(col("day") < col("mid"), col("n")).otherwise(0L)).as("n_old"),
+        sum(when(col("day") >= col("mid"), col("n")).otherwise(0L)).as("n_new"))
+    val tot = t.agg(sum(col("n_old")).as("t_old"), sum(col("n_new")).as("t_new"))
+    t.crossJoin(broadcast(tot))
+      .select(
+        col(key),
+        col("n_old"),
+        col("n_new"),
+        when(col("t_old") > 0, expr("n_old * 1000000 div t_old")).as("ppm_old"),
+        when(col("t_new") > 0, expr("n_new * 1000000 div t_new")).as("ppm_new"),
+        abs(col("n_old") * col("t_new") - col("n_new") * col("t_old")).as("drift_num"),
+        (lit(2L) * col("t_old") * col("t_new")).as("drift_den"))
+      .orderBy(key)
+  }
+
   /** Secondary-sort per-series fold — the shared kernel of `q_ts_ewma` and
     * `q_ts_holt`, and the template for ANY sequential per-series
     * recurrence: repartition by the series key, sortWithinPartitions
@@ -915,10 +955,9 @@ object TsOps {
         |    / 1000000 AS ewma
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val alpha = 0.25
       foldSeries[Double, (Long, Long, Double)](s, d)(
         seed = v => v,
-        step = (e, v) => alpha * v + (1 - alpha) * e,
+        step = ewmaStep,
         finish = (uid, n, e) => (uid, n, math.floor(e * 1e6 + 0.5) / 1e6))
         .toDF("user_id", "n", "ewma")
         .orderBy("user_id")
@@ -1346,9 +1385,9 @@ object TsOps {
     // float division anywhere, so the result is bit-stable across engines
     // and partitionings. (At trillion-row scale the cross products outgrow
     // BIGINT; the move is the same DECIMAL(20,0)x(18,0) widening q_ts_xcorr
-    // uses.) Scale: one partial-agg exchange on the category key (bounded
-    // by category cardinality); the split day and the totals are 1-row
-    // broadcasts — the events themselves shuffle nowhere.
+    // uses.) Scale: the events fold into daily counts per category (one
+    // partial-agg exchange, bounded by categories × days), which
+    // [[mixDrift]] splits and totals — the events themselves shuffle nowhere.
     Q(
       "q_ts_drift",
       """WITH d AS (
@@ -1370,34 +1409,13 @@ object TsOps {
         |  abs(n_old * t_new - n_new * t_old) AS drift_num,
         |  2 * t_old * t_new AS drift_den
         |FROM t, tot ORDER BY event_type""".stripMargin) { (s, d) =>
-      val dd = U.events(s, d).select(
-        col("event_type"),
-        expr("CAST(datediff(to_date(ts), DATE '1970-01-01') AS BIGINT)")
-          .as("day"))
-      // midpoint day splits the range; trunc-div == floor-div on the
-      // positive epoch days (documented divergence for signed inputs)
-      val b = dd.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-      val t = dd.crossJoin(broadcast(b))
-        .groupBy(col("event_type"))
-        .agg(
-          count(when(col("day") < col("mid"), 1)).as("n_old"),
-          count(when(col("day") >= col("mid"), 1)).as("n_new"))
-      val tot = t.agg(
-        sum(col("n_old")).as("t_old"),
-        sum(col("n_new")).as("t_new"))
-      t.crossJoin(broadcast(tot))
-        .select(
-          col("event_type"),
-          col("n_old"),
-          col("n_new"),
-          when(col("t_old") > 0, expr("n_old * 1000000 div t_old"))
-            .as("ppm_old"),
-          when(col("t_new") > 0, expr("n_new * 1000000 div t_new"))
-            .as("ppm_new"),
-          abs(col("n_old") * col("t_new") - col("n_new") * col("t_old"))
-            .as("drift_num"),
-          (lit(2L) * col("t_old") * col("t_new")).as("drift_den"))
-        .orderBy("event_type")
+      mixDrift(
+        U.events(s, d)
+          .groupBy(
+            col("event_type"),
+            expr("CAST(datediff(to_date(ts), DATE '1970-01-01') AS BIGINT)").as("day"))
+          .agg(count(lit(1)).as("n")),
+        "event_type")
     },
 
     // Holt-Winters additive triple smoothing per series (level + trend +

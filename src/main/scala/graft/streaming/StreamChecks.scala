@@ -86,9 +86,8 @@ object StreamChecks {
     ("s_fault_counts", Seq("faultCounts"), { s =>
       import s.implicits._
       val streamed = stream(s, qn("sc_fc"), "complete", baseBatches)(
-        Streams.faultCounts(_, threshold = 0.95, windowLen = "5 minutes"))
-      val batch = Streams.faultCounts(
-        baseRows.toDF(), threshold = 0.95, windowLen = "5 minutes")
+        Streams.faultCounts(_, threshold = 0.95))
+      val batch = Streams.faultCounts(baseRows.toDF(), threshold = 0.95)
       val keys = Seq("timeseries_id", "window_start")
       expect(sortedRows(streamed, keys) == sortedRows(batch, keys),
         "stream != batch on identical rows")
@@ -141,8 +140,8 @@ object StreamChecks {
     ("s_session", Seq("sessionize"), { s =>
       import s.implicits._
       val streamed = stream(s, qn("sc_sess"), "complete", baseBatches)(
-        Streams.sessionize(_, gap = "30 minutes"))
-      val batch = Streams.sessionize(baseRows.toDF(), gap = "30 minutes")
+        Streams.sessionize(_))
+      val batch = Streams.sessionize(baseRows.toDF())
       val keys = Seq("timeseries_id", "session_start")
       expect(sortedRows(streamed, keys) == sortedRows(batch, keys),
         "stream != batch on identical rows")
@@ -169,7 +168,7 @@ object StreamChecks {
       val lMem = MemoryStream[Telemetry]
       val rMem = MemoryStream[Telemetry]
       val name = qn("sc_ij")
-      val q = Streams.intervalJoin(lMem.toDF(), rMem.toDF(), maxDelay = "10 minutes")
+      val q = Streams.intervalJoin(lMem.toDF(), rMem.toDF())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       val lRows = Seq(
         T("2024-08-28 12:00:00", 1.0, "id-a", "cmd"),
@@ -287,7 +286,7 @@ object StreamChecks {
       import s.implicits._
       val mem = MemoryStream[Telemetry]
       val name = qn("sc_fr")
-      val q = Streams.faultRuns(mem.toDS(), threshold = 0.95, minRun = 3)
+      val q = Streams.faultRuns(mem.toDS(), threshold = 0.95)
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       def t(ss: String, v: Double, id: String = "id-a") = T(ss, v, id, "Sa_FanSpeed")
       try {
@@ -311,7 +310,7 @@ object StreamChecks {
       import s.implicits._
       val mem = MemoryStream[Telemetry]
       val name = qn("sc_ss")
-      val q = Streams.silentSeries(mem.toDS(), horizonMinutes = 30, watermark = "10 minutes")
+      val q = Streams.silentSeries(mem.toDS())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try {
         mem.addData(Seq(T("2024-08-28 12:00:00", 1.0, "id-quiet"),

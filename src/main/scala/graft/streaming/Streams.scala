@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.faults.FaultRules
 import graft.functions.{CountMin, MinHashSig}
+import graft.ops.TsOps
 import graft.sources.Layout.TelemetryKey
 import graft.sources.Tables
 import TelemetryKey.{SeriesCol, TsCol}
@@ -9,8 +10,9 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Telemetry record for typed stateful ops (the reference's TimeseriesData,
   * `main.rs:23-30`, in Spark-encoder shape). */
@@ -21,8 +23,10 @@ case class Telemetry(
     fc1_flag: Option[Byte],
     timeseries_id: String)
 
-/** Keyed state carried across micro-batches by [[Streams.faultRuns]]. */
-case class RunState(runLength: Int)
+/** Keyed state carried across micro-batches by [[Streams.faultRuns]]: the
+  * current run of over-threshold readings and the newest event time seen
+  * (ms), which anchors the state's TTL. */
+case class RunState(runLength: Int, lastSeenMs: Long)
 
 /** Keyed state carried across micro-batches by [[Streams.rates]]: the fold
   * variables of the batch `q_ts_rate` kernel (milli-scaled last value,
@@ -68,7 +72,7 @@ case class EwmaSnapshot(
     ewma: Double,
     n_late_dropped: Long)
 
-/** Alert emitted when a series reaches `minRun` consecutive faults. */
+/** Alert emitted when a series reaches [[Streams.faultRuns]]' run length. */
 case class FaultRunAlert(
     timeseries_id: String,
     at: java.sql.Timestamp,
@@ -123,9 +127,58 @@ object Streams {
     StructField("fc1_flag", ByteType),
     StructField("timeseries_id", StringType)))
 
-  /** The production trigger of every sink here: one micro-batch per 5
-    * minutes, the reference's periodic-job tick (`main.rs:327-331`). */
-  private val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 minutes")
+  // ---- the event-time contract of the kernels ----------------------------
+  //
+  // The reference's fault path is one periodic job on a fixed 300 s tick
+  // (`main.rs:235`); these are its values in event time, one definition
+  // each. Only `faultCounts` takes its lateness as an argument (StreamBench
+  // prices its state at two horizons).
+
+  /** One tick of the reference's periodic job (`main.rs:235,327-331`): the
+    * production trigger, the tumbling window of [[faultCounts]] and
+    * [[qualityGate]], and the hop of [[hoppingCounts]]. */
+  private val Tick = "5 minutes"
+
+  /** The production trigger of every sink here: one micro-batch per tick. */
+  private val DefaultTrigger: Trigger = Trigger.ProcessingTime(Tick)
+
+  /** How far event time may trail the newest row seen: two ticks. A row
+    * older than the watermark is late and dropped by every stateful
+    * kernel; a row inside it still updates its window or state. */
+  private val Lateness = "10 minutes"
+
+  /** [[hoppingCounts]]' window: three ticks, so each row lands in 3. */
+  private val HopWindow = "15 minutes"
+
+  /** A keyed state entry lives this long past its anchor in event time. */
+  private val StateTtlMs = 60 * 60000L
+
+  /** Event-time silence after which [[silentSeries]] alerts. */
+  private val SilenceMs = 30 * 60000L
+
+  /** Event-time silence that closes a [[sessionize]] session. */
+  private val SessionGap = "30 minutes"
+
+  /** How long after a left row [[intervalJoin]] still pairs a right row. */
+  private val MaxDelay = "10 minutes"
+
+  /** Consecutive over-threshold readings that make a [[faultRuns]] alert. */
+  private val MinRun = 3
+
+  /** [[qualityGate]]'s valid value domain, `[ValueLo, ValueHi]`. */
+  private val ValueLo = 0.0
+  private val ValueHi = 1.0
+
+  /** `ds` with the one event-time watermark: `lateness` behind the newest
+    * `timestamp` seen. */
+  private def watermarked[T](ds: Dataset[T], lateness: String = Lateness): Dataset[T] =
+    ds.withWatermark("timestamp", lateness)
+
+  /** Evict `state` once the watermark passes `anchorMs + afterMs`. The
+    * timeout must be strictly ahead of the current watermark, so it is
+    * clamped for a group whose rows all arrived at or behind it. */
+  private def expireAfter(state: GroupState[_], anchorMs: Long, afterMs: Long): Unit =
+    state.setTimeoutTimestamp(math.max(anchorMs + afterMs, state.getCurrentWatermarkMs() + 1))
 
   /** The one `foreachBatch` sink: `f` gets each micro-batch and its id.
     * Delivery is at-least-once; each `f` here is exactly-once in effect
@@ -182,20 +235,19 @@ object Streams {
         FaultRules.thresholdFlag(col("value"), threshold),
         col("fc1_flag").cast("long")))
 
-  /** R5+R6 aggregated: per-series fault counts in event-time tumbling
-    * windows; watermark bounds state and admits late rows into their
-    * correct window (the reference instead re-scanned everything each tick).
+  /** R5+R6 aggregated: per-series fault counts in one-tick event-time
+    * tumbling windows; `watermark` bounds state and admits late rows into
+    * their correct window (the reference instead re-scanned everything
+    * each tick).
     */
   def faultCounts(
       telemetry: DataFrame,
       threshold: Double,
-      windowLen: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    telemetry
-      .withWatermark("timestamp", watermark)
+      watermark: String = Lateness): DataFrame =
+    watermarked(telemetry, watermark)
       .groupBy(
         col("timeseries_id"),
-        window(col("timestamp"), windowLen).as("win"))
+        window(col("timestamp"), Tick).as("win"))
       .agg(
         count(when(col("value") > threshold, 1)).as("n_faults"),
         count(lit(1)).as("n_rows"))
@@ -214,16 +266,11 @@ object Streams {
     * O(open windows × series), not O(stream). Late rows inside the
     * watermark land in ALL the windows they belong to.
     */
-  def hoppingCounts(
-      telemetry: DataFrame,
-      windowLen: String = "15 minutes",
-      hop: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    telemetry
-      .withWatermark("timestamp", watermark)
+  def hoppingCounts(telemetry: DataFrame): DataFrame =
+    watermarked(telemetry)
       .groupBy(
         col("timeseries_id"),
-        window(col("timestamp"), windowLen, hop).as("win"))
+        window(col("timestamp"), HopWindow, Tick).as("win"))
       .agg(
         count(lit(1)).as("n_rows"),
         // decimal-exact mean (U.davg discipline): a plain double avg is
@@ -238,7 +285,7 @@ object Streams {
   /** Continuous data-quality gate — the streaming maintenance path of
     * batch `q_quality_expectations`: per event-time window and rule,
     * (n_checked, n_violations). Three rules over the telemetry domain:
-    * value in [lo, hi] (NULL/NaN fail), series id present, flag in
+    * value in [0, 1] (NULL/NaN fail), series id present, flag in
     * {NULL, 0, 1}. The rule fan-out is a stateless map-side `stack` (rows
     * × 3, constant), so the only state is the windowed count aggregate —
     * bounded by (open windows × rules) like every watermarked agg here.
@@ -248,14 +295,8 @@ object Streams {
     * (main.rs:93-95); this is that idea as a declarative, windowed,
     * always-on gate.
     */
-  def qualityGate(
-      telemetry: DataFrame,
-      lo: Double = 0.0,
-      hi: Double = 1.0,
-      windowLen: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    telemetry
-      .withWatermark("timestamp", watermark)
+  def qualityGate(telemetry: DataFrame): DataFrame =
+    watermarked(telemetry)
       // Aggregate FIRST, unpivot the tiny aggregated frame after — the
       // same discipline as batch q_quality_expectations. A stack before
       // the groupBy would triple every shuffle row and hold (windows ×
@@ -268,12 +309,12 @@ object Streams {
       // under ANSI and fail the whole micro-batch — a quality gate must
       // report bad data, not die on it) and a fractional 1.7 stays 1.7
       // (a BIGINT cast would truncate it into the valid domain).
-      .groupBy(window(col("timestamp"), windowLen).as("win"))
+      .groupBy(window(col("timestamp"), Tick).as("win"))
       .agg(
         count(lit(1)).as("n_checked"),
         sum(expr(s"""CASE WHEN value IS NULL OR isnan(value)
-               OR value < CAST('$lo' AS DOUBLE)
-               OR value > CAST('$hi' AS DOUBLE) THEN 1 ELSE 0 END"""))
+               OR value < CAST('$ValueLo' AS DOUBLE)
+               OR value > CAST('$ValueHi' AS DOUBLE) THEN 1 ELSE 0 END"""))
           .as("v_range"),
         sum(expr(
           "CASE WHEN timeseries_id IS NULL OR timeseries_id = '' THEN 1 ELSE 0 END"))
@@ -295,74 +336,73 @@ object Streams {
         col("n_checked"),
         col("n_violations").cast("long").as("n_violations"))
 
-  /** Streaming fault-run detection with custom state
-    * (`flatMapGroupsWithState`): emits an alert whenever a series has seen
-    * `minRun` consecutive over-threshold readings. The reference can't
-    * express this at all — each 300 s tick re-derives flags from scratch
-    * with no memory between scans (`main.rs:384-406`); here the run length
-    * is keyed state carried across micro-batches.
+  /** The ordered keyed fold behind [[faultRuns]], [[rates]] and [[ewma]]:
+    * per series, each micro-batch's rows fold in a total order into the
+    * carried state `S` (`step` sees `None` for a series without state),
+    * and `out` turns the rows, each with the state after it, into output.
     *
-    * Rows within a micro-batch are sorted by event time before folding, so
-    * in-batch ordering is deterministic; `watermark` bounds late data.
+    * Order: event time, then (value, sensor), so equal-timestamp rows fold
+    * the same way on every rerun (the iterator's arrival order is not a
+    * contract). The sort buffers ONE series' slice of ONE micro-batch
+    * (trigger-interval-sized), not its history, so unlike a batch
+    * mapGroups it cannot OOM on a long series. Rows fold in that order
+    * within a batch only; a row that arrives in a later batch than a newer
+    * one, inside the watermark, is the kernel's `step` to handle.
     *
-    * State is BOUNDED: one entry per series seen within `stateTtl` of the
-    * event-time watermark. A series that goes silent for `stateTtl` has its
-    * state evicted via `EventTimeTimeout` (a processing-time timeout would
-    * make the no-data micro-batch loop spin continuously under the default
-    * 0 ms trigger — measured, not theorized — while an event-time timeout
-    * only fires when the watermark actually advances). Without this, state
-    * grows monotonically with every series EVER seen — at 100× series
-    * cardinality that is the one scale-killer in an otherwise stateless
-    * pipeline. Semantics on eviction: the run-length resets, which is the
-    * right call — `stateTtl` of silence is itself "not a consecutive fault".
+    * State is BOUNDED: an entry whose `anchorMs` the watermark has passed
+    * by [[StateTtlMs]] with no new row is evicted via `EventTimeTimeout`,
+    * and the series' next row starts fresh. A processing-time timeout
+    * would make the no-data micro-batch loop spin continuously under the
+    * default 0 ms trigger — measured, not theorized — while an event-time
+    * timeout only fires when the watermark actually advances. Without
+    * eviction, state grows with every series EVER seen — at 100× series
+    * cardinality the one scale-killer in an otherwise stateless pipeline.
     */
-  def faultRuns(
-      telemetry: Dataset[Telemetry],
-      threshold: Double,
-      minRun: Int,
-      watermark: String = "10 minutes",
-      stateTtlMinutes: Long = 60): Dataset[FaultRunAlert] = {
+  private def orderedFold[S <: Product : TypeTag, O <: Product : TypeTag](
+      telemetry: Dataset[Telemetry])(
+      step: (Option[S], Telemetry) => S,
+      out: (String, Seq[(Telemetry, S)]) => Iterator[O],
+      anchorMs: S => Long): Dataset[O] = {
     import telemetry.sparkSession.implicits._
-    val ttlMs = stateTtlMinutes * 60000L
-    telemetry
-      .withWatermark("timestamp", watermark)
+    watermarked(telemetry)
       .groupByKey(_.timeseries_id)
-      .flatMapGroupsWithState[RunState, FaultRunAlert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (id, rows, state) =>
           if (state.hasTimedOut) {
-            // the watermark passed this series' last event + TTL with no
-            // new data: drop the entry so state size tracks LIVE series
+            // the state outlived its TTL: drop it so state tracks LIVE series
             state.remove()
             Iterator.empty
           } else {
-            var run = state.getOption.map(_.runLength).getOrElse(0)
-            val alerts = scala.collection.mutable.ArrayBuffer.empty[FaultRunAlert]
-            // bounded buffer: `rows` is ONE series' slice of ONE
-            // micro-batch (trigger-interval-sized), not its full history —
-            // unlike a batch mapGroups, materializing it cannot OOM on a
-            // long series
-            // total order: equal-timestamp rows tiebreak on (value, sensor) so
-            // the order-sensitive fold is deterministic across reruns (the
-            // iterator's arrival order is not a contract)
-            val sorted = rows.toSeq
-              .sortBy(r => (r.timestamp.getTime, r.value, r.sensor_name))
-            sorted.foreach { r =>
-              run = if (r.value > threshold) run + 1 else 0
-              if (run == minRun)
-                alerts += FaultRunAlert(id, r.timestamp, run)
-            }
-            state.update(RunState(run))
-            // Evict once the watermark passes last-event + TTL. The timeout
-            // timestamp must be strictly ahead of the current watermark, so
-            // clamp for groups whose rows all arrived near the watermark.
-            val lastEventMs = sorted.map(_.timestamp.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            alerts.iterator
+            val sorted = rows.toSeq.sortBy(r => (r.timestamp.getTime, r.value, r.sensor_name))
+            val after = sorted.scanLeft(state.getOption)((st, r) => Some(step(st, r))).tail.flatten
+            state.update(after.last)
+            expireAfter(state, anchorMs(after.last), StateTtlMs)
+            out(id, sorted.zip(after))
           }
       }
   }
+
+  /** Streaming fault-run detection with custom state: emits an alert
+    * whenever a series has seen [[MinRun]] consecutive over-threshold
+    * readings. The reference can't express this at all — each 300 s tick
+    * re-derives flags from scratch with no memory between scans
+    * (`main.rs:384-406`); here the run length is keyed state carried
+    * across micro-batches by [[orderedFold]].
+    *
+    * The TTL anchors on the newest event time the series has shown, so a
+    * late row inside the watermark never pulls the eviction of a live run
+    * earlier. Semantics on eviction: the run length resets, which is the
+    * right call — an hour of silence is itself "not a consecutive fault".
+    */
+  def faultRuns(telemetry: Dataset[Telemetry], threshold: Double): Dataset[FaultRunAlert] =
+    orderedFold[RunState, FaultRunAlert](telemetry)(
+      step = (st, r) => RunState(
+        if (r.value > threshold) st.fold(0)(_.runLength) + 1 else 0,
+        math.max(st.fold(Long.MinValue)(_.lastSeenMs), r.timestamp.getTime)),
+      out = (id, steps) => steps.iterator.collect {
+        case (r, st) if st.runLength == MinRun => FaultRunAlert(id, r.timestamp, MinRun)
+      },
+      anchorMs = _.lastSeenMs)
 
   /** Streaming counter rate with reset detection — the streaming form of
     * batch `q_ts_rate` (Prometheus `rate()` semantics): per series, each
@@ -370,99 +410,66 @@ object Streams {
     * contributing the post-reset absolute value and bumping `n_resets`.
     * The reference's soul is a periodic job over an append stream; this is
     * that kernel event-time-native, with the fold variables as keyed state
-    * so a reset SPANNING a micro-batch boundary is detected against the
-    * carried `lastVm` — no rescan of history.
+    * ([[orderedFold]]) so a reset SPANNING a micro-batch boundary is
+    * detected against the carried `lastVm` — no rescan of history.
     *
     * Emits one cumulative [[RateSnapshot]] per series per micro-batch that
     * touches it (a monitoring read model — the latest snapshot per series
     * is the answer; StreamingSpec asserts the final snapshot equals the
     * batch kernel on the same rows, including a mid-stream reset).
     *
-    * Ordering: rows are folded in event-time order WITHIN a micro-batch
-    * (bounded sort, same argument as [[faultRuns]]); a row older than the
-    * carried `lastTsUs` — out-of-order ACROSS batches, inside the
-    * watermark — cannot be retro-folded into a running counter delta, so
-    * it is counted in `n_late_dropped` instead of silently corrupting the
-    * increase (rate over out-of-order counter samples is ill-defined;
-    * Prometheus drops them the same way). State is TTL-evicted via
-    * `EventTimeTimeout` exactly as in [[faultRuns]]; eviction restarts the
-    * series' rate window, which is the right semantic for a series that
-    * went silent.
+    * A row older than the carried `lastTsUs` — out-of-order ACROSS
+    * batches, inside the watermark — cannot be retro-folded into a running
+    * counter delta, so it is counted in `n_late_dropped` instead of
+    * silently corrupting the increase (rate over out-of-order counter
+    * samples is ill-defined; Prometheus drops them the same way). Eviction
+    * restarts the series' rate window, which is the right semantic for a
+    * series that went silent.
     */
-  def rates(
-      telemetry: Dataset[Telemetry],
-      watermark: String = "10 minutes",
-      stateTtlMinutes: Long = 60): Dataset[RateSnapshot] = {
-    import telemetry.sparkSession.implicits._
-    val ttlMs = stateTtlMinutes * 60000L
-    telemetry
-      .withWatermark("timestamp", watermark)
-      .groupByKey(_.timeseries_id)
-      .flatMapGroupsWithState[RateState, RateSnapshot](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (id, rows, state) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // bounded buffer: one series' slice of one micro-batch
-            // total order: equal-timestamp rows tiebreak on (value, sensor) so
-            // the order-sensitive fold is deterministic across reruns (the
-            // iterator's arrival order is not a contract)
-            val sorted = rows.toSeq
-              .sortBy(r => (r.timestamp.getTime, r.value, r.sensor_name))
-            var st = state.getOption.orNull
-            sorted.foreach { r =>
-              val tsUs = r.timestamp.getTime * 1000L
-              // milli-scaled integer counter value, exactly as the batch
-              // kernel: floor(v*1000 + 0.5)
-              val vm = math.floor(r.value * 1000 + 0.5).toLong
-              if (st == null)
-                st = RateState(vm, 0L, 0L, tsUs, tsUs, 0L)
-              else if (tsUs < st.lastTsUs)
-                st = st.copy(nLateDropped = st.nLateDropped + 1)
-              else {
-                val delta = vm - st.lastVm
-                st =
-                  if (delta < 0)
-                    RateState(vm, st.increaseM + vm, st.nResets + 1,
-                      st.firstTsUs, tsUs, st.nLateDropped)
-                  else
-                    RateState(vm, st.increaseM + delta, st.nResets,
-                      st.firstTsUs, tsUs, st.nLateDropped)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsUs / 1000L + ttlMs,
-                state.getCurrentWatermarkMs() + 1))
-            val durUs = st.lastTsUs - st.firstTsUs
-            // same IEEE expression as the batch kernel's rate division
-            Iterator.single(RateSnapshot(
-              id, st.increaseM, st.nResets, durUs,
-              (st.increaseM / 1000.0) / (durUs / 1000000.0),
-              st.nLateDropped))
-          }
-      }
-  }
+  def rates(telemetry: Dataset[Telemetry]): Dataset[RateSnapshot] =
+    orderedFold[RateState, RateSnapshot](telemetry)(
+      step = (prev, r) => {
+        val tsUs = r.timestamp.getTime * 1000L
+        // milli-scaled integer counter value, exactly as the batch
+        // kernel: floor(v*1000 + 0.5)
+        val vm = math.floor(r.value * 1000 + 0.5).toLong
+        prev match {
+          case None => RateState(vm, 0L, 0L, tsUs, tsUs, 0L)
+          case Some(st) if tsUs < st.lastTsUs => st.copy(nLateDropped = st.nLateDropped + 1)
+          case Some(st) =>
+            val delta = vm - st.lastVm
+            if (delta < 0)
+              RateState(vm, st.increaseM + vm, st.nResets + 1, st.firstTsUs, tsUs, st.nLateDropped)
+            else
+              RateState(vm, st.increaseM + delta, st.nResets, st.firstTsUs, tsUs, st.nLateDropped)
+        }
+      },
+      out = (id, steps) => {
+        val st = steps.last._2
+        val durUs = st.lastTsUs - st.firstTsUs
+        // same IEEE expression as the batch kernel's rate division
+        Iterator.single(RateSnapshot(
+          id, st.increaseM, st.nResets, durUs,
+          (st.increaseM / 1000.0) / (durUs / 1000000.0),
+          st.nLateDropped))
+      },
+      anchorMs = _.lastTsUs / 1000L)
 
-  /** Streaming EWMA — the streaming form of batch `q_ts_ewma` (alpha
-    * defaults to 0.25, an exact power of two): per series,
+  /** Streaming EWMA — the streaming form of batch `q_ts_ewma`, with its
+    * alpha and step ([[graft.ops.TsOps.ewmaStep]]): per series,
     * e_0 = v_0; e_i = alpha*v_i + (1-alpha)*e_{i-1}. The sequential fold
     * that forces the batch kernel into a secondary-sort mapPartitions is
     * exactly what keyed streaming state is FOR: the carried (e, n) IS the
-    * fold accumulator, so each micro-batch costs O(batch) regardless of
-    * history length — no rescan, which is the whole point over the
-    * reference's periodic full-file re-read.
+    * fold accumulator ([[orderedFold]]), so each micro-batch costs
+    * O(batch) regardless of history length — no rescan, which is the
+    * whole point over the reference's periodic full-file re-read.
     *
-    * Ordering discipline matches [[rates]]: rows fold in event-time order
-    * WITHIN a micro-batch (bounded sort over one series' slice of one
-    * batch); a row older than the carried `lastTsUs` cannot be retro-folded
-    * into an order-sensitive recurrence, so it is dropped and counted in
-    * `n_late_dropped` rather than silently corrupting the average. State is
-    * TTL-evicted via `EventTimeTimeout`; eviction restarts the series'
-    * average, the right semantic for a series that went silent. StreamingSpec
-    * asserts the final snapshot equals the batch kernel's driver-fold twin,
+    * Ordering discipline matches [[rates]]: a row older than the carried
+    * `lastTsUs` cannot be retro-folded into an order-sensitive recurrence,
+    * so it is dropped and counted in `n_late_dropped` rather than silently
+    * corrupting the average. Eviction restarts the series' average, the
+    * right semantic for a series that went silent. StreamingSpec asserts
+    * the final snapshot equals the batch kernel's driver-fold twin,
     * including a fold spanning a micro-batch boundary.
     *
     * Equivalence caveat: the across-batch drop means batch-kernel equality
@@ -472,51 +479,22 @@ object Streams {
     * micro-batch is dropped here but would be folded in order by the batch
     * kernel; `n_late_dropped` > 0 is the signal the two diverge.
     */
-  def ewma(
-      telemetry: Dataset[Telemetry],
-      alpha: Double = 0.25,
-      watermark: String = "10 minutes",
-      stateTtlMinutes: Long = 60): Dataset[EwmaSnapshot] = {
-    import telemetry.sparkSession.implicits._
-    val ttlMs = stateTtlMinutes * 60000L
-    telemetry
-      .withWatermark("timestamp", watermark)
-      .groupByKey(_.timeseries_id)
-      .flatMapGroupsWithState[EwmaState, EwmaSnapshot](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (id, rows, state) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // bounded buffer: one series' slice of one micro-batch
-            // total order: equal-timestamp rows tiebreak on (value, sensor) so
-            // the order-sensitive fold is deterministic across reruns (the
-            // iterator's arrival order is not a contract)
-            val sorted = rows.toSeq
-              .sortBy(r => (r.timestamp.getTime, r.value, r.sensor_name))
-            var st = state.getOption.orNull
-            sorted.foreach { r =>
-              val tsUs = r.timestamp.getTime * 1000L
-              if (st == null)
-                st = EwmaState(r.value, 1L, tsUs, 0L)
-              else if (tsUs < st.lastTsUs)
-                st = st.copy(nLateDropped = st.nLateDropped + 1)
-              else
-                // same IEEE expression tree as the batch kernel's fold step
-                st = EwmaState(
-                  alpha * r.value + (1 - alpha) * st.e,
-                  st.n + 1, tsUs, st.nLateDropped)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsUs / 1000L + ttlMs,
-                state.getCurrentWatermarkMs() + 1))
-            Iterator.single(EwmaSnapshot(
-              id, st.n, math.floor(st.e * 1e6 + 0.5) / 1e6, st.nLateDropped))
-          }
-      }
-  }
+  def ewma(telemetry: Dataset[Telemetry]): Dataset[EwmaSnapshot] =
+    orderedFold[EwmaState, EwmaSnapshot](telemetry)(
+      step = (prev, r) => {
+        val tsUs = r.timestamp.getTime * 1000L
+        prev match {
+          case None => EwmaState(r.value, 1L, tsUs, 0L)
+          case Some(st) if tsUs < st.lastTsUs => st.copy(nLateDropped = st.nLateDropped + 1)
+          case Some(st) => EwmaState(TsOps.ewmaStep(st.e, r.value), st.n + 1, tsUs, st.nLateDropped)
+        }
+      },
+      out = (id, steps) => {
+        val st = steps.last._2
+        Iterator.single(EwmaSnapshot(
+          id, st.n, math.floor(st.e * 1e6 + 0.5) / 1e6, st.nLateDropped))
+      },
+      anchorMs = _.lastTsUs / 1000L)
 
   /** Silent-series (sensor-death) detection — the fault family's missing
     * member: every other rule flags values that ARRIVE; the most common
@@ -526,9 +504,11 @@ object Streams {
     * scan (`rusty_timeseries/src/main.rs:327-331`) only visits rows that
     * exist. Here the absence itself is the event: keyed state carries the
     * series' last-seen event time, and `EventTimeTimeout` fires once the
-    * watermark passes last-seen + `horizon` with no new data — emitting a
-    * [[SilentAlert]] and REMOVING the state, so a returning series re-arms
-    * fresh (its next row recreates state; a second silence alerts again).
+    * watermark passes last-seen + [[SilenceMs]] with no new data — emitting
+    * a [[SilentAlert]] and REMOVING the state, so a returning series
+    * re-arms fresh (its next row recreates state; a second silence alerts
+    * again). It keeps its own body because its timeout emits, where
+    * [[orderedFold]]'s only evicts; it needs no row order, only the max.
     *
     * Event-time, not wall-clock, on purpose: a stalled upstream pipeline
     * delays the watermark and therefore the alert — silence is only
@@ -540,14 +520,9 @@ object Streams {
     * cost nothing once flagged) — at 100 TB-scale series counts this is
     * the smallest possible keyed-state footprint.
     */
-  def silentSeries(
-      telemetry: Dataset[Telemetry],
-      horizonMinutes: Long = 30,
-      watermark: String = "10 minutes"): Dataset[SilentAlert] = {
+  def silentSeries(telemetry: Dataset[Telemetry]): Dataset[SilentAlert] = {
     import telemetry.sparkSession.implicits._
-    val horizonMs = horizonMinutes * 60000L
-    telemetry
-      .withWatermark("timestamp", watermark)
+    watermarked(telemetry)
       .groupByKey(_.timeseries_id)
       .flatMapGroupsWithState[SilentState, SilentAlert](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -566,10 +541,7 @@ object Streams {
             val lastSeen =
               math.max(state.getOption.map(_.lastSeenMs).getOrElse(0L), batchMax)
             state.update(SilentState(lastSeen))
-            // the timeout must be strictly ahead of the current watermark;
-            // clamping covers a series whose rows all arrived at/behind it
-            state.setTimeoutTimestamp(
-              math.max(lastSeen + horizonMs, state.getCurrentWatermarkMs() + 1))
+            expireAfter(state, lastSeen, SilenceMs)
             Iterator.empty
           }
       }
@@ -1203,41 +1175,20 @@ object Streams {
     batchSink(telemetry, checkpointDir, trigger)(countMvBatch(_, mvDir, _))
 
   /** Data-mix drift off the [[countMvSink]] MV — the batch `q_ts_drift`
-    * semantics (older vs newer half of the observed day range, exact ppm
-    * shares, cross-multiplied total-variation numerators over the shared
-    * denominator 2·t_old·t_new) computed from stored daily counts, never
-    * raw events: at 100 TB the monitor reads (series × days × batches)
-    * count rows. All integer arithmetic — bit-stable at any parallelism
-    * and identical to the batch operator's by construction.
+    * arithmetic ([[graft.ops.TsOps.mixDrift]], one body for both) over
+    * stored daily counts, never raw events: at 100 TB the monitor reads
+    * (series × days × batches) count rows.
     */
-  def mvMixDrift(s: SparkSession, mvDir: String): DataFrame = {
-    val daily = Tables.read(s, mvDir)
-      .select(
-        col("timeseries_id"),
-        expr("CAST(datediff(day, DATE '1970-01-01') AS BIGINT)").as("day"),
-        col("n"))
-      .groupBy(col("timeseries_id"), col("day"))
-      .agg(sum(col("n")).as("n"))
-    val b = daily.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val t = daily
-      .crossJoin(broadcast(b))
-      .groupBy(col("timeseries_id"))
-      .agg(
-        sum(when(col("day") < col("mid"), col("n")).otherwise(0L)).as("n_old"),
-        sum(when(col("day") >= col("mid"), col("n")).otherwise(0L)).as("n_new"))
-    val tot = t.agg(sum(col("n_old")).as("t_old"), sum(col("n_new")).as("t_new"))
-    t.crossJoin(broadcast(tot))
-      .select(
-        col("timeseries_id"),
-        col("n_old"),
-        col("n_new"),
-        when(col("t_old") > 0, expr("n_old * 1000000 div t_old")).as("ppm_old"),
-        when(col("t_new") > 0, expr("n_new * 1000000 div t_new")).as("ppm_new"),
-        abs(col("n_old") * col("t_new") - col("n_new") * col("t_old"))
-          .as("drift_num"),
-        (lit(2L) * col("t_old") * col("t_new")).as("drift_den"))
-      .orderBy("timeseries_id")
-  }
+  def mvMixDrift(s: SparkSession, mvDir: String): DataFrame =
+    TsOps.mixDrift(
+      Tables.read(s, mvDir)
+        .select(
+          col("timeseries_id"),
+          expr("CAST(datediff(day, DATE '1970-01-01') AS BIGINT)").as("day"),
+          col("n"))
+        .groupBy(col("timeseries_id"), col("day"))
+        .agg(sum(col("n")).as("n")),
+      "timeseries_id")
 
   // ---- Streaming heavy-hitters MV (Misra-Gries partials) ----
 
@@ -1521,12 +1472,12 @@ object Streams {
         col("batch_id").cast("long").as("batch_id"))
 
   /** Stream-stream interval join: pair each left-stream event with the
-    * right-stream events for the same series arriving within `maxDelay`
+    * right-stream events for the same series arriving within [[MaxDelay]]
     * AFTER it (ad-tech click-attribution shape, telemetry-flavored: e.g.
     * command stream ⋈ response stream). BOTH sides carry a watermark and
     * the join condition bounds event time in both directions — that is
     * what lets Spark evict buffered rows once the watermark passes
-    * `l_ts + maxDelay`; an unbounded condition would buffer both streams
+    * `l_ts + MaxDelay`; an unbounded condition would buffer both streams
     * forever (the stream-stream analogue of the dropDuplicates state leak).
     *
     * `joinType = "left_outer"` additionally emits left rows that found no
@@ -1534,26 +1485,19 @@ object Streams {
     * can't be ruled out earlier), which is exactly the state-eviction
     * moment; StreamingSpec pins that timing.
     */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      maxDelay: String = "10 minutes",
-      watermark: String = "10 minutes",
-      joinType: String = "inner"): DataFrame = {
+  def intervalJoin(left: DataFrame, right: DataFrame, joinType: String = "inner"): DataFrame = {
     // other types would be silently wrong here: right_outer loses the
     // series id of null-padded rows (the key is projected from the left
     // side), and semi/anti don't produce the right-side columns we select
     require(
       joinType == "inner" || joinType == "left_outer",
       s"intervalJoin supports inner and left_outer, got $joinType")
-    val l = left
-      .withWatermark("timestamp", watermark)
+    val l = watermarked(left)
       .select(
         col("timeseries_id"),
         col("timestamp").as("l_ts"),
         col("value").as("l_value"))
-    val r = right
-      .withWatermark("timestamp", watermark)
+    val r = watermarked(right)
       .select(
         col("timeseries_id").as("r_id"),
         col("timestamp").as("r_ts"),
@@ -1562,7 +1506,7 @@ object Streams {
         r,
         col("timeseries_id") === col("r_id") &&
           col("r_ts") >= col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxDelay"),
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $MaxDelay"),
         joinType)
       .select(
         col("timeseries_id"),
@@ -1590,37 +1534,31 @@ object Streams {
     * watermark-bounded horizon is the semantically right window (an exact
     * global dedup is the batch operator's job downstream).
     */
-  def dedupExact(
-      telemetry: DataFrame,
-      watermark: String = "10 minutes"): DataFrame =
-    telemetry
-      .withColumn(
-        "content_md5",
-        md5(concat_ws(
-          "|",
-          // concat_ws silently SKIPS nulls, which would conflate a null
-          // field with an absent one (shifting every later token left) —
-          // null-mark EVERY nullable field, value and id included
-          coalesce(col("timeseries_id"), lit("-")),
-          coalesce(col("sensor_name"), lit("-")),
-          unix_micros(col("timestamp")),
-          coalesce(col("value").cast("string"), lit("-")),
-          coalesce(col("fc1_flag").cast("string"), lit("-")))))
-      .withWatermark("timestamp", watermark)
-      .dropDuplicatesWithinWatermark("content_md5")
+  def dedupExact(telemetry: DataFrame): DataFrame = {
+    val digested = telemetry.withColumn(
+      "content_md5",
+      md5(concat_ws(
+        "|",
+        // concat_ws silently SKIPS nulls, which would conflate a null
+        // field with an absent one (shifting every later token left) —
+        // null-mark EVERY nullable field, value and id included
+        coalesce(col("timeseries_id"), lit("-")),
+        coalesce(col("sensor_name"), lit("-")),
+        unix_micros(col("timestamp")),
+        coalesce(col("value").cast("string"), lit("-")),
+        coalesce(col("fc1_flag").cast("string"), lit("-")))))
+    watermarked(digested).dropDuplicatesWithinWatermark("content_md5")
+  }
 
-  /** Session windows per series: a session closes after `gap` of event-time
-    * silence. Streaming analog of batch `q_ts_session` (lag + cumulative sum).
+  /** Session windows per series: a session closes after [[SessionGap]] of
+    * event-time silence. Streaming analog of batch `q_ts_session` (lag +
+    * cumulative sum).
     */
-  def sessionize(
-      telemetry: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    telemetry
-      .withWatermark("timestamp", watermark)
+  def sessionize(telemetry: DataFrame): DataFrame =
+    watermarked(telemetry)
       .groupBy(
         col("timeseries_id"),
-        session_window(col("timestamp"), gap).as("sess"))
+        session_window(col("timestamp"), SessionGap).as("sess"))
       .agg(count(lit(1)).as("n_rows"), graft.U.dsum(col("value")).as("sum_value"))
       .select(
         col("timeseries_id"),

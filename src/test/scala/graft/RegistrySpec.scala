@@ -52,16 +52,21 @@ class RegistrySpec extends SparkSpec {
     val survey = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SURVEY.md")),
       java.nio.charset.StandardCharsets.UTF_8)
-    def members(o: AnyRef): Set[String] =
-      o.getClass.getMethods.map(_.getName).toSet
-    val have = Map(
-      "Streams" -> members(graft.streaming.Streams),
-      "Layout" -> members(graft.sources.Layout))
+    // a member is a method or a nested object (`Layout.TelemetryKey` is the
+    // module class `graft.sources.Layout$TelemetryKey$`, with no accessor)
+    def exists(o: AnyRef, m: String): Boolean =
+      o.getClass.getMethods.exists(_.getName == m) ||
+        scala.util.Try(Class.forName(s"${o.getClass.getName}$m$$")).isSuccess
+    val objects = Map[String, AnyRef](
+      "Streams" -> graft.streaming.Streams,
+      "Layout" -> graft.sources.Layout)
     val mentioned = "(Streams|Layout)\\.([A-Za-z_][A-Za-z0-9_]*)".r
       .findAllMatchIn(survey)
       .map(m => (m.group(1), m.group(2)))
       .toSet
-    val missing = mentioned.filterNot { case (o, m) => have(o).contains(m) }
+    assert(exists(graft.sources.Layout, "TelemetryKey") && !exists(graft.sources.Layout, "TelemetryKy"),
+      "premise: a nested object resolves and a misspelled one does not")
+    val missing = mentioned.filterNot { case (o, m) => exists(objects(o), m) }
     assert(missing.isEmpty,
       s"SURVEY.md names nonexistent members: ${missing.map { case (o, m) => s"$o.$m" }}")
   }

@@ -56,9 +56,8 @@ class StreamingSpec extends SparkSpec {
 
   test("faultCounts stream == batch on same rows, late row lands in its window") {
     val streamed = runComplete("fc_stream")(df =>
-      Streams.faultCounts(df, threshold = 0.95, windowLen = "5 minutes"))
-    val batch = Streams.faultCounts(
-      rows.toDF(), threshold = 0.95, windowLen = "5 minutes")
+      Streams.faultCounts(df, threshold = 0.95))
+    val batch = Streams.faultCounts(rows.toDF(), threshold = 0.95)
     assert(
       streamed.orderBy("timeseries_id", "window_start").collect().toSeq ===
         batch.orderBy("timeseries_id", "window_start").collect().toSeq)
@@ -138,8 +137,8 @@ class StreamingSpec extends SparkSpec {
 
   test("sessionize stream == batch on same rows") {
     val streamed = runComplete("sess_stream")(df =>
-      Streams.sessionize(df, gap = "30 minutes"))
-    val batch = Streams.sessionize(rows.toDF(), gap = "30 minutes")
+      Streams.sessionize(df))
+    val batch = Streams.sessionize(rows.toDF())
     assert(
       streamed.orderBy("timeseries_id", "session_start").collect().toSeq ===
         batch.orderBy("timeseries_id", "session_start").collect().toSeq)
@@ -150,8 +149,7 @@ class StreamingSpec extends SparkSpec {
   test("append mode: watermark finalizes windows and DROPS data later than the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Tele]
-    val q = Streams.faultCounts(
-      mem.toDF(), threshold = 0.95, windowLen = "5 minutes", watermark = "10 minutes")
+    val q = Streams.faultCounts(mem.toDF(), threshold = 0.95, watermark = "10 minutes")
       .writeStream.format("memory").queryName("wm_drop")
       .outputMode("append").start()
     def t(s: String, v: Double) = Tele("Sa_FanSpeed", ts(s), v, None, "id-a")
@@ -215,7 +213,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val lMem = MemoryStream[Tele]
     val rMem = MemoryStream[Tele]
-    val q = Streams.intervalJoin(lMem.toDF(), rMem.toDF(), maxDelay = "10 minutes")
+    val q = Streams.intervalJoin(lMem.toDF(), rMem.toDF())
       .writeStream.format("memory").queryName("ij_stream")
       .outputMode("append").start()
     val lRows = Seq(
@@ -250,8 +248,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val lMem = MemoryStream[Tele]
     val rMem = MemoryStream[Tele]
-    val q = Streams.intervalJoin(
-        lMem.toDF(), rMem.toDF(), maxDelay = "10 minutes", joinType = "left_outer")
+    val q = Streams.intervalJoin(lMem.toDF(), rMem.toDF(), joinType = "left_outer")
       .writeStream.format("memory").queryName("loj_stream")
       .outputMode("append").start()
     val matched = Tele("cmd", ts("2024-08-28 12:00:00"), 1.0, None, "id-a")
@@ -404,7 +401,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{FaultRunAlert, Telemetry}
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Telemetry]
-    val alerts = Streams.faultRuns(mem.toDS(), threshold = 0.95, minRun = 3)
+    val alerts = Streams.faultRuns(mem.toDS(), threshold = 0.95)
     // default trigger + processAllAvailable: one continuous query, so keyed
     // state genuinely persists between the two micro-batches below
     val q = alerts.writeStream.format("memory").queryName("fault_runs")
@@ -437,11 +434,9 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.Telemetry
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Telemetry]
-    // TTL 30 min: id-old's state must be gone once the watermark passes
-    // last-event(12:01) + 30 min = 12:31
-    val alerts = Streams.faultRuns(
-      mem.toDS(), threshold = 0.95, minRun = 3,
-      watermark = "10 minutes", stateTtlMinutes = 30)
+    // TTL 60 min: id-old's state must be gone once the watermark passes
+    // last-event(12:01) + 60 min = 13:01
+    val alerts = Streams.faultRuns(mem.toDS(), threshold = 0.95)
     val q = alerts.writeStream.format("memory").queryName("fault_runs_ttl")
       .outputMode("append").start()
     def t(s: String, v: Double, id: String) = Telemetry("S", ts(s), v, None, id)
@@ -450,19 +445,49 @@ class StreamingSpec extends SparkSpec {
       t("2024-08-28 12:00:00", 0.97, "id-old"),
       t("2024-08-28 12:01:00", 0.98, "id-old")))
     q.processAllAvailable()
-    // b2: only id-live traffic; watermark advances to 12:50 > 12:31
-    mem.addData(Seq(t("2024-08-28 13:00:00", 0.10, "id-live")))
+    // b2: only id-live traffic; watermark advances to 13:20 > 13:01
+    mem.addData(Seq(t("2024-08-28 13:30:00", 0.10, "id-live")))
     q.processAllAvailable()
     // b3: another id-live batch lets the id-old timeout actually fire
-    mem.addData(Seq(t("2024-08-28 13:01:00", 0.10, "id-live")))
+    mem.addData(Seq(t("2024-08-28 13:31:00", 0.10, "id-live")))
     q.processAllAvailable()
     // b4: id-old returns with ONE fault. If the run=2 state had survived the
     // silence this would be run=3 -> alert; eviction means it restarts at 1.
-    mem.addData(Seq(t("2024-08-28 13:30:00", 0.99, "id-old")))
+    mem.addData(Seq(t("2024-08-28 14:00:00", 0.99, "id-old")))
     q.processAllAvailable()
     q.stop()
     assert(spark.table("fault_runs_ttl").count() === 0,
       "state for the silent series must be dropped, not resumed")
+  }
+
+  test("faultRuns: an older row in a later batch does not pull a live run's eviction earlier") {
+    import graft.streaming.Telemetry
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Telemetry]
+    val q = Streams.faultRuns(mem.toDS(), threshold = 0.95)
+      .writeStream.format("memory").queryName("fault_runs_anchor")
+      .outputMode("append").start()
+    def t(s: String, v: Double, id: String) = Telemetry("S", ts(s), v, None, id)
+    // b1: id-a's newest fault at 12:20; the watermark moves to 12:10
+    mem.addData(Seq(t("2024-08-28 12:20:00", 0.97, "id-a")))
+    q.processAllAvailable()
+    // b2: only an OLDER id-a fault, still inside the watermark: run = 2
+    mem.addData(Seq(t("2024-08-28 12:15:00", 0.98, "id-a")))
+    q.processAllAvailable()
+    // b3/b4: id-live moves the watermark to 13:17, then 13:18: past the
+    // older row + 60 min TTL (13:15), short of the newest row + TTL (13:20)
+    mem.addData(Seq(t("2024-08-28 13:27:00", 0.10, "id-live")))
+    q.processAllAvailable()
+    mem.addData(Seq(t("2024-08-28 13:28:00", 0.10, "id-live")))
+    q.processAllAvailable()
+    // b5: id-a's third fault continues the live run
+    mem.addData(Seq(t("2024-08-28 13:29:00", 0.99, "id-a")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("fault_runs_anchor").collect()
+      .map(r => (r.getAs[String]("timeseries_id"), r.getAs[Int]("run_length")))
+    assert(out.toSeq === Seq(("id-a", 3)),
+      s"the run was evicted before the watermark passed its newest row + TTL: ${out.toSeq}")
   }
 
   test("silentSeries: exactly one alert for the series that goes quiet; live series never alerts") {
@@ -470,7 +495,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Telemetry]
     val q = Streams
-      .silentSeries(mem.toDS(), horizonMinutes = 30, watermark = "10 minutes")
+      .silentSeries(mem.toDS())
       .writeStream.format("memory").queryName("silent_stream")
       .outputMode("append").start()
     def t(s: String, id: String) = Telemetry("S", ts(s), 1.0, None, id)
@@ -1538,6 +1563,15 @@ class StreamingSpec extends SparkSpec {
       "batchSink", "ingestFiles") === Nil)
     // the key and the summary sizes are constants, never parameters
     assert(strays(Seq(streams, layout), "\\b(seriesCol|tsCol|k|minAgree)\\s*:\\s*[A-Z]", streams) === Nil)
+    // so are the kernels' event-time values; only faultCounts takes a lateness
+    assert(strays(Seq(streams), "\\b(stateTtlMinutes|windowLen|hop|gap|maxDelay|horizonMinutes" +
+      "|alpha|minRun|lo|hi)\\s*:\\s*[A-Z]", streams) === Nil)
+    assert(strays(Seq(streams), "\\bwatermark\\s*:\\s*[A-Z]", streams, "faultCounts") === Nil)
+    // one watermark call, and keyed-state rows are sorted only in the fold
+    // (the other sorts order dates and batch ids)
+    assert(strays(Seq(streams), "\\.withWatermark\\(", streams, "watermarked") === Nil)
+    assert(strays(Seq(streams), "\\.(sortBy|sortWith|sorted)\\b", streams,
+      "orderedFold", "foldDates", "deltaDirs") === Nil)
   }
 
   test("sketchMvSink: stream-maintained KLL MV equals the direct batch sketch; replay is a no-op; day range prunes") {
@@ -1630,20 +1664,21 @@ class StreamingSpec extends SparkSpec {
     val cmMv = dir("graft_e2e_cmmv"); val cCkpt = dir("graft_e2e_cckpt")
 
     def t(s: String, v: Double, id: String) = Tele("S", ts(s), v, None, id)
-    // b1: id-a builds a 2-fault run on day 1; id-b has day-1 and day-2 rows
+    // b1: id-a builds a 2-fault run late on day 1; id-b has day-1 and
+    // day-2 rows, the newest just past midnight
     val b1 = Seq(
-      t("2024-08-28 12:00:00", 0.97, "id-a"),
-      t("2024-08-28 12:01:00", 0.98, "id-a"),
-      t("2024-08-28 11:00:00", 0.10, "id-a"),
+      t("2024-08-28 23:55:00", 0.97, "id-a"),
+      t("2024-08-28 23:56:00", 0.98, "id-a"),
+      t("2024-08-28 22:55:00", 0.10, "id-a"),
       t("2024-08-28 09:00:00", 0.50, "id-b"),
-      t("2024-08-29 10:00:00", 0.20, "id-b"))
+      t("2024-08-29 00:00:00", 0.20, "id-b"))
     // b2: the third consecutive fault for id-a (state must carry across the
     // micro-batch AND the file-landing boundary), a late CORRECTION for
     // (id-b, day-1 09:00), and a fresh day-2 append
     val b2 = Seq(
-      t("2024-08-28 12:02:00", 0.99, "id-a"),
+      t("2024-08-28 23:57:00", 0.99, "id-a"),
       t("2024-08-28 09:00:00", 0.90, "id-b"),
-      t("2024-08-29 10:01:00", 0.30, "id-b"))
+      t("2024-08-29 00:01:00", 0.30, "id-b"))
     def writeJson(name: String, rows: Seq[Tele]): Unit =
       java.nio.file.Files.write(
         java.nio.file.Paths.get(in, name),
@@ -1671,13 +1706,13 @@ class StreamingSpec extends SparkSpec {
     val cmQ = Streams
       .cmMvSink(flagged, cmMv, cCkpt, Trigger.ProcessingTime("0 seconds"))
       .start()
-    // 7-day watermark: the scenario spans two calendar days, so day-2 rows
-    // in b1 must not make day-1's b2 fault arrive "late" and be dropped
+    // the scenario spans two calendar days: b2's day-1 fault (23:57) stays
+    // inside the 10 min lateness of b1's newest row (day 2, 00:00)
     val alertsQ = Streams
       .faultRuns(
         landedStream.select("sensor_name", "timestamp", "value", "fc1_flag", "timeseries_id")
           .as[Telemetry],
-        threshold = 0.95, minRun = 3, watermark = "7 days")
+        threshold = 0.95)
       .writeStream.format("memory").queryName("e2e_alerts").outputMode("append")
       .start()
     def drainAll(): Unit = {
@@ -1718,13 +1753,13 @@ class StreamingSpec extends SparkSpec {
       .toSet
     val afterB2 = snapshot()
     assert(afterB2 === Set(
-      ("id-a", ts("2024-08-28 12:00:00"), 0.97, 1L),
-      ("id-a", ts("2024-08-28 12:01:00"), 0.98, 1L),
-      ("id-a", ts("2024-08-28 11:00:00"), 0.10, -1L),
-      ("id-a", ts("2024-08-28 12:02:00"), 0.99, 1L),
+      ("id-a", ts("2024-08-28 23:55:00"), 0.97, 1L),
+      ("id-a", ts("2024-08-28 23:56:00"), 0.98, 1L),
+      ("id-a", ts("2024-08-28 22:55:00"), 0.10, -1L),
+      ("id-a", ts("2024-08-28 23:57:00"), 0.99, 1L),
       ("id-b", ts("2024-08-28 09:00:00"), 0.90, -1L), // correction won
-      ("id-b", ts("2024-08-29 10:00:00"), 0.20, -1L),
-      ("id-b", ts("2024-08-29 10:01:00"), 0.30, -1L)))
+      ("id-b", ts("2024-08-29 00:00:00"), 0.20, -1L),
+      ("id-b", ts("2024-08-29 00:01:00"), 0.30, -1L)))
     // MV drift: day 28 is the old half (id-a 4, id-b 2), day 29 the new
     // (id-b 2) — exact integer shares over t_old=6, t_new=2
     def driftMap() = Streams.mvMixDrift(spark, mv).collect()
@@ -1778,14 +1813,13 @@ class StreamingSpec extends SparkSpec {
     // stage 3: the sensor-death detector joins the loop (the one streaming
     // kernel the e2e composition had not exercised). The ingest restarts on
     // its checkpoint (exactly-once resume), silentSeries reads the SAME
-    // landed parquet: id-a stops reporting after b2 (last row 12:02), id-b
+    // landed parquet: id-a stops reporting after b2 (last row 23:57), id-b
     // keeps reporting on day 3 — the watermark advancing past id-a's
-    // last-seen + 60 min horizon must fire EXACTLY one alert, for id-a.
+    // last-seen + 30 min horizon must fire EXACTLY one alert, for id-a.
     val silentQ = Streams.silentSeries(
       landedStream
         .select("sensor_name", "timestamp", "value", "fc1_flag", "timeseries_id")
-        .as[Telemetry],
-      horizonMinutes = 60, watermark = "0 seconds")
+        .as[Telemetry])
       .writeStream.format("memory").queryName("e2e_silent").outputMode("append")
       .start()
     silentQ.processAllAvailable() // initial load: b1+b2, watermark arms
@@ -1802,7 +1836,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getAs[String]("timeseries_id"),
         r.getAs[java.sql.Timestamp]("last_seen"), r.getAs[Long]("silent_for_ms")))
     assert(silent.map(x => (x._1, x._2)).toSeq ===
-      Seq(("id-a", ts("2024-08-28 12:02:00"))),
+      Seq(("id-a", ts("2024-08-28 23:57:00"))),
       s"exactly one sensor-death alert for id-a expected, got ${silent.toSeq}")
     assert(silent.head._3 >= 60L * 60000L,
       "watermark-measured silence must be >= the horizon")
